@@ -71,19 +71,21 @@ object Bench {
     * sweep's memo-hit wall is a lookup, not the query, and `wall_min` built
     * on it hollowed the metric — gaming by the brief's definition). A
     * sample counts only when its commit count equals the query's MAX commit
-    * count across sweeps, so stateful gates are timed by the sweep that
-    * actually paid for their commits. Falls back to the first sample's wall
-    * when every sample errored. */
+    * count across its CLEAN sweeps, so stateful gates are timed by the
+    * sweep that actually paid for their commits (an errored sweep's commits
+    * must not outrank every healthy sample). Falls back to the first
+    * sample's wall when every sample errored. */
   private[graft] def wallMin(sweepWalls: Seq[(scala.collection.Map[String, Double],
                                               scala.collection.Map[String, String],
                                               scala.collection.Map[String, Long])])
       : Map[String, Double] = {
     val names = sweepWalls.headOption.map(_._1.keys.toSeq).getOrElse(Seq.empty)
     names.map { n =>
-      val maxCommits = sweepWalls.map(_._3.getOrElse(n, 0L)).max
-      val clean = sweepWalls.collect {
-        case (walls, errs, commits) if walls.contains(n) && !errs.contains(n) &&
-            commits.getOrElse(n, 0L) == maxCommits => walls(n)
+      val ok = sweepWalls.filter { case (walls, errs, _) =>
+        walls.contains(n) && !errs.contains(n) }
+      val maxCommits = ok.map(_._3.getOrElse(n, 0L)).maxOption.getOrElse(0L)
+      val clean = ok.collect {
+        case (walls, _, commits) if commits.getOrElse(n, 0L) == maxCommits => walls(n)
       }
       n -> (if (clean.nonEmpty) clean.min
             else sweepWalls.collectFirst {

@@ -1,13 +1,19 @@
 package graft.delta
 
 import java.util.UUID
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types._
 
 /** Checkpoint parquet read/write.
@@ -253,13 +259,6 @@ object Checkpoints {
     Row.fromSeq(if (withDomains) cells else cells.dropRight(1))
   }
 
-  /** Snapshot → checkpoint action list, reference order
-    * (`rust/src/checkpoints.rs:104-150`): protocol, metaData, txns, removes,
-    * adds. Writes one file, or — above `maxActionsPerPart` — a multi-part
-    * checkpoint (`%020d.checkpoint.%010d.%010d.parquet`, the naming
-    * `find_latest_check_point_for_version` matches,
-    * `rust/src/delta.rs:412-436`), so checkpoints of 10⁶-file tables never
-    * funnel through one writer task. Returns (actions written, parts). */
   /** Tombstones still inside the table's deleted-file retention window —
     * the only ones a checkpoint carries (r11 review). Without this filter,
     * every removed path rides every future checkpoint FOREVER (rewritten
@@ -278,6 +277,14 @@ object Checkpoints {
       t.deletionTimestamp <= 0L || t.deletionTimestamp >= cutoff)
   }
 
+  /** Snapshot → checkpoint action list, reference order
+    * (`rust/src/checkpoints.rs:104-150`): protocol, metaData, txns, domain
+    * metadata, removes, adds. Writes one file, or — above
+    * `maxActionsPerPart` — a multi-part checkpoint
+    * (`%020d.checkpoint.%010d.%010d.parquet`, the naming
+    * `find_latest_check_point_for_version` matches,
+    * `rust/src/delta.rs:412-436`), so checkpoints of 10⁶-file tables never
+    * funnel through one writer task. Returns (actions written, parts). */
   def write(log: DeltaLog, snap: Snapshot,
             maxActionsPerPart: Int = 500000): (Long, Option[Int]) = {
     val md = snap.metadata.getOrElse(
@@ -426,22 +433,47 @@ object Checkpoints {
     })
   }
 
-  /** Read checkpoint parquet file(s) into actions — `restore_checkpoint`
-    * (`rust/src/delta.rs:524-546`). Row count is O(#files in the table), the
-    * same driver-side bound as the snapshot itself. (Above the distributed
-    * threshold, [[DeltaLog.update]] replaces this with executor-side replay
-    * + [[readNonAdd]].) */
   /** Counts driver-side full-checkpoint reads — lets specs assert the
     * distributed restore path never materializes a big checkpoint on the
     * driver (EdgeCaseSpec). */
   private[delta] val driverReads = new java.util.concurrent.atomic.AtomicLong
 
+  /** Read checkpoint parquet file(s) into actions — `restore_checkpoint`
+    * (`rust/src/delta.rs:524-546`): a driver-local read with no Spark job.
+    * Row count is O(#files in the table), the same driver-side bound as the
+    * snapshot itself. (Above the distributed threshold, [[DeltaLog.update]]
+    * replaces this with executor-side replay + [[readNonAdd]].) */
   def read(spark: SparkSession, paths: Seq[Path]): Seq[Action] = {
     driverReads.incrementAndGet()
-    val buf = mutable.Buffer[Action]()
-    spark.read.parquet(paths.map(_.toString): _*).collect()
-      .foreach(r => rowToAction(r).foreach(buf += _))
-    buf.toSeq
+    GraftWriter.inDriverPool(paths)(readFile(spark, _)).flatten
+  }
+
+  /** One checkpoint file, decoded under its OWN footer schema: a multi-part
+    * checkpoint's parts may carry different column sets (a part with
+    * `domainMetadata` next to one without), and a single merged read
+    * would null the columns its first part lacks. Spark's parquet reader
+    * (vectorized, rows out) keeps the legacy list/map encodings, INT96 and
+    * datetime rebasing Spark's; [[rowToAction]] stays the only decoder. */
+  private def readFile(spark: SparkSession, path: Path): Seq[Action] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val status = path.getFileSystem(conf).getFileStatus(path)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(status, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val schema = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(footer.getFileMetaData.getSchema)
+    val reader = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, schema, new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    val rows = reader(PartitionedFile(InternalRow.empty, SparkPath.fromPath(path),
+      0L, status.getLen, Array.empty[String], status.getModificationTime, status.getLen))
+    try rows.flatMap(r => rowToAction(toRow(r).asInstanceOf[Row])).toVector
+    finally rows match {
+      case c: java.io.Closeable => c.close()
+      // the row-based fallback (vectorized reader off) closes its record
+      // reader only at end of input
+      case _ => Try(rows.foreach(_ => ()))
+    }
   }
 
   /** Only the non-`add` actions of a checkpoint (metaData, protocol, txn,

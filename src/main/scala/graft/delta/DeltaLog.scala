@@ -382,7 +382,7 @@ final class DeltaLog private (
     }
     if (snap.version < 0) {
       newestUsableCheckpoint().foreach { cp => snap = restoreCheckpoint(cp) }
-      listed = listCommitVersions() // restore ran jobs; pick up late commits
+      listed = listCommitVersions() // pick up commits that landed during the restore
     }
     // Contiguous replay only — the reference probes version-by-version and
     // stops at the first missing commit (`EndOfLog`, rust/src/delta.rs:
@@ -448,10 +448,11 @@ final class DeltaLog private (
     * [[DistributedReplay]] (executor-side parse + last-writer-wins) instead
     * of the driver-side row loop; the driver then collects only the
     * resolved survivors. Tunable via `spark.graft.replay.distributedThreshold`.
-    * Default 100k: a 10⁵-action checkpoint collected driver-side is already
-    * hundreds of MB of decoded Action objects (stats strings dominate), the
-    * wrong side of the line at 100×-scale file counts — and below 10⁵ the
-    * distributed job's fixed overhead isn't worth it. */
+    * Default 100k: a 10⁵-action checkpoint decoded driver-side is already
+    * hundreds of MB of Action objects (stats strings dominate), the wrong
+    * side of the line at 100×-scale file counts — and below 10⁵ the
+    * driver-local read ([[Checkpoints.read]], no Spark job at all) beats
+    * the distributed jobs' fixed per-job cost. */
   private def distributedReplayThreshold: Long =
     spark.conf.getOption(DeltaLog.DistributedThresholdKey)
       .map(_.toLong).getOrElse(100000L)
@@ -869,13 +870,13 @@ object DeltaLog {
   /** Handle cache (delta-spark's `DeltaLog.forTable` idiom, r17
     * optimization): ONE DeltaLog per (session, store-config, table path),
     * so repeated opens refresh the cached snapshot INCREMENTALLY instead
-    * of cold-restoring a checkpoint (a Spark parquet job each) plus the
-    * full commit tail on every call. The r17 bench measured the
-    * commit-heavy query class spending most of its wall in exactly those
-    * repeated cold `update()`s. The session is part of the key, so a new
-    * session never sees another session's handle; the store config is part
-    * of the key, so flipping `spark.graft.logStore.factory` mid-session
-    * gets a fresh store. LRU-bounded — snapshots are O(#files) driver
+    * of cold-restoring a checkpoint (a footer and row read of every
+    * checkpoint file) plus the full commit tail on every call. The r17
+    * bench measured the commit-heavy query class spending most of its wall
+    * in exactly those repeated cold `update()`s. The session is part of
+    * the key, so a new session never sees another session's handle; the
+    * store config is part of the key, so flipping
+    * `spark.graft.logStore.factory` mid-session gets a fresh store. LRU-bounded — snapshots are O(#files) driver
     * state and long-lived JVMs (test suites) open thousands of short-lived
     * tables. [[DeltaLog.update]] carries the recreate guard that makes a
     * shared handle safe when a table is deleted and re-created at the same

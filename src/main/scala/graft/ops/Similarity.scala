@@ -251,14 +251,18 @@ object Similarity {
     * position float summation order is partitioning-dependent in BOTH
     * formulations). Returns None — callers fall back to the distributed
     * loop — when the cap is exceeded, there are no vectors, or the init
-    * rows carry null/ragged vectors. */
-  private def driverKmeansCentroids(v: DataFrame, idCol: String, k: Int,
-                                    iters: Int): Option[Seq[(Int, Seq[Double])]] = {
+    * rows carry null/ragged vectors or null elements (a null element has
+    * no literal representation). */
+  private[ops] def driverKmeansCentroids(v: DataFrame, idCol: String, k: Int,
+                                         iters: Int): Option[Seq[(Int, Seq[Double])]] = {
     val cap = v.sparkSession.conf
       .getOption(LiteralCentroidDoublesKey).map(_.toLong).getOrElse(65536L)
     if (cap <= 0 || k > 4096) return None
+    centroidProbes.incrementAndGet()
     val initRows = v.orderBy(col(idCol)).limit(k).select("dv").collect()
-    if (initRows.isEmpty || initRows.exists(_.isNullAt(0))) return None
+    if (initRows.isEmpty ||
+        initRows.exists(r => r.isNullAt(0) || r.getSeq[Any](0).contains(null)))
+      return None
     var cents: Seq[(Int, Seq[Double])] = initRows.iterator.zipWithIndex
       .map { case (r, i) => (i + 1) -> r.getSeq[Double](0).toSeq }.toSeq
     val dim = cents.head._2.size
@@ -305,8 +309,19 @@ object Similarity {
                    k: Int, iters: Int = 3): DataFrame = {
     val v = vectors.select(col(idCol),
       expr(s"transform($vecCol, x -> cast(x as double))").as("dv"))
+    kmeansAssignWith(v, idCol, k, iters, driverKmeansCentroids(v, idCol, k, iters))
+  }
 
-    driverKmeansCentroids(v, idCol, k, iters).foreach { pairs =>
+  /** Counts [[driverKmeansCentroids]] probes (each one a driver collect) —
+    * lets specs assert one call chain probes once. */
+  private[ops] val centroidProbes = new java.util.concurrent.atomic.AtomicLong
+
+  /** [[kmeansAssign]] over the working frame `v` (id, dv), given the
+    * driver loop's answer: its centroids, or None for the distributed
+    * loop. */
+  private def kmeansAssignWith(v: DataFrame, idCol: String, k: Int, iters: Int,
+                               driverCents: Option[Seq[(Int, Seq[Double])]]): DataFrame = {
+    driverCents.foreach { pairs =>
       return v.withColumn("__graft_cents", typedLit(pairs))
         .withColumn("__graft_w", literalWinner(pairs))
         .select(col(idCol), col("__graft_w.cid").as("cluster"))
@@ -358,10 +373,11 @@ object Similarity {
     // __graft_cents) — a caller frame already using either keeps the join
     val clash = vectors.columns.contains("dv") ||
       vectors.columns.contains("__graft_cents")
-    val centsOpt =
-      if (clash) None else driverKmeansCentroids(v, idCol, k, iters)
+    // probed ONCE: the join fallback reuses the answer instead of probing
+    // again on exactly the inputs the cap protects
+    val centsOpt = driverKmeansCentroids(v, idCol, k, iters)
     centsOpt match {
-      case Some(pairs) =>
+      case Some(pairs) if !clash =>
         vectors
           .withColumn("dv",
             expr(s"transform($vecCol, x -> cast(x as double))"))
@@ -369,8 +385,8 @@ object Similarity {
           .withColumn("cluster",
             literalWinner(pairs).getField("cid"))
           .drop("dv", "__graft_cents")
-      case None =>
-        vectors.join(kmeansAssign(vectors, idCol, vecCol, k, iters), idCol)
+      case _ =>
+        vectors.join(kmeansAssignWith(v, idCol, k, iters, centsOpt), idCol)
     }
   }
 

@@ -65,4 +65,13 @@ class BenchErrorSpec extends AnyFunSuite {
     assert(mins("q_gate") == 71.5)              // the sweep that paid
     assert(mins("q_plain") == 1.5)              // stateless: genuine min
   }
+
+  test("wallMin ranks commit counts over clean sweeps only") {
+    // an errored sweep that committed more than any healthy one must not
+    // empty the clean set and hand back its own crashed wall
+    val crashed = (Map("q" -> 0.01), Map("q" -> "boom"), Map("q" -> 9L))
+    val healthy = (Map("q" -> 3.0), Map.empty[String, String], Map("q" -> 4L))
+    assert(Bench.wallMin(Seq(crashed, healthy))("q") == 3.0)
+    assert(Bench.wallMin(Seq(healthy, crashed))("q") == 3.0)
+  }
 }

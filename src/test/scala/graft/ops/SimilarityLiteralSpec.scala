@@ -97,4 +97,45 @@ class SimilarityLiteralSpec extends AnyFunSuite with SparkTestBase {
         .as[(Long, Int)].collect().toMap)
     assert(fast == slow)
   }
+
+  test("a null element in an init vector declines the driver loop") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // init centroid 2 is vector 1, whose first element is null: it has no
+    // place in a literal typed array<double> without nulls, so the driver
+    // loop must decline and the distributed loop answer
+    val rows = (0 until 20).map(i =>
+      Row(i.toLong, Seq[Any](if (i == 1) null else i.toFloat, (i % 5).toFloat)))
+    val vecs = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      StructType(Seq(StructField("id", LongType),
+        StructField("vec", ArrayType(FloatType, containsNull = true)))))
+    val dv = vecs.select(col("id"),
+      expr("transform(vec, x -> cast(x as double))").as("dv"))
+    assert(withCap("65536")(Similarity.driverKmeansCentroids(dv, "id", 2, 1)).isEmpty)
+    val fast = withCap("65536")(
+      Similarity.kmeansAssign(vecs, "id", "vec", k = 2, iters = 1)
+        .as[(Long, Int)].collect().toMap)
+    val slow = withCap("0")(
+      Similarity.kmeansAssign(vecs, "id", "vec", k = 2, iters = 1)
+        .as[(Long, Int)].collect().toMap)
+    assert(fast.size == 20)
+    assert(fast == slow)
+  }
+
+  test("kmeansAssignKeep probes the driver loop once past the cap") {
+    val vecs = randVecs(60, 5, 7)
+    // k·dim = 20 > cap 8: the probe collects the init rows, then declines
+    val (probes, kept) = withCap("8") {
+      val before = Similarity.centroidProbes.get()
+      val kept = Similarity.kmeansAssignKeep(vecs, "id", "vec", k = 4, iters = 2)
+        .select("id", "cluster").as[(Long, Int)].collect().toMap
+      (Similarity.centroidProbes.get() - before, kept)
+    }
+    assert(probes == 1)
+    val plain = withCap("8")(
+      Similarity.kmeansAssign(vecs, "id", "vec", k = 4, iters = 2)
+        .as[(Long, Int)].collect().toMap)
+    assert(kept.size == 60)
+    assert(kept == plain)
+  }
 }
