@@ -1,9 +1,11 @@
 package graft.delta
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Change Data Feed: row-level change capture for DML commits.
   *
@@ -23,9 +25,11 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   *    enabled, OPTIMIZE excepted — dataChange=false commits are invisible)
   *    → fail: the net row change is not reconstructible from file actions.
   *
-  * Cost note (100 TB): capturing changes is one extra pass over the
-  * AFFECTED files only (never the table), and only when the table property
-  * is on. Vacuum never reclaims `_change_data` (the same exemption the
+  * Cost note (100 TB): capturing changes reads the AFFECTED files only
+  * (never the table), only when the table property is on, and copy-on-write
+  * DML and MERGE write their change files in the same job as their data
+  * files (under `_change_data/cdc-<uuid>/<partition dirs>/`). Vacuum never
+  * reclaims `_change_data` (the same exemption the
   * reference's vacuum carves out, rust/src/delta.rs:904-916), so the feed
   * survives file cleanup; feed retention is operational policy.
   */
@@ -56,16 +60,26 @@ object ChangeDataFeed {
   def enabled(snap: Snapshot): Boolean =
     TableConfig.changeDataFeedEnabled(TableConfig.of(snap))
 
-  /** Write `changes` (table columns + `_change_type`) under `_change_data/`
-    * and return the commit's cdc actions. */
-  def stage(spark: SparkSession, log: DeltaLog, changes: DataFrame): Seq[CdcAction] = {
-    val rel = s"$Dir/cdc-${java.util.UUID.randomUUID()}"
-    val abs = new Path(log.tablePath, rel)
-    changes.write.parquet(abs.toString)
-    val fs = abs.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(abs).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(st => CdcAction(path = s"$rel/${st.getPath.getName}", size = st.getLen))
+  /** Write `changes` (table columns + `_change_type`, never null) as
+    * change files under one fresh `_change_data/cdc-<uuid>/`, in one job
+    * through the table's commit protocol, and return the commit's cdc
+    * actions. Writes that produce data files too take both in the same job
+    * instead ([[withImages]] + [[GraftWriter.writeFiles]]). */
+  def stage(spark: SparkSession, log: DeltaLog, changes: DataFrame): Seq[CdcAction] =
+    GraftWriter.writeFiles(changes, log.tablePath.toString, Nil,
+      numIndexedCols = -1, changes = Some(Set.empty)).cdc
+
+  /** One frame for [[GraftWriter.writeFiles]] with changes: `data` rows with a null
+    * `_change_type`, then `images` (table columns + `_change_type`) with
+    * null for the columns only data files carry (materialized row-tracking
+    * columns). Returns the frame and those data-only column names. */
+  private[delta] def withImages(data: DataFrame, images: DataFrame)
+      : (DataFrame, Set[String]) = {
+    val dataOnly = data.schema.fields.filterNot(f => images.columns.contains(f.name))
+    val padded = dataOnly.foldLeft(images)((df, f) =>
+      df.withColumn(f.name, lit(null).cast(f.dataType)))
+    (data.withColumn(ChangeType, lit(null).cast(StringType)).unionByName(padded),
+      dataOnly.map(_.name).toSet)
   }
 
   /** File-level change images for an overwrite-shaped commit (INSERT
@@ -95,18 +109,22 @@ object ChangeDataFeed {
     stage(spark, log, changes)
   }
 
-  /** Delete the staged `_change_data` directories of `cdcActions` — the
-    * failed-commit rollback shared by every capture site (the dirs are
-    * referenced only by the failed commit, and vacuum never lists
-    * underscore-hidden paths). Best-effort. */
+  /** The `_change_data/cdc-<uuid>` directory one write put `c` in. */
+  private[delta] def writeDir(c: CdcAction): String =
+    c.path.split('/').take(2).mkString("/")
+
+  /** Delete the staged `_change_data/cdc-<uuid>` directories of
+    * `cdcActions` — the failed-commit rollback shared by every capture
+    * site (each directory belongs to one write and is referenced only by
+    * the failed commit, and vacuum never lists underscore-hidden paths).
+    * Best-effort. */
   def discardStaged(spark: SparkSession, log: DeltaLog,
                     cdcActions: Seq[CdcAction]): Unit = {
     val fs = log.tablePath.getFileSystem(spark.sessionState.newHadoopConf())
-    cdcActions.map(c => c.path.substring(0, c.path.lastIndexOf('/')))
-      .distinct.foreach { rel =>
-        try fs.delete(new Path(log.tablePath, rel), true)
-        catch { case _: Exception => () }
-      }
+    cdcActions.map(writeDir).distinct.foreach { rel =>
+      try fs.delete(new Path(log.tablePath, rel), true)
+      catch { case _: Exception => () }
+    }
   }
 
   /** The change feed over `(startV, endV]`: table columns +
@@ -168,7 +186,8 @@ object ChangeDataFeed {
     var prior: Option[Snapshot.ReplayState] = None
     val cdcFiles = Seq.newBuilder[String]      // absolute cdc paths, all versions
     val addFiles = Seq.newBuilder[String]      // absolute add paths, all versions
-    val fileVersion = Seq.newBuilder[(String, Long)] // normalized path -> version
+    // normalized path -> (version, a cdc file's partitionValues)
+    val fileVersion = Seq.newBuilder[(String, Long, Map[String, String])]
     val removeFrames = Seq.newBuilder[DataFrame]
 
     // commit files read in parallel on the driver pool (O(versions)
@@ -183,7 +202,7 @@ object ChangeDataFeed {
         val removes = actions.collect { case r: RemoveAction if r.dataChange => r }
         if (cdcs.nonEmpty) {
           cdcFiles ++= cdcs.map(c => abs(c.path))
-          fileVersion ++= cdcs.map(c => norm(c.path) -> v)
+          fileVersion ++= cdcs.map(c => (norm(c.path), v, c.partitionValues))
         } else if (adds.nonEmpty && removes.isEmpty) {
           // adds carrying DV pointers (RESTORE re-adds its target's files
           // verbatim) must NOT serve their whole files as inserts — the
@@ -191,7 +210,7 @@ object ChangeDataFeed {
           // gets the same DV subtraction the remove branch applies
           val (dvAdds, plainAdds) = adds.partition(DeletionVectors.hasDv)
           addFiles ++= plainAdds.map(a => abs(a.path))
-          fileVersion ++= plainAdds.map(a => norm(a.path) -> v)
+          fileVersion ++= plainAdds.map(a => (norm(a.path), v, Map.empty[String, String]))
           if (dvAdds.nonEmpty)
             removeFrames += DeletionVectors.filterDeleted(spark, log, dvAdds,
               spark.read.option("basePath", log.tablePath.toString)
@@ -220,12 +239,24 @@ object ChangeDataFeed {
         prior.foreach(_.fold(actions.iterator))
       }
 
+    // a partitioned change file (`_change_data/p=1/…`, or graft's
+    // `cdc-<uuid>/p=1/…`) holds no partition column: its value rides the
+    // map from the cdc action's partitionValues, coalesced with the in-file
+    // column so unpartitioned change files that carry it still read
+    val versionMap = fileVersion.result()
+    val pvCols = versionMap.flatMap(_._3.keys).distinct
+      .flatMap(k => schema.find(_.name == k))
+    val pvNames = pvCols.indices.map(i => s"__graft_pv_$i")
     // the scan's _metadata.file_path run through the SAME SchemeRe strip
     // as the map keys (see normalizedKey); paths are unique within one
     // table's storage
-    val versionMap = fileVersion.result()
-    lazy val mapDf = broadcast(spark.createDataFrame(versionMap)
-      .toDF("__graft_path", CommitVersion))
+    lazy val mapDf = broadcast(spark.createDataFrame(
+      versionMap.map { case (p, v, pv) =>
+        Row.fromSeq(Seq(p, v) ++ pvCols.map(f => pv.get(f.name).orNull))
+      }.asJava,
+      StructType(Seq(StructField("__graft_path", StringType),
+        StructField(CommitVersion, LongType, nullable = false)) ++
+        pvNames.map(StructField(_, StringType)))))
     def attachVersion(df: DataFrame): DataFrame =
       df.withColumn("__graft_path", regexp_replace(
           col("_metadata.file_path"), SchemeRe, "/"))
@@ -238,14 +269,19 @@ object ChangeDataFeed {
     // distinct scan paths: a path added in TWO range versions (remove →
     // re-add) is scanned once and the version join emits it once PER
     // version; a duplicate listing would double the scan AND the join
-    if (cdcPaths.nonEmpty)
-      frames += attachVersion(
+    if (cdcPaths.nonEmpty) {
+      val scanned = attachVersion(
         spark.read.schema(withType).parquet(cdcPaths.distinct: _*))
+      frames += pvCols.zip(pvNames).foldLeft(scanned) { case (df, (f, pv)) =>
+        df.withColumn(f.name, coalesce(df.col(DeltaSchema.quoted(f.name)),
+          col(pv).cast(f.dataType)))
+      }.drop(pvNames: _*)
+    }
     if (addPaths.nonEmpty)
       frames += attachVersion(
         spark.read.option("basePath", log.tablePath.toString)
           .schema(schema).parquet(addPaths.distinct: _*)
-          .withColumn(ChangeType, lit("insert")))
+          .withColumn(ChangeType, lit("insert"))).drop(pvNames: _*)
     frames ++= removeFrames.result()
 
     frames.result() match {

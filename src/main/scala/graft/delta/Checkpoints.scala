@@ -5,7 +5,10 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
@@ -284,7 +287,10 @@ object Checkpoints {
     * (`%020d.checkpoint.%010d.%010d.parquet`, the naming
     * `find_latest_check_point_for_version` matches,
     * `rust/src/delta.rs:412-436`), so checkpoints of 10⁶-file tables never
-    * funnel through one writer task. Returns (actions written, parts). */
+    * funnel through one writer task. Below the restore threshold the parts
+    * are written on the driver with no Spark job ([[writeOnDriver]]);
+    * larger checkpoints take one distributed job. Every part is published
+    * through `log.store.renameNoReplace`. Returns (actions written, parts). */
   def write(log: DeltaLog, snap: Snapshot,
             maxActionsPerPart: Int = 500000): (Long, Option[Int]) = {
     val md = snap.metadata.getOrElse(
@@ -309,24 +315,25 @@ object Checkpoints {
     val nParts = math.max(1, math.ceil(acts.size.toDouble / maxActionsPerPart).toInt)
 
     val tmpDir = new Path(log.logPath, s".tmp-checkpoint-${UUID.randomUUID()}")
-    // Row construction + Catalyst conversion run on the EXECUTORS:
-    // a driver-side `acts.map(actionRow)` + LocalRelation converted 10⁷
-    // actions single-threaded (~19 µs each — minutes at decade scale, the
-    // r13 10⁷ probe's cost center), and the old `repartition(nParts)` then
-    // shuffled every row a second time. parallelize already yields nParts
-    // slices, so the write is shuffle-free.
-    log.spark.createDataFrame(
-        log.spark.sparkContext.parallelize(acts, nParts)
-          .map(a => actionRow(a, info, withDomains)),
-        schema)
-      .write.mode("overwrite").parquet(tmpDir.toString)
     val fs = tmpDir.getFileSystem(log.spark.sessionState.newHadoopConf())
-    val parts = fs.listStatus(tmpDir).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-    if (parts.length != nParts)
-      throw new IllegalStateException(
-        s"expected $nParts checkpoint part files in $tmpDir, found ${parts.length}")
+    val parts =
+      if (onDriver(log, acts.size))
+        writeOnDriver(log.spark, schema, tmpDir,
+          slices(acts, nParts).map(_.iterator.map(actionRow(_, info, withDomains))))
+      else {
+        // Row construction + Catalyst conversion run on the EXECUTORS:
+        // a driver-side `acts.map(actionRow)` converts 10⁷ actions
+        // single-threaded (~19 µs each — minutes at decade scale, the r13
+        // 10⁷ probe's cost center), and the old `repartition(nParts)`
+        // then shuffled every row a second time. parallelize already
+        // yields nParts slices, so the write is shuffle-free.
+        log.spark.createDataFrame(
+            log.spark.sparkContext.parallelize(acts, nParts)
+              .map(a => actionRow(a, info, withDomains)),
+            schema)
+          .write.mode("overwrite").parquet(tmpDir.toString)
+        listParts(fs, tmpDir, nParts, "checkpoint part")
+      }
     val dsts =
       if (nParts == 1) Seq(log.checkpointFile(snap.version))
       else (1 to nParts).map(i => new Path(log.logPath,
@@ -337,6 +344,51 @@ object Checkpoints {
     }
     fs.delete(tmpDir, true)
     (acts.size.toLong, if (nParts == 1) None else Some(nParts))
+  }
+
+  /** Checkpoints below the restore threshold (`spark.graft.replay.
+    * distributedThreshold`) are written on the driver: for them a Spark
+    * job's fixed cost is most of the write, the mirror of the driver-side
+    * restore in [[read]]. */
+  private def onDriver(log: DeltaLog, actions: Int): Boolean =
+    actions < log.distributedReplayThreshold
+
+  /** `items` cut into `n` contiguous slices the way `parallelize` cuts
+    * them, so both writers put the same actions in the same part. */
+  private def slices[A](items: Seq[A], n: Int): Seq[Seq[A]] =
+    (0 until n).map(i => items.slice((i.toLong * items.size / n).toInt,
+      ((i + 1).toLong * items.size / n).toInt))
+
+  /** Write each row source as one parquet file `part-<i>.parquet` under
+    * `tmpDir`, on the driver with Spark's parquet writer (same schema
+    * conversion and session settings as a `DataFrame` write) and no Spark
+    * job. Returns the files in order. */
+  private def writeOnDriver(spark: SparkSession, schema: StructType, tmpDir: Path,
+                            parts: Seq[Iterator[Row]]): Seq[Path] = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    GraftWriter.inDriverPool(parts.zipWithIndex) { case (rows, i) =>
+      val file = new Path(tmpDir, f"part-$i%05d.parquet")
+      val out = factory.newInstance(file.toString, schema,
+        new TaskAttemptContextImpl(new Configuration(job.getConfiguration),
+          new TaskAttemptID("graft-checkpoint", 0, TaskType.MAP, i, 0)))
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+      try rows.foreach(r => out.write(toCatalyst(r).asInstanceOf[InternalRow]))
+      finally out.close()
+      file
+    }
+  }
+
+  /** The `part-*.parquet` files a distributed write left in `tmpDir`, in
+    * name order — exactly `n` of them. */
+  private def listParts(fs: FileSystem, tmpDir: Path, n: Int, what: String): Seq[Path] = {
+    val parts = fs.listStatus(tmpDir).map(_.getPath)
+      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+      .sortBy(_.getName).toSeq
+    if (parts.length != n)
+      throw new IllegalStateException(
+        s"expected $n $what files in $tmpDir, found ${parts.length}")
+    parts
   }
 
   // ------------------------------------------------------------ decode
@@ -617,6 +669,8 @@ object Checkpoints {
       case other => throw new IllegalArgumentException(
         s"sidecars carry file actions only, got ${other.getClass.getSimpleName}")
     }
+    // one threshold for the whole checkpoint: sidecars and manifest
+    val small = onDriver(log, fileActs.size)
     val nParts =
       if (fileActs.isEmpty) 0
       else math.max(1, math.ceil(fileActs.size.toDouble / maxActionsPerPart).toInt)
@@ -624,14 +678,15 @@ object Checkpoints {
       if (nParts == 0) Nil
       else {
         val tmpDir = new Path(log.logPath, s".tmp-v2sidecar-$uuid")
-        spark.createDataFrame(fileActs.map(fileRow).asJava, sidecarSchema)
-          .repartition(nParts).write.mode("overwrite").parquet(tmpDir.toString)
-        val parts = fs.listStatus(tmpDir).map(_.getPath)
-          .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-          .sortBy(_.getName)
-        if (parts.length != nParts)
-          throw new IllegalStateException(
-            s"expected $nParts sidecar files in $tmpDir, found ${parts.length}")
+        val parts =
+          if (small)
+            writeOnDriver(spark, sidecarSchema, tmpDir,
+              slices(fileActs, nParts).map(_.iterator.map(fileRow)))
+          else {
+            spark.createDataFrame(fileActs.map(fileRow).asJava, sidecarSchema)
+              .repartition(nParts).write.mode("overwrite").parquet(tmpDir.toString)
+            listParts(fs, tmpDir, nParts, "sidecar")
+          }
         log.store.mkdirs(sidecarDir(log))
         val refs = parts.zipWithIndex.map { case (src, i) =>
           val name = s"$uuid-${DeltaLog.pad10(i + 1)}.parquet"
@@ -685,11 +740,15 @@ object Checkpoints {
       sidecarActions
     val manifestName = s"${DeltaLog.pad20(snap.version)}.checkpoint.$uuid.parquet"
     val tmpDir = new Path(log.logPath, s".tmp-v2manifest-$uuid")
-    spark.createDataFrame(manifestActs.map(manifestRow).asJava, manifestSchema)
-      .coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
-    val part = fs.listStatus(tmpDir).map(_.getPath)
-      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"no manifest part in $tmpDir"))
+    val part =
+      if (small)
+        writeOnDriver(spark, manifestSchema, tmpDir,
+          Seq(manifestActs.iterator.map(manifestRow))).head
+      else {
+        spark.createDataFrame(manifestActs.map(manifestRow).asJava, manifestSchema)
+          .coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
+        listParts(fs, tmpDir, 1, "manifest").head
+      }
     log.store.renameNoReplace(part, new Path(log.logPath, manifestName))
     fs.delete(tmpDir, true)
     // size counts every action a reader reconstructs state from

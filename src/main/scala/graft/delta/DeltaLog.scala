@@ -453,7 +453,7 @@ final class DeltaLog private (
     * side of the line at 100×-scale file counts — and below 10⁵ the
     * driver-local read ([[Checkpoints.read]], no Spark job at all) beats
     * the distributed jobs' fixed per-job cost. */
-  private def distributedReplayThreshold: Long =
+  private[delta] def distributedReplayThreshold: Long =
     spark.conf.getOption(DeltaLog.DistributedThresholdKey)
       .map(_.toLong).getOrElse(100000L)
 

@@ -171,7 +171,7 @@ object Dml {
     params.put("deletionVector", dvStorage)
     params.put("numDeletedRows", rowsDeleted)
     val version = commitOrClean(spark, log, txn, Some(CommitInfoAction(info)),
-      stagedDirs = Seq(dvStorage) ++ cdcActions.map(parentDir))
+      stagedDirs = Seq(dvStorage) ++ cdcActions.map(ChangeDataFeed.writeDir))
     DmlMetrics(affected.size, rowsDeleted, version)
   }
 
@@ -244,28 +244,26 @@ object Dml {
       val checked = Constraints.enforce(updated, snap)
       val rtPassthrough = rtState.map { case (_, (matId, _)) => Set(matId) }
         .getOrElse(Set.empty[String])
-      val adds = GraftWriter.stageFiles(
-        stagedPhysical(snap, checked, passthrough = rtPassthrough), path,
-        snap.partitionColumns.map(phys))
+      val partCols = snap.partitionColumns.map(phys)
+      val statsIdx = TableConfig.dataSkippingNumIndexedCols(TableConfig.of(snap))
       // CDF: pre-images are the matched rows as scanned, post-images the
-      // transformed copies that were just appended — logical columns only
-      val cdc =
-        if (!ChangeDataFeed.enabled(snap)) Nil
-        else
-          try ChangeDataFeed.stage(spark, log,
-            stagedPhysical(snap,
-              matched.select(snap.schema.fieldNames.map(n => col(DeltaSchema.quoted(n))).toSeq: _*)
-                .withColumn(ChangeDataFeed.ChangeType, lit("update_preimage"))
-                .unionByName(updated.select(snap.schema.fieldNames.map(n => col(DeltaSchema.quoted(n))).toSeq: _*)
-                  .withColumn(ChangeDataFeed.ChangeType, lit("update_postimage"))),
-              passthrough = Set(ChangeDataFeed.ChangeType)))
-          catch {
-            case e: Throwable =>
-              try GraftWriter.discardStaged(spark, path, adds)
-              catch { case _: Exception => () }
-              throw e
-          }
-      (adds, cdc)
+      // transformed copies — logical columns only, in the copies' job
+      val written =
+        if (!ChangeDataFeed.enabled(snap))
+          GraftWriter.writeFiles(stagedPhysical(snap, checked, passthrough = rtPassthrough),
+            path, partCols, statsIdx)
+        else {
+          def logical(df: org.apache.spark.sql.DataFrame) =
+            df.select(snap.schema.fieldNames.map(n => col(DeltaSchema.quoted(n))).toSeq: _*)
+          val (both, dataOnly) = ChangeDataFeed.withImages(checked,
+            logical(matched).withColumn(ChangeDataFeed.ChangeType, lit("update_preimage"))
+              .unionByName(logical(updated)
+                .withColumn(ChangeDataFeed.ChangeType, lit("update_postimage"))))
+          GraftWriter.writeFiles(stagedPhysical(snap, both,
+              passthrough = dataOnly + ChangeDataFeed.ChangeType),
+            path, partCols, statsIdx, Some(dataOnly))
+        }
+      (written.adds, written.cdc)
     } catch {
       case e: Throwable =>
         try log.tablePath.getFileSystem(spark.sessionState.newHadoopConf())
@@ -292,14 +290,10 @@ object Dml {
     params.put("deletionVector", dvStorage)
     params.put("numUpdatedRows", rowsUpdated)
     val version = commitOrClean(spark, log, txn, Some(CommitInfoAction(info)),
-      stagedDirs = Seq(dvStorage) ++ cdcActions.map(parentDir),
+      stagedDirs = Seq(dvStorage) ++ cdcActions.map(ChangeDataFeed.writeDir),
       stagedAdds = newAdds)
     DmlMetrics(affected.size, rowsUpdated, version)
   }
-
-  /** Table-relative parent directory of a staged cdc file. */
-  private def parentDir(c: CdcAction): String =
-    c.path.substring(0, c.path.lastIndexOf('/'))
 
   /** SQL UPDATE semantics: every SET expression AND the WHERE evaluate
     * against the PRE-update row, in ONE select — a sequential
@@ -537,55 +531,44 @@ object Dml {
         transform(affectedDf.observe(metricName,
           coalesce(sum(when(coalesce(predicate, lit(false)), 1L)), lit(0L)).as("matched")))
       else affectedDf.filter(!coalesce(predicate, lit(false)))
-    // only UPDATE carries an observed metric; DELETE must not wait on one
     val checked = Constraints.enforce(rewritten, snap)
     // mapped tables: rewritten files stage under at-rest names (and footer
     // field ids under mode=id), exactly like appends; the materialized
-    // row-identity columns pass through (already physical)
+    // row-identity columns and the change type pass through (already
+    // physical / never mapped)
     def staged(df: org.apache.spark.sql.DataFrame) =
-      stagedPhysical(snap, df, passthrough = RowTracking.passthrough(rtState))
+      stagedPhysical(snap, df, passthrough = RowTracking.passthrough(rtState) +
+        ChangeDataFeed.ChangeType)
     val physPartCols = snap.partitionColumns.map(phys)
-    val (adds, observed) =
-      if (keepMatches)
-        ObservedMetrics.run(spark, metricName) {
-          GraftWriter.stageFiles(staged(checked), path, physPartCols)
-        }
-      else
-        (GraftWriter.stageFiles(staged(checked), path, physPartCols), None)
-    val afterRows = adds.flatMap(_.stats.flatMap(ActionCodec.statsFromJson))
-      .map(_.numRecords).sum
-    val rowsAffected =
-      if (keepMatches)
-        observed.map(_.getAs[Long]("matched")).getOrElse(
-          // metrics did not surface (listener starvation): recompute
-          affectedDf.filter(coalesce(predicate, lit(false))).count())
-      else
-        beforeFromStats.getOrElse(affectedDf.count()) - afterRows
-
-    // change-data capture (one extra pass over affected files, only when
-    // the table property is on)
-    val cdcActions =
-      if (!ChangeDataFeed.enabled(snap)) Nil
+    val statsIdx = TableConfig.dataSkippingNumIndexedCols(TableConfig.of(snap))
+    // change-data capture rides the SAME job as the rewrite (only when the
+    // table property is on): change images carry the LOGICAL columns only
+    // — the hidden row-tracking columns of a rewrite scan stay data-only
+    val written =
+      if (!ChangeDataFeed.enabled(snap))
+        GraftWriter.writeFiles(staged(checked), path, physPartCols, statsIdx)
       else {
         val matchedRows = affectedDf.filter(coalesce(predicate, lit(false)))
-        // change images carry the LOGICAL columns only — the hidden
-        // row-tracking columns of a rewrite scan must not leak into them
         def logicalCt(df: org.apache.spark.sql.DataFrame, ct: String) =
           df.select(snap.schema.fieldNames.map(n => col(DeltaSchema.quoted(n))).toSeq: _*)
             .withColumn(ChangeDataFeed.ChangeType, lit(ct))
-        val changes =
+        val images =
           if (keepMatches)
             logicalCt(matchedRows, "update_preimage")
               .unionByName(logicalCt(transform(matchedRows), "update_postimage"))
           else logicalCt(matchedRows, "delete")
-        // change files are at-rest files: physical names on mapped tables
-        // (the feed reader scans them physical and aliases back)
-        ChangeDataFeed.stage(spark, log,
-          if (mapped) ColumnMapping.toPhysical(changes, snap.schema,
-            attachIds = ColumnMapping.mode(snap) == "id",
-            passthrough = Set(ChangeDataFeed.ChangeType))
-          else changes)
+        val (both, dataOnly) = ChangeDataFeed.withImages(checked, images)
+        GraftWriter.writeFiles(staged(both), path, physPartCols, statsIdx, Some(dataOnly))
       }
+    val (adds, cdcActions) = (written.adds, written.cdc)
+    val afterRows = adds.flatMap(_.stats.flatMap(ActionCodec.statsFromJson))
+      .map(_.numRecords).sum
+    val rowsAffected =
+      if (keepMatches)
+        written.observed.get(metricName).map(_.getAs[Long]("matched")).getOrElse(
+          // no observation in the executed plan: recompute
+          affectedDf.filter(coalesce(predicate, lit(false))).count())
+      else beforeFromStats.getOrElse(affectedDf.count()) - afterRows
 
     // 3. one commit: remove affected, add rewrites. The predicate's
     // partition-column projection becomes the declared read domain, so
@@ -614,7 +597,7 @@ object Dml {
     params.put("predicate", predicate.toString)
     params.put("numFilesRewritten", affected.size)
     val version = commitOrClean(spark, log, txn, Some(CommitInfoAction(info)),
-      stagedDirs = cdcActions.map(parentDir), stagedAdds = adds)
+      stagedDirs = cdcActions.map(ChangeDataFeed.writeDir), stagedAdds = adds)
     DmlMetrics(affected.size, rowsAffected, version)
   }
 

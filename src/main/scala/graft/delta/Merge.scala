@@ -452,26 +452,67 @@ final class MergeBuilder private[delta] (
 
     val removes = if (rewriteFiles) affected else Nil
     // mapped tables: the rewrite stages under at-rest names (and footer
-    // field ids under mode=id), exactly like appends and CoW DML
+    // field ids under mode=id), exactly like appends and CoW DML — against
+    // the EVOLVED schema (change images carry evolved columns; snap.schema
+    // would reject them)
     def stagedDf(df: DataFrame): DataFrame =
       if (mapped) ColumnMapping.toPhysical(df, mergedSchema,
         attachIds = ColumnMapping.mode(snap) == "id",
-        passthrough = RowTracking.passthrough(rtState))
+        passthrough = RowTracking.passthrough(rtState) + ChangeDataFeed.ChangeType)
       else df
-    val (adds, observed) =
-      try ObservedMetrics.run(spark, metricName) {
-        GraftWriter.stageFiles(stagedDf(Constraints.enforce(rewritten, snap)),
-          path, snap.partitionColumns.map(phys))
-      } catch {
+    val checked = Constraints.enforce(rewritten, snap)
+    val partCols = snap.partitionColumns.map(phys)
+    val statsIdx = TableConfig.dataSkippingNumIndexedCols(TableConfig.of(snap))
+    // change-data capture rides the SAME job as the rewrite: pre/post
+    // images of updated rows, deleted rows, inserted rows — each change
+    // class filters the ONE materialized join execution above
+    // (localCheckpoint), only when the table property is on (the same
+    // affected-files-only cost contract as Dml.rewrite)
+    def write(): GraftWriter.Written =
+      if (!cdfOn) GraftWriter.writeFiles(stagedDf(checked), path, partCols, statsIdx)
+      else {
+        // pre-images serve the EVOLVED schema too (one schema per commit's
+        // change feed); old rows carry null for new columns
+        val tCols = mergedSchema.fields.map(f =>
+          (if (newCols.contains(f.name)) lit(null).cast(f.dataType)
+           else col(s"t.`${f.name}`").cast(f.dataType)).as(f.name)).toSeq
+        val ct = ChangeDataFeed.ChangeType
+        // post/insert images go through the SAME projection (incl. the
+        // generated-column recompute) as the committed rewrite — then
+        // narrowed to the LOGICAL columns (hidden row-tracking columns
+        // must not leak into change images)
+        def logicalOnly(df: DataFrame) =
+          df.select((mergedSchema.fieldNames.map(c => col(s"`$c`")).toSeq :+ col(ct)): _*)
+        val images = Seq(
+          joined.filter(applyUpd || applyBsUpd).select(tCols: _*)
+            .withColumn(ct, lit("update_preimage")),
+          logicalOnly(projected(joined.filter(applyUpd || applyBsUpd))
+            .withColumn(ct, lit("update_postimage"))),
+          joined.filter(applyDel || applyBsDel).select(tCols: _*)
+            .withColumn(ct, lit("delete")),
+          logicalOnly(projected(joined.filter(isIns))
+            .withColumn(ct, lit("insert")))
+        ).reduce(_ unionByName _)
+        val (both, dataOnly) = ChangeDataFeed.withImages(checked, images)
+        GraftWriter.writeFiles(stagedDf(both), path, partCols, statsIdx, Some(dataOnly))
+      }
+    val written =
+      try write()
+      catch {
         case e: Throwable =>
           // a failed write job (e.g. CHECK violation inside it) must not
           // leave the CDF join's checkpoint blocks pinned (r9 review)
           releaseJoin()
           throw e
       }
-    def discardStaged(): Unit = GraftWriter.discardStaged(spark, path, adds)
+    val (adds, cdcActions) = (written.adds, written.cdc)
+    // staged data and change files are referenced by no commit yet
+    def discardStaged(): Unit = {
+      GraftWriter.discardStaged(spark, path, adds)
+      ChangeDataFeed.discardStaged(spark, log, cdcActions)
+    }
 
-    val (nUpd, nDel, nIns) = observed match {
+    val (nUpd, nDel, nIns) = written.observed.get(metricName) match {
       case Some(row) =>
         val pairs = row.getAs[Long]("matched_pairs")
         val unmatchedT = row.getAs[Long]("unmatched_t")
@@ -487,8 +528,8 @@ final class MergeBuilder private[delta] (
         }
         (row.getAs[Long]("nu"), row.getAs[Long]("nd"), row.getAs[Long]("ni"))
       case None =>
-        // observed metrics did not surface (listener starvation): recompute
-        // with the standalone aggregation pass
+        // no observation in the executed plan: recompute with the
+        // standalone aggregation pass
         val per = joined.groupBy(col("__t")).agg(
           sum(when(matched, 1L).otherwise(0L)).as("nm"),
           sum(when(applyUpd || applyBsUpd, 1L).otherwise(0L)).as("nu"),
@@ -525,51 +566,6 @@ final class MergeBuilder private[delta] (
       return MergeMetrics(0, 0, 0, 0, snap.version)
     }
 
-    // change-data capture: pre/post images of updated rows, deleted rows,
-    // inserted rows — each change class filters the ONE materialized join
-    // execution above (localCheckpoint), only when the table property is on
-    // (the same affected-files-only cost contract as Dml.rewrite)
-    val cdcActions =
-      if (!cdfOn) Nil
-      else try {
-        // pre-images serve the EVOLVED schema too (one schema per commit's
-        // change feed); old rows carry null for new columns
-        val tCols = mergedSchema.fields.map(f =>
-          (if (newCols.contains(f.name)) lit(null).cast(f.dataType)
-           else col(s"t.`${f.name}`").cast(f.dataType)).as(f.name)).toSeq
-        val ct = ChangeDataFeed.ChangeType
-        // post/insert images go through the SAME projection (incl. the
-        // generated-column recompute) as the committed rewrite — then
-        // narrowed to the LOGICAL columns (hidden row-tracking columns
-        // must not leak into change images)
-        def logicalOnly(df: DataFrame) =
-          df.select((mergedSchema.fieldNames.map(c => col(s"`$c`")).toSeq :+ col(ct)): _*)
-        val changes = Seq(
-          joined.filter(applyUpd || applyBsUpd).select(tCols: _*)
-            .withColumn(ct, lit("update_preimage")),
-          logicalOnly(projected(joined.filter(applyUpd || applyBsUpd))
-            .withColumn(ct, lit("update_postimage"))),
-          joined.filter(applyDel || applyBsDel).select(tCols: _*)
-            .withColumn(ct, lit("delete")),
-          logicalOnly(projected(joined.filter(isIns))
-            .withColumn(ct, lit("insert")))
-        ).reduce(_ unionByName _)
-        // change files are at-rest files: physical names on mapped tables
-        // — against the EVOLVED schema (the images carry evolved columns;
-        // snap.schema would reject them)
-        ChangeDataFeed.stage(spark, log,
-          if (mapped) ColumnMapping.toPhysical(changes, mergedSchema,
-            attachIds = ColumnMapping.mode(snap) == "id",
-            passthrough = Set(ChangeDataFeed.ChangeType))
-          else changes)
-      } catch {
-        case e: Throwable =>
-          // CDC staging failed after the rewrite staged: reclaim both and
-          // release the pinned join (r9 review)
-          discardStaged(); releaseJoin()
-          throw e
-      }
-
     // 4. one commit: remove rewritten files, add their replacements + inserts.
     // t-qualified partition constraints in the join condition scope the read
     // domain, letting partition-disjoint concurrent writes commute. A
@@ -592,7 +588,6 @@ final class MergeBuilder private[delta] (
       catch {
         case e: Throwable =>
           discardStaged()
-          ChangeDataFeed.discardStaged(spark, log, cdcActions)
           releaseJoin()
           throw e
       }
@@ -648,7 +643,6 @@ final class MergeBuilder private[delta] (
           // staged rewrite files and CDC dirs are referenced only by the
           // failed commit — reclaim them (vacuum never will)
           discardStaged()
-          ChangeDataFeed.discardStaged(spark, log, cdcActions)
           releaseJoin()
           throw e
       }

@@ -406,6 +406,32 @@ class ChangeDataFeedSpec extends AnyFunSuite with SparkTestBase {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(full == Set((1L, "update_preimage", 1L), (1L, "update_postimage", 1L),
       (9L, "insert", 2L)))
+
+    // a PARTITIONED foreign table: delta-spark writes change files under
+    // `_change_data/<partition dirs>/` without the partition column, whose
+    // value rides the cdc action's partitionValues
+    val dirQ = tempTable("cdf-foreign-part")
+    val partSchemaStr =
+      """{\"type\":\"struct\",\"fields\":[{\"name\":\"id\",\"type\":\"long\",\"nullable\":true,\"metadata\":{}},{\"name\":\"v\",\"type\":\"string\",\"nullable\":true,\"metadata\":{}},{\"name\":\"p\",\"type\":\"integer\",\"nullable\":true,\"metadata\":{}}]}"""
+    val mdQ =
+      s"""{"metaData":{"id":"aaaaaaaa-0000-4000-8000-000000000002","format":{"provider":"parquet","options":{}},"schemaString":"$partSchemaStr","partitionColumns":["p"],"configuration":{"delta.enableChangeDataFeed":"true"},"createdTime":1}}"""
+    val q0 = onePart(Seq((0L, "a"), (1L, "b")).toDF("id", "v"),
+      dirQ.resolve("p=1/part-00000-foreign.snappy.parquet"))
+    LogFixtures.writeCommit(dirQ, 0, Seq(
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":4}}""", mdQ,
+      s"""{"add":{"path":"p=1/part-00000-foreign.snappy.parquet","partitionValues":{"p":"1"},"size":$q0,"modificationTime":2,"dataChange":true}}"""))
+    val q1 = onePart(Seq((0L, "a")).toDF("id", "v"),
+      dirQ.resolve("p=1/part-00001-foreign.snappy.parquet"))
+    val cq = onePart(Seq((1L, "b", "delete")).toDF("id", "v", "_change_type"),
+      dirQ.resolve("_change_data/p=1/cdc-00000-foreign.c000.snappy.parquet"))
+    LogFixtures.writeCommit(dirQ, 1, Seq(
+      """{"remove":{"path":"p=1/part-00000-foreign.snappy.parquet","deletionTimestamp":3,"dataChange":true}}""",
+      s"""{"add":{"path":"p=1/part-00001-foreign.snappy.parquet","partitionValues":{"p":"1"},"size":$q1,"modificationTime":4,"dataChange":true}}""",
+      s"""{"cdc":{"path":"_change_data/p=1/cdc-00000-foreign.c000.snappy.parquet","partitionValues":{"p":"1"},"size":$cq,"dataChange":false}}"""))
+    val chQ = DeltaTable.forPath(spark, dirQ.toString).changes(0, 1)
+      .select("id", "v", "p", "_change_type").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.get(2), r.getString(3))).toSet
+    assert(chQ == Set((1L, "b", 1, "delete")))
   }
 
   test("adds-only commits carrying DV pointers subtract them from the insert feed (r11)") {

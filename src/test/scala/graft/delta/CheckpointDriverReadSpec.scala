@@ -1,13 +1,10 @@
 package graft.delta
 
 import java.nio.file.{Files, Paths}
-import java.util.UUID
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Row, SaveMode}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -17,49 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * any below-threshold load, the same actions as the Spark-job read it
   * replaced (kept here only as the parity oracle), and each file decoded
   * under its own footer schema. */
-class CheckpointDriverReadSpec extends AnyFunSuite with SparkTestBase {
+class CheckpointDriverReadSpec extends AnyFunSuite with SparkTestBase with JobCounting {
   import LogFixtures.tempTable
   import spark.implicits._
-
-  private val MarkerKey = "graft.test.jobMarker"
-
-  /** Counts job starts; a job tagged with [[MarkerKey]] is a flush marker,
-    * not counted. */
-  private final class JobCounter extends SparkListener {
-    val jobs = new AtomicInteger
-    @volatile var lastMarker: String = _
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty(MarkerKey))) match {
-        case Some(m) => lastMarker = m
-        case None => jobs.incrementAndGet()
-      }
-  }
-
-  /** The listener bus is asynchronous: run a tagged marker job and wait
-    * until the counter has seen it, so every earlier job start is counted. */
-  private def flush(c: JobCounter): Unit = {
-    val sc = spark.sparkContext
-    val m = UUID.randomUUID().toString
-    sc.setLocalProperty(MarkerKey, m)
-    try sc.parallelize(Seq(1), 1).count()
-    finally sc.setLocalProperty(MarkerKey, null)
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (c.lastMarker != m && System.nanoTime() < deadline) Thread.sleep(5)
-    assert(c.lastMarker == m, "listener bus did not deliver the marker job")
-  }
-
-  /** Spark jobs submitted while `body` runs, and its result. */
-  private def jobsDuring[A](body: => A): (Int, A) = {
-    val c = new JobCounter
-    spark.sparkContext.addSparkListener(c)
-    try {
-      flush(c)
-      c.jobs.set(0)
-      val out = body
-      flush(c)
-      (c.jobs.get, out)
-    } finally spark.sparkContext.removeSparkListener(c)
-  }
 
   /** The replaced read: one Spark parquet job over all files, first file's
     * schema. Parity oracle only. */

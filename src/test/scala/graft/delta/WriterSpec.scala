@@ -123,26 +123,25 @@ class WriterSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("executor-side stats path produces identical Adds to the driver pool") {
-    // same data written through both stats paths: threshold 1 forces the
-    // distributed footer-stats job; default keeps the driver pool
-    val viaJob = tempTable("wr-stats-exec").toString
-    val viaPool = tempTable("wr-stats-pool").toString
-    val df = sampleDF(0 until 200).repartition(8)
+    // a write's tasks read their own footers; CONVERT's collectStats reads
+    // them in a distributed job at or above the threshold (1 here) and on
+    // the driver pool below it — all three must agree file by file
+    val dir = tempTable("wr-stats-exec").toString
+    GraftWriter.write(sampleDF(0 until 200).repartition(8), dir)
+    val files = DeltaTable.forPath(spark, dir).files
+    val rels = files.map(_.path)
+    val tablePath = new org.apache.hadoop.fs.Path(dir)
+    val conf = spark.sessionState.newHadoopConf()
     spark.conf.set("spark.graft.write.statsExecutorThreshold", "1")
-    try GraftWriter.write(df, viaJob)
-    finally spark.conf.unset("spark.graft.write.statsExecutorThreshold")
-    GraftWriter.write(df, viaPool)
-
-    // file names are write-unique UUIDs, so compare the multisets of
-    // per-file stats rather than path-aligned lists
-    def statsOf(dir: String) =
-      DeltaTable.forPath(spark, dir).files.flatMap(_.stats).flatMap(ActionCodec.statsFromJson)
-    val (a, b) = (statsOf(viaJob), statsOf(viaPool))
-    assert(a.nonEmpty && a.size == b.size)
-    assert(a.map(_.numRecords).sorted == b.map(_.numRecords).sorted)
-    assert(a.map(_.minValues("id").asLong).sorted == b.map(_.minValues("id").asLong).sorted)
-    assert(a.map(_.maxValues("id").asLong).sorted == b.map(_.maxValues("id").asLong).sorted)
-    assert(DeltaTable.forPath(spark, viaJob).statistics.numRecords.contains(200L))
+    val viaJob =
+      try GraftWriter.collectStats(spark, tablePath, rels, conf)
+      finally spark.conf.unset("spark.graft.write.statsExecutorThreshold")
+    val viaPool = GraftWriter.collectStats(spark, tablePath, rels, conf)
+    val viaTasks = files.map(a => a.path -> a.stats.get).toMap
+    assert(rels.size > 1)
+    assert(viaJob == viaPool)
+    assert(viaPool == viaTasks)
+    assert(DeltaTable.forPath(spark, dir).statistics.numRecords.contains(200L))
   }
 
   test("SaveMode semantics: ErrorIfExists, Ignore, Append, Overwrite (action.rs:806-815)") {
