@@ -62,7 +62,9 @@ object GraftWriter {
             // progress mark (a TxnAction high-water mark that rides the
             // data commit; a separate mark commit would re-apply the batch
             // on a crash between the two). Same idiom as the streaming
-            // sink's epoch TxnAction.
+            // sink's epoch TxnAction. A DomainMetadataAction here lifts
+            // the protocol to declare the domainMetadata writer feature in
+            // the same commit.
             extraActions: Seq[Action] = Nil,
             // (appId, version): refuse the write unless the table's
             // current TxnAction mark for appId is exactly version. The
@@ -334,6 +336,14 @@ object GraftWriter {
       require(part.isEmpty,
         s"partition column(s) ${part.mkString(",")} cannot also cluster")
     }
+    // writer features the commit's domains need: a clusterBy declaration
+    // writes delta.clustering, and a domain among extraActions needs
+    // domainMetadata declared in this same commit
+    val domainFeatures =
+      if (clusterBy.nonEmpty) Seq("domainMetadata", "clustering")
+      else if (extraActions.exists(_.isInstanceOf[DomainMetadataAction]))
+        Seq("domainMetadata")
+      else Nil
     if (!exists) {
       val (schemaJson, cfg, (fr, fw)) = createMapping match {
         case Some((annSchema, annConfig, floor)) =>
@@ -345,15 +355,12 @@ object GraftWriter {
       // legacy floor — generated/identity column floors, DV / v2
       // checkpoints / ICT / variant features — all folded by configFences
       // into ONE protocol action, so a table born with checkpointPolicy=v2
-      // does not crash its first auto-checkpoint. A clusterBy declaration
-      // folds its writer-feature fence into the SAME action (two protocol
-      // actions in one commit would last-write-wins race).
-      val baseProto = ProtocolSupport.configFences(cfg, ProtocolAction(fr, fw),
-        Some(df.schema))
-      txn.addAction(
-        if (clusterBy.isEmpty) baseProto
-        else ProtocolSupport.writerFeaturesFence(baseProto,
-          Seq("domainMetadata", "clustering")))
+      // does not crash its first auto-checkpoint. The domain writer
+      // features fold into the SAME action (two protocol actions in one
+      // commit would last-write-wins race).
+      txn.addAction(ProtocolSupport.writerFeaturesFence(
+        ProtocolSupport.configFences(cfg, ProtocolAction(fr, fw), Some(df.schema)),
+        domainFeatures))
       if (clusterBy.nonEmpty) {
         // delta-spark's delta.clustering domain shape, exactly as
         // DeltaTable.clusterBy writes it
@@ -384,23 +391,24 @@ object GraftWriter {
     // commit; strict foreign readers reject a second).
     // the committed configuration/schema may raise the protocol floor —
     // column mapping (replace-with-mapping), deletion vectors, v2/ICT
-    // properties, a variant column arriving via evolution; ONE folded
-    // protocol action carries the combined floor (two would
-    // last-write-wins race)
-    if (exists)
-      evolvedMetadata.foreach { md =>
+    // properties, a variant column arriving via evolution — and so may a
+    // domain in extraActions; ONE folded protocol action carries the
+    // combined floor (two would last-write-wins race)
+    if (exists) {
+      val current = ProtocolAction(snap.minReaderVersion, snap.minWriterVersion,
+        snap.readerFeatures, snap.writerFeatures)
+      val floor = evolvedMetadata.fold(current) { md =>
         val (fr, fw) = createMapping.map(_._3)
           .getOrElse((snap.minReaderVersion, snap.minWriterVersion))
-        val baseR = math.max(snap.minReaderVersion, fr)
-        val baseW = math.max(snap.minWriterVersion, fw)
-        val protoBase = ProtocolAction(baseR, baseW,
-          snap.readerFeatures, snap.writerFeatures)
-        val fenced = ProtocolSupport.configFences(md.configuration, protoBase,
+        ProtocolSupport.configFences(md.configuration,
+          ProtocolAction(math.max(snap.minReaderVersion, fr),
+            math.max(snap.minWriterVersion, fw),
+            snap.readerFeatures, snap.writerFeatures),
           Some(DeltaSchema.fromJson(md.schemaString)))
-        if (fenced != protoBase || baseR > snap.minReaderVersion ||
-            baseW > snap.minWriterVersion)
-          txn.addAction(fenced)
       }
+      val fenced = ProtocolSupport.writerFeaturesFence(floor, domainFeatures)
+      if (fenced != current) txn.addAction(fenced)
+    }
     // CDF images for the overwrite rewrite shape — skipped (loud
     // downstream) when the overwrite also changes the schema
     val cdcActions =

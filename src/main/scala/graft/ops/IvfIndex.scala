@@ -3,8 +3,11 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.delta.{ChangeDataFeed, ColumnMapping, DeltaLog, DeltaTable, Dml,
-  GraftWriter, Merge, PartitionFilter, RemoveAction, TxnAction}
+import scala.jdk.CollectionConverters._
+
+import graft.delta.{ActionCodec, ChangeDataFeed, ColumnMapping, DeltaLog,
+  DeltaTable, Dml, DomainMetadataAction, GraftWriter, Merge, NotATableException,
+  PartitionFilter, RemoveAction, Snapshot, TxnAction}
 
 /** IVF ANN index MAINTAINED AS GRAFT TABLES (r12 verdict #8): the
   * centroids and posting lists live in committed, partitioned delta
@@ -13,7 +16,9 @@ import graft.delta.{ChangeDataFeed, ColumnMapping, DeltaLog, DeltaTable, Dml,
   * grows INCREMENTALLY on append — the index shape a 100 TB corpus needs.
   *
   * Layout under `root`:
-  *  - `root/centroids`  — (cid int, centroid array<float>), |clusters| rows;
+  *  - `root/centroids`  — (cid int, centroid array<float>, n long,
+  *    base_dist double), |clusters| rows; `base_dist` is the cluster's
+  *    mean squared assignment distance at build, the drift baseline;
   *  - `root/postings`   — (id, cluster, vec, ver) PARTITIONED BY cluster,
   *    so a probe's scan prunes to `nProbe/|clusters|` of the files at the
   *    metadata layer (partition pruning), never touching the rest. `ver`
@@ -28,8 +33,15 @@ import graft.delta.{ChangeDataFeed, ColumnMapping, DeltaLog, DeltaTable, Dml,
   *    construction, r15 verdict #7); probes subtract the (small,
   *    broadcast, partition-pruned) set; [[compactTombstones]] amortizes
   *    the physical posting delete and retires the applied markers in ONE
-  *    commit. Pre-r15 indexes keep their separate `root/tombstones` table
-  *    (read-supported, drained by compaction, never appended again).
+  *    commit. The postings table also carries the [[DriftDomain]] metadata
+  *    domain: the per-cluster drift observations of the last
+  *    [[DriftHistory]] refreshes, written by each refresh in its own
+  *    postings commit.
+  *
+  * Every entry point checks the layout first ([[currentLayout]]): an index
+  * built before the build epoch, the inline tombstones, the `ver` column
+  * or the drift baselines is refused — rebuild it with [[build]] or
+  * [[buildFromTable]], which overwrite any older layout at `root`.
   *
   * Two maintenance tiers (r13 verdict #1):
   *  - [[build]]/[[refresh]] take an arbitrary DataFrame — the ad-hoc tier.
@@ -55,8 +67,6 @@ object IvfIndex {
 
   private def centroidsPath(root: String) = s"$root/centroids"
   private def postingsPath(root: String) = s"$root/postings"
-  private def tombstonesPath(root: String) = s"$root/tombstones"
-  private def driftPath(root: String) = s"$root/drift"
 
   /** TxnAction appId carrying the indexed source high-water mark on the
     * postings table (version = last folded source commit). */
@@ -68,8 +78,7 @@ object IvfIndex {
     * concurrent re-cluster therefore aborts (StaleAppVersionException or
     * the same-appId conflict) instead of appending rows into a cluster
     * whose centroid was just retired — rows no probe would ever rank (r15
-    * review). Builds stamp 0; pre-r15 posting tables convert on their
-    * first refresh. */
+    * review). Every build stamps 0. */
   private[ops] val LayoutEpochApp = "graft.ivf.layoutEpoch"
   /** Postings-table configuration keys binding the index to its source. */
   private[ops] val SourcePathKey = "graft.ivf.sourcePath"
@@ -78,7 +87,8 @@ object IvfIndex {
   /** Build-epoch stamp shared by the centroids and postings tables: a
     * rebuild writes them in two commits, and a crash between the two
     * leaves cluster ids denoting DIFFERENT regions — mixed state must
-    * refuse to serve, not silently collapse recall (r14 review). */
+    * refuse to serve, not silently collapse recall (r14 review). Both
+    * tables must carry it, with equal values ([[currentLayout]]). */
   private[ops] val EpochKey = "graft.ivf.epoch"
   /** Postings-table configuration key marking the int8-QUANTIZED layout
     * (value "int8", r16 verdict #3): every posting row also carries
@@ -93,49 +103,42 @@ object IvfIndex {
   /** Postings-table configuration key marking the single-table LSM layout
     * (value "inline"): tombstones are rows of the reserved
     * `cluster = [[TombstoneCluster]]` partition, committed atomically with
-    * post-images and the mark (r15 verdict #7). Absent on pre-r15 indexes,
-    * which keep the separate tombstones table. */
+    * post-images and the mark (r15 verdict #7). Required on every index. */
   private[ops] val LayoutKey = "graft.ivf.tombstoneLayout"
   /** The reserved posting partition holding tombstone rows. Never a real
     * cluster id: build cids start at 1 (row_number) and splits mint above
     * the current max, so no probe set, heal, or re-cluster can name it. */
   private[ops] val TombstoneCluster = -1
+  /** Postings-table metadata domain holding the drift telemetry (r15
+    * verdict #3): `{"refreshes": [[[cid, n, mean_dist], …], …]}`, one entry
+    * per refresh that assigned vectors, NEWEST FIRST, each listing only the
+    * clusters that refresh touched — `n` vectors at mean squared distance
+    * `mean_dist` to their centroid. A refresh writes it in the same
+    * postings commit as its rows and marks, so an observation exists iff
+    * its fold committed; every build writes it empty. */
+  private[ops] val DriftDomain = "graft.ivf.drift"
+  /** How many refreshes [[DriftDomain]] keeps — the largest
+    * `recentRefreshes` [[driftReport]] answers. */
+  private[ops] val DriftHistory = 8
 
   private def dotQ(a: String, b: String) =
     graft.functions.functions.dot_q(col(a), col(b))
 
   /** Full (re)build from an arbitrary frame: k-means-lite assignment, then
-    * commit all three tables. Overwrites any previous index at `root`.
-    * `ver` stamps 0 on every row — an unbound index has no source clock.
-    *
-    * Refused over LIVE LEGACY tombstones (r14 review): the fresh ver=0
-    * rows would be killed by any stale tombstone in the separate pre-r15
-    * table, whose reset is a different commit from the postings overwrite —
-    * a crash or concurrent probe there silently hides re-indexed ids, and
-    * a compaction physically deletes them. INLINE tombstones carry no such
-    * hazard: the postings overwrite replaces them atomically with the new
-    * rows. A `buildFromTable` rebuild is arithmetic-safe for legacy
-    * residue too (ver = V ≥ every kill version) — compact first, or
-    * rebuild bound. */
+    * commit the two tables — the centroids, then the postings with the
+    * build epoch, the layout epoch and an empty [[DriftDomain]]. Overwrites
+    * any previous index at `root`, in whatever layout. `ver` stamps 0 on
+    * every row — an unbound index has no source clock. */
   def build(spark: SparkSession, vectors: DataFrame, idCol: String,
             vecCol: String, root: String, nClusters: Int = 16,
-            kmeansIters: Int = 3, quantize: Boolean = false): Unit = {
-    legacyTombstones(spark, root).foreach { t =>
-      require(t.isEmpty,
-        s"index at $root carries live tombstones in its pre-r15 separate " +
-        "table: an unbound rebuild stamps ver=0, which stale tombstones " +
-        "would kill — run compactTombstones first or rebuild with " +
-        "buildFromTable")
-    }
+            kmeansIters: Int = 3, quantize: Boolean = false): Unit =
     buildInternal(spark, vectors, idCol, vecCol, root, nClusters,
       kmeansIters, ver = 0L, binding = Map.empty, mark = Nil,
       quantize = quantize)
-  }
 
-  /** The postings table's current layout epoch (absent on pre-r15 tables). */
-  private def layoutEpochOf(spark: SparkSession, root: String): Option[Long] =
-    DeltaLog.forPath(spark, postingsPath(root)).update()
-      .appTransactionVersion.get(LayoutEpochApp)
+  /** The layout epoch of a postings snapshot — every build stamps 0. */
+  private def layoutEpochOf(snap: Snapshot): Long =
+    snap.appTransactionVersion.getOrElse(LayoutEpochApp, 0L)
 
   /** Full (re)build BOUND to a source graft table (must have
     * `delta.enableChangeDataFeed=true` for [[refreshFromSource]] to work):
@@ -148,19 +151,6 @@ object IvfIndex {
     val srcLog = DeltaLog.forPath(spark, sourcePath)
     val snap = srcLog.update()
     require(snap.version >= 0, s"no graft table at $sourcePath")
-    // stale LEGACY tombstones are arithmetic-safe only against the SAME
-    // source clock (every kill ≤ V): a REBIND to a younger source would
-    // leave kill versions above the fresh rows' ver, hiding them exactly
-    // like the ver=0 hazard build() refuses (r14 review). Inline
-    // tombstones need no check — the postings overwrite wipes them in the
-    // same commit that lands the fresh rows.
-    legacyTombstones(spark, root).foreach { t =>
-      val maxKill = t.agg(max("kill_ver")).first()
-      require(maxKill.isNullAt(0) || maxKill.getLong(0) <= snap.version,
-        s"index at $root carries tombstones with kill versions above the " +
-        s"source's version ${snap.version} (rebinding to a younger " +
-        "source?) — compactTombstones first")
-    }
     // read the rows AT the marked version: an unpinned read races a
     // concurrent source commit, which would be indexed here AND re-folded
     // by the first refresh — duplicate live rows (r14 review)
@@ -207,7 +197,7 @@ object IvfIndex {
     // without ever re-scanning the index
     val centsOut = centroidsWithBaselines(assigned, cents)
     // ONE epoch stamps both tables; a crash between the two overwrites
-    // leaves them differing, which checkEpoch turns into a loud refusal
+    // leaves them differing, which currentLayout turns into a loud refusal
     // instead of silent mixed-clustering recall collapse (r14 review)
     val epoch = java.util.UUID.randomUUID().toString
     def exists(p: String) = DeltaLog.forPath(spark, p).update().version >= 0
@@ -216,7 +206,10 @@ object IvfIndex {
       configuration = Some(Map(EpochKey -> epoch)))
     // the binding + mark ride the postings commit; on a REBUILD of a bound
     // index the overwrite re-stamps both (configuration only applies at
-    // create/replace, hence overwriteSchema when the table exists)
+    // create/replace, hence overwriteSchema when the table exists). The
+    // empty drift domain rides it too: it resets the history (the
+    // baselines it compares against were just recomputed) and declares
+    // the domainMetadata writer feature in the same commit
     // the vec field is forced NULLABLE in the table schema: tombstone rows
     // (inline, cluster = TombstoneCluster) carry vec = null, and a source
     // whose vectors happened to arrive non-nullable must not wedge the
@@ -240,45 +233,8 @@ object IvfIndex {
       configuration = Some(binding +
         (EpochKey -> epoch) + (LayoutKey -> "inline") ++
         (if (quantize) Map(QuantKey -> "int8") else Map.empty)),
-      extraActions = mark :+ TxnAction(LayoutEpochApp, 0L))
-    // a pre-r15 separate tombstones table resets here (its content is dead
-    // by the guards above + the overwrite); fresh roots never create one —
-    // inline tombstones live in the postings table (r15 verdict #7)
-    if (exists(tombstonesPath(root))) {
-      val tombSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          assigned.schema("id").dataType),
-        org.apache.spark.sql.types.StructField("ver",
-          org.apache.spark.sql.types.LongType)))
-      GraftWriter.write(
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          tombSchema),
-        tombstonesPath(root), SaveMode.Overwrite, overwriteSchema = true)
-    }
-    // drift observations reset with the index (the baselines they compare
-    // against were just recomputed). The table is created LAZILY by the
-    // first observation (r18: creating it here was one full commit of pure
-    // fixed cost per build — ~0.3 s of the q79/q80/q85 gates' wall each);
-    // a REBUILD over an existing drift table still resets it, because its
-    // rows compare against baselines this build just replaced.
-    if (exists(driftPath(root)))
-      GraftWriter.write(
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          DriftSchema),
-        driftPath(root), SaveMode.Overwrite, overwriteSchema = true)
+      extraActions = mark :+ TxnAction(LayoutEpochApp, 0L) :+ driftDomain(Nil))
   }
-
-  /** The drift-observation table's schema — shared by the lazy create and
-    * the absent-table read (one definition, r18). */
-  private val DriftSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("ver",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("cid",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("n",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("mean_dist",
-      org.apache.spark.sql.types.DoubleType)))
 
   /** Per-cluster drift baselines joined onto `cents`: (cid, centroid, n,
     * base_dist) where base_dist is the mean squared assignment distance of
@@ -303,24 +259,38 @@ object IvfIndex {
         coalesce(col("base_dist"), lit(0.0)).as("base_dist"))
   }
 
-  /** Refuse an index whose centroids and postings carry DIFFERENT build
-    * epochs — the torn-rebuild state (see [[EpochKey]]). Absent epochs
-    * (pre-epoch layouts) stay accepted. */
-  private def checkEpoch(spark: SparkSession, root: String): Unit = {
-    def cfg(p: String) = DeltaLog.forPath(spark, p).update()
-      .metadata.map(_.configuration).getOrElse(Map.empty[String, String])
-    (cfg(centroidsPath(root)).get(EpochKey),
-     cfg(postingsPath(root)).get(EpochKey)) match {
+  /** The postings snapshot of an index in the CURRENT layout — both
+    * tables stamped with the same [[EpochKey]], inline tombstones and a
+    * `ver` column on the postings, drift baselines on the centroids — or a
+    * loud refusal. Different epochs are the torn-rebuild state; a missing
+    * epoch is a pre-epoch index or a rebuild torn over one. */
+  private def currentLayout(spark: SparkSession, root: String): Snapshot = {
+    val cents = DeltaLog.forPath(spark, centroidsPath(root)).update()
+    val posts = DeltaLog.forPath(spark, postingsPath(root)).update()
+    if (cents.version < 0 || posts.version < 0) throw new NotATableException(root)
+    def cfg(s: Snapshot) = s.metadata.map(_.configuration).getOrElse(Map.empty[String, String])
+    (cfg(cents).get(EpochKey), cfg(posts).get(EpochKey)) match {
       case (Some(a), Some(b)) if a != b => throw new IllegalStateException(
         s"index at $root is torn: centroids epoch $a != postings epoch $b " +
         "(a rebuild crashed between its table overwrites) — rebuild it")
-      case _ => ()
+      case (Some(_), Some(_)) => ()
+      case _ => throw new IllegalStateException(
+        s"index at $root is torn or predates build epochs: a table carries " +
+        s"no $EpochKey — rebuild it")
     }
+    if (!cfg(posts).get(LayoutKey).contains("inline") ||
+        !posts.schema.fieldNames.contains("ver") ||
+        !cents.schema.fieldNames.contains("base_dist"))
+      throw new IllegalStateException(
+        s"index at $root predates the current layout (inline tombstones, " +
+        "posting ver, drift baselines) — rebuild it with build or buildFromTable")
+    posts
   }
 
   /** Ad-hoc incremental append: vectors whose ids the index does not yet
     * hold are assigned to the nearest existing centroid and appended to the
-    * posting table (one commit). Returns how many were appended.
+    * posting table, with the refresh's drift observation, in one commit.
+    * Returns how many were appended.
     *
     * SCALE NOTE: the id dedup is a left-anti join against the FULL posting
     * table — O(postings) per call. Bind the index to a source table
@@ -328,8 +298,7 @@ object IvfIndex {
     * commits) instead (r13 verdict #1). */
   def refresh(spark: SparkSession, vectors: DataFrame, idCol: String,
               vecCol: String, root: String): Long = {
-    checkEpoch(spark, root)
-    val snap = DeltaLog.forPath(spark, postingsPath(root)).update()
+    val snap = currentLayout(spark, root)
     val cfg = snap.metadata.map(_.configuration).getOrElse(Map.empty)
     // a source-bound index must advance through refreshFromSource: an
     // ad-hoc append neither advances the high-water mark (the next CDF
@@ -343,35 +312,26 @@ object IvfIndex {
     // a reclusterCluster would otherwise land rows in a retired cluster —
     // orphans no probe ranks until the next heal (r15 second review; same
     // fence refreshFromSource carries)
-    val layoutV = layoutEpochOf(spark, root)
+    val layoutV = layoutEpochOf(snap)
     val existing = DeltaTable.forPath(spark, postingsPath(root)).toDF.select("id")
     val fresh = vectors.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .join(existing, Seq("id"), "left_anti")
     val assigned = assignFresh(spark, fresh.withColumn("ver", lit(0L)), root)
-    val n = assigned.count()
-    if (n > 0) {
-      // pre-r14 posting tables have no ver column — keep appending to them
-      val frame =
-        if (snap.schema.fieldNames.contains("ver")) assigned.drop("dist")
-        else assigned.drop("ver", "dist")
-      val v = GraftWriter.write(codesIfQuantized(spark, root, frame),
+    // the drift stats pass doubles as the count (one job, not two)
+    val stats = clusterStats(assigned)
+    val n = stats.map(_._2).sum
+    if (n > 0)
+      // drift telemetry for the ad-hoc tier too (r15 second review —
+      // without it driftReport stays permanently inert on unbound indexes)
+      GraftWriter.write(codesIfQuantized(spark, root, assigned.drop("dist")),
         postingsPath(root), SaveMode.Append,
         partitionBy = Seq("cluster"),
-        extraActions = layoutV.map(v => TxnAction(LayoutEpochApp, v)).toSeq,
-        requireAppVersions = layoutV.map((LayoutEpochApp, _)).toSeq)
-      // drift telemetry for the ad-hoc tier too (r15 second review —
-      // without it driftReport stays permanently inert on unbound
-      // indexes); the commit version is the tier's refresh clock
-      appendDriftObs(spark, root, v, assigned)
-    }
+        extraActions = Seq(TxnAction(LayoutEpochApp, layoutV),
+          driftObservation(spark, root, stats)),
+        requireAppVersions = Seq((LayoutEpochApp, layoutV)))
     n
   }
 
-  /** nearest EXISTING centroid via the shared squared-L2 assignment —
-    * same metric as the build's kmeans loop and the probe's cluster
-    * ranking (one definition, Similarity.SqDistExpr). Input (id, vec, ver),
-    * output (id, cluster, vec, ver, dist) materialized — `dist` feeds the
-    * drift telemetry and is dropped before any table write. */
   /** The quantized layout's code columns appended to a posting-row frame:
     * `q8`/`q8_scale` are a PURE per-row function of `vec`
     * ([[Quantize.scalarQuantize]] — max-abs int8, the q60-gated scheme),
@@ -397,6 +357,11 @@ object IvfIndex {
     if (rows.columns.contains("q8") || !isQuantized(spark, root)) rows
     else appendCodes(rows)
 
+  /** nearest EXISTING centroid via the shared squared-L2 assignment —
+    * same metric as the build's kmeans loop and the probe's cluster
+    * ranking (one definition, Similarity.SqDistExpr). Input (id, vec, ver),
+    * output (id, cluster, vec, ver, dist) materialized — `dist` feeds
+    * [[clusterStats]] and is dropped before any table write. */
   private def assignFresh(spark: SparkSession, fresh: DataFrame,
                           root: String): DataFrame = {
     val cents = DeltaTable.forPath(spark, centroidsPath(root)).toDF
@@ -449,11 +414,12 @@ object IvfIndex {
     *    ver = maxKillVersion)` — killing every posting row born strictly
     *    before it (the new post-image row, born AT the kill version,
     *    survives);
-    *  - post-images, tombstones, and the high-water mark TxnAction land in
-    *    ONE posting-table commit (single-table LSM, r15 verdict #7; a bare
-    *    mark commit when the window held neither), so every window is
-    *    folded exactly-once and ATOMICALLY: there is no observable state
-    *    between "window not applied" and "window fully applied".
+    *  - post-images, tombstones, the high-water mark TxnAction and the
+    *    post-images' drift observation land in ONE posting-table commit
+    *    (single-table LSM, r15 verdict #7; a bare mark commit when the
+    *    window held neither), so every window is folded exactly-once and
+    *    ATOMICALLY: there is no observable state between "window not
+    *    applied" and "window fully applied".
     *
     * Reads O(changed commits) — never the posting or source base files.
     * Returns (postingRowsAppended, tombstonesAppended).
@@ -463,22 +429,21 @@ object IvfIndex {
     * a crash after it finds nothing pending. The pre-r15 cross-table
     * window — a crash between the tombstone append and the posting append
     * left an UPDATED id transiently serving neither its old vector nor its
-    * new one — is unrepresentable in this layout (it can still occur on an
-    * unmigrated pre-r15 index, which keeps the two-commit path below).
-    * Concurrent refreshes are safe but not parallel: the mark
-    * precondition on the commit ([[GraftWriter]] requireAppVersion
-    * + the same-appId conflict rule) makes the laggard abort with
+    * new one — is unrepresentable in this layout. Concurrent refreshes
+    * are safe but not parallel: the mark precondition on the commit
+    * ([[GraftWriter]] requireAppVersion + the same-appId conflict rule)
+    * makes the laggard abort with
     * [[graft.delta.StaleAppVersionException]] instead of double-applying
     * its window and regressing the mark. */
   def refreshFromSource(spark: SparkSession, root: String): (Long, Long) = {
-    checkEpoch(spark, root)
+    val postingsSnap = currentLayout(spark, root)
     val binding = bindingOf(spark, root)
     val (_, idCol, vecCol, last) = binding
     // the layout epoch is read BEFORE any centroid read: the posting
     // append below re-asserts it, so a centroid-set change landing
     // anywhere between here and the commit aborts this refresh instead of
     // letting it append into a retired cluster (see LayoutEpochApp)
-    val layoutV = layoutEpochOf(spark, root)
+    val layoutV = layoutEpochOf(postingsSnap)
     pendingWindow(spark, binding) match {
       case None => (0L, 0L)
       case Some((changes, now)) =>
@@ -514,50 +479,29 @@ object IvfIndex {
           count(when(alive, 1))).first()
         val nTombs = sizes.getLong(0)
         val nAdds = sizes.getLong(1)
-        lazy val assigned = assignFresh(spark, adds, root)
-        val markAction = Seq(TxnAction(SourceVersionApp, now))
-        val postingsSnap = DeltaLog.forPath(spark, postingsPath(root)).update()
-        val inline = postingsSnap.metadata
-          .exists(_.configuration.get(LayoutKey).contains("inline"))
-        if (inline && nAdds + nTombs > 0) {
-          // single-table LSM: post-images, tombstone rows, and the mark in
-          // ONE commit — the fold is atomic (r15 verdict #7)
+        val markAction = TxnAction(SourceVersionApp, now)
+        if (nAdds + nTombs > 0) {
+          // single-table LSM: post-images, tombstone rows, the mark and the
+          // drift observation in ONE commit — the fold is atomic (r15
+          // verdict #7), and a refresh that loses its commit records nothing
           val tombRows = tombs.select(col("id"),
             lit(TombstoneCluster).as("cluster"),
             lit(null).cast(postingsSnap.schema("vec").dataType).as("vec"),
             col("ver"))
-          val postRows =
-            if (nAdds == 0) tombRows
-            else assigned.drop("dist").unionByName(tombRows)
+          val (postRows, drift) =
+            if (nAdds == 0) (tombRows, Nil)
+            else {
+              val assigned = assignFresh(spark, adds, root)
+              (assigned.drop("dist").unionByName(tombRows),
+                Seq(driftObservation(spark, root, clusterStats(assigned))))
+            }
           GraftWriter.write(
             codesIfQuantized(spark, root, postRows), postingsPath(root),
             SaveMode.Append,
             partitionBy = Seq("cluster"),
-            extraActions = markAction :+
-              TxnAction(LayoutEpochApp, layoutV.getOrElse(0L)),
+            extraActions = Seq(markAction, TxnAction(LayoutEpochApp, layoutV)) ++ drift,
             requireAppVersion = Some((SourceVersionApp, last)),
-            requireAppVersions = layoutV.map((LayoutEpochApp, _)).toSeq)
-          // drift telemetry AFTER the mark — advisory only, so a crash
-          // loses a drift row, never index state (r15 verdict #3)
-          if (nAdds > 0) appendDriftObs(spark, root, now, assigned)
-        } else if (!inline && nTombs > 0 || !inline && nAdds > 0) {
-          // pre-r15 layout: the legacy two-commit fold (tombstones table
-          // first, postings + mark second) with its documented transient
-          // updated-id window — rebuild to migrate to the atomic layout
-          if (nTombs > 0)
-            GraftWriter.write(tombs, tombstonesPath(root), SaveMode.Append)
-          if (nAdds > 0) {
-            GraftWriter.write(assigned.drop("dist"), postingsPath(root),
-              SaveMode.Append,
-              partitionBy = Seq("cluster"),
-              extraActions = markAction :+
-                TxnAction(LayoutEpochApp, layoutV.getOrElse(0L)),
-              requireAppVersion = Some((SourceVersionApp, last)),
-              requireAppVersions = layoutV.map((LayoutEpochApp, _)).toSeq)
-            appendDriftObs(spark, root, now, assigned)
-          } else {
-            bareMark(spark, root, last, markAction)
-          }
+            requireAppVersions = Seq((LayoutEpochApp, layoutV)))
         } else {
           // no-op window (property commits etc.): advance the mark with a
           // bare metadata commit so later refreshes never re-read this
@@ -572,100 +516,105 @@ object IvfIndex {
     * still-at-`last` precondition — two racing refreshes must serialize,
     * not regress the mark (r14 review). */
   private def bareMark(spark: SparkSession, root: String, last: Long,
-                       markAction: Seq[TxnAction]): Unit = {
+                       markAction: TxnAction): Unit = {
     val log = DeltaLog.forPath(spark, postingsPath(root))
-    val txn = log.startTransaction(log.update())
+    log.startTransaction(log.update())
       .requireAppVersion(SourceVersionApp, last)
-    markAction.foreach(txn.addAction)
-    txn.commit()
-  }
-
-  /** The pre-r15 SEPARATE tombstones table's rows, aggregated to one row
-    * per id — None when that table was never created (every index built at
-    * r15+). Only the rebuild guards consult this alone; probes and
-    * compaction read [[liveTombstones]], which folds both layouts. */
-  private def legacyTombstones(spark: SparkSession,
-                               root: String): Option[DataFrame] = {
-    val log = DeltaLog.forPath(spark, tombstonesPath(root))
-    if (log.update().version < 0) None
-    else Some(DeltaTable.forPath(spark, tombstonesPath(root)).toDF
-      .groupBy("id").agg(max("ver").as("kill_ver")))
+      .addAction(markAction)
+      .commit()
   }
 
   /** The inline tombstone rows — the reserved partition's (id, ver) pairs,
-    * read under partition pruning (never the posting partitions). None on
-    * pre-r15 layouts. */
-  private def inlineTombstoneRows(spark: SparkSession,
-                                  root: String): Option[DataFrame] = {
-    val snap = DeltaLog.forPath(spark, postingsPath(root)).update()
-    if (!snap.metadata.exists(_.configuration.get(LayoutKey).contains("inline")))
-      None
-    else Some(DeltaTable.forPath(spark, postingsPath(root))
+    * read under partition pruning (never the posting partitions). */
+  private def inlineTombstoneRows(spark: SparkSession, root: String): DataFrame =
+    DeltaTable.forPath(spark, postingsPath(root))
       .toDF(Seq(PartitionFilter.Eq("cluster", TombstoneCluster.toString)))
-      .select(col("id"), col("ver")))
+      .select(col("id"), col("ver"))
+
+  /** Live tombstones, one row per id (max kill version wins) — small by
+    * construction between compactions, hence broadcast at the probe. */
+  private def liveTombstones(spark: SparkSession, root: String): DataFrame =
+    inlineTombstoneRows(spark, root).groupBy("id").agg(max("ver").as("kill_ver"))
+
+  /** One refresh's drift observation: (cid, n, mean_dist) per cluster it
+    * touched, cid-ordered. */
+  private type Observation = Seq[(Int, Long, Double)]
+
+  /** Per-cluster (cid, n, mean dist) of a refresh's assigned rows — ONE
+    * job over the checkpointed frame: each task folds its rows into a
+    * k-entry map and the driver merges the maps (a grouped aggregate is a
+    * shuffle-map job plus a result job). A null `dist` (null vector)
+    * counts toward `n` but not the mean, as SQL `avg` would have it. */
+  private def clusterStats(assigned: DataFrame): Observation = {
+    type Acc = Map[Int, (Long, Double, Long)] // cid -> (n, dist sum, non-null dists)
+    def add(m: Acc, cid: Int, v: (Long, Double, Long)): Acc = {
+      val (n, s, d) = m.getOrElse(cid, (0L, 0.0, 0L))
+      m.updated(cid, (n + v._1, s + v._2, d + v._3))
+    }
+    assigned.select("cluster", "dist").rdd
+      .aggregate(Map.empty: Acc)(
+        (m, r) => add(m, r.getInt(0),
+          if (r.isNullAt(1)) (1L, 0.0, 0L) else (1L, r.getDouble(1), 1L)),
+        (a, b) => b.foldLeft(a) { case (m, (cid, v)) => add(m, cid, v) })
+      .toSeq.sortBy(_._1)
+      .map { case (cid, (n, s, d)) => (cid, n, if (d == 0) 0.0 else s / d) }
   }
 
-  /** Live tombstones across BOTH layouts (inline partition ∪ any pre-r15
-    * separate-table residue), one row per id (max kill version wins) —
-    * small by construction between compactions, hence broadcast at the
-    * probe. None only on a pre-r14 index (neither layout present). */
-  private def liveTombstones(spark: SparkSession, root: String): Option[DataFrame] = {
-    val inline = inlineTombstoneRows(spark, root)
-    val legacyLog = DeltaLog.forPath(spark, tombstonesPath(root))
-    val legacy =
-      if (legacyLog.update().version < 0) None
-      else Some(DeltaTable.forPath(spark, tombstonesPath(root)).toDF)
-    val both = inline.toSeq ++ legacy.toSeq
-    if (both.isEmpty) None
-    else Some(both.reduce(_ unionByName _)
-      .groupBy("id").agg(max("ver").as("kill_ver")))
+  /** The [[DriftDomain]] history of a postings snapshot, newest first;
+    * empty when the domain is absent (an index no refresh has observed). */
+  private def driftHistory(snap: Snapshot): Seq[Observation] =
+    snap.domainMetadata.get(DriftDomain).toSeq.flatMap { json =>
+      ActionCodec.mapper.readTree(json).get("refreshes").asScala.map(_.asScala
+        .map(o => (o.get(0).asInt, o.get(1).asLong, o.get(2).asDouble)).toSeq)
+    }
+
+  /** The [[DriftDomain]] action carrying `history` (newest first), cut to
+    * the last [[DriftHistory]] refreshes. */
+  private def driftDomain(history: Seq[Observation]): DomainMetadataAction = {
+    val json = ActionCodec.mapper.createObjectNode()
+    val refreshes = json.putArray("refreshes")
+    history.take(DriftHistory).foreach { obs =>
+      val r = refreshes.addArray()
+      obs.foreach { case (cid, n, d) => r.addArray().add(cid).add(n).add(d) }
+    }
+    DomainMetadataAction(DriftDomain, ActionCodec.mapper.writeValueAsString(json))
   }
 
-  /** One (ver, cid, n, mean_dist) row per cluster the refresh touched —
-    * the stats the refresh computed anyway. The table is CREATED by the
-    * first observation (r18 — see buildInternal); pre-r15 layouts, whose
-    * centroids carry no drift baselines for the report to compare against,
-    * keep skipping silently. */
-  private def appendDriftObs(spark: SparkSession, root: String, ver: Long,
-                             assigned: DataFrame): Unit = {
-    if (DeltaLog.forPath(spark, driftPath(root)).update().version < 0 &&
-        !DeltaLog.forPath(spark, centroidsPath(root)).update()
-          .schema.fieldNames.contains("base_dist")) return
-    val obs = assigned
-      .groupBy(col("cluster").as("cid"))
-      .agg(count(lit(1)).as("n"), avg("dist").as("mean_dist"))
-      .select(lit(ver).as("ver"), col("cid"), col("n"), col("mean_dist"))
-    GraftWriter.write(obs.coalesce(1), driftPath(root), SaveMode.Append)
-  }
+  /** `obs` pushed onto the postings table's drift history — the domain
+    * action a refresh commits with its rows. The history is read right
+    * before the write, whose transaction then conflicts on any later
+    * same-domain commit; a bound refresh's mark precondition also fences
+    * every other refresh. */
+  private def driftObservation(spark: SparkSession, root: String,
+                               obs: Observation): DomainMetadataAction =
+    driftDomain(obs +: driftHistory(
+      DeltaLog.forPath(spark, postingsPath(root)).update()))
 
   /** Per-cluster drift report (r15 verdict #3): the build-time baseline
     * mean assignment distance vs the weighted mean over the most recent
-    * `recentRefreshes` refreshes' observations. `ratio` > ~2 with a
+    * `recentRefreshes` refreshes' observations (refreshes that assigned
+    * vectors; delete-only windows observe nothing). `ratio` > ~2 with a
     * non-trivial `recent_n` means arriving vectors no longer fit the
     * cluster's build-time region — recall at a fixed nProbe decays
     * silently; [[reclusterCluster]] repairs the flagged cluster in
-    * O(cluster), not O(index). Reads k + O(refreshes) rows — never the
-    * postings. Columns: (cid, n, base_dist, recent_n, recent_dist, ratio);
-    * ratio is null for clusters with no recent arrivals or a zero
-    * baseline. */
+    * O(cluster), not O(index). Reads k centroid rows and the
+    * [[DriftDomain]] — never the postings. Columns: (cid, n, base_dist,
+    * recent_n, recent_dist, ratio); ratio is null for clusters with no
+    * recent arrivals or a zero baseline.
+    *
+    * The domain keeps the last [[DriftHistory]] (8) refreshes, so
+    * `recentRefreshes` above 8 is refused rather than answered from a
+    * truncated history. */
   def driftReport(spark: SparkSession, root: String,
                   recentRefreshes: Int = 5): DataFrame = {
-    checkEpoch(spark, root)
+    import spark.implicits._
+    require(recentRefreshes <= DriftHistory,
+      s"driftReport keeps the last $DriftHistory refreshes; " +
+      s"recentRefreshes = $recentRefreshes is beyond that history")
+    val history = driftHistory(currentLayout(spark, root))
     val cents = DeltaTable.forPath(spark, centroidsPath(root)).toDF
-    require(cents.columns.contains("base_dist"),
-      s"index at $root predates drift baselines — rebuild it to enable " +
-      "drift detection")
-    // absent = created lazily by the first observation (r18): a fresh
-    // index that has never been refreshed reports no recent arrivals,
-    // exactly like the old empty table did
-    val drift =
-      if (DeltaLog.forPath(spark, driftPath(root)).update().version < 0)
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), DriftSchema)
-      else DeltaTable.forPath(spark, driftPath(root)).toDF
-    val recentVers = drift.select("ver").distinct()
-      .orderBy(col("ver").desc).limit(recentRefreshes)
-    val recent = drift.join(broadcast(recentVers), Seq("ver"))
+    val recent = history.take(recentRefreshes).flatten
+      .toDF("cid", "n", "mean_dist")
       .groupBy("cid")
       .agg((sum(col("mean_dist") * col("n")) / sum(col("n"))).as("recent_dist"),
         sum("n").as("recent_n"))
@@ -686,16 +635,18 @@ object IvfIndex {
     *     first, so a retry cannot leave centroid rows that consume probe
     *     slots in the hot region forever (r15 review);
     *  1. append the `nSplit` fresh centroid rows (new cids above the
-    *     current max) with their own drift baselines — the old centroid
-    *     row STAYS, so rows still in the old partition remain probeable;
+    *     current max and above every cid the [[DriftDomain]] names, so a
+    *     new cluster never inherits a retired one's observations) with
+    *     their own drift baselines — the old centroid row STAYS, so rows
+    *     still in the old partition remain probeable;
     *  2. move the cluster's LIVE posting rows to their new clusters in ONE
     *     commit that also bumps the layout epoch (tombstoned rows drop — a
     *     free partial compaction);
-    *  3. retire the old centroid row and its drift telemetry, then bump
-    *     the layout epoch again — a refresh that read centroids between 2
-    *     and 3 aborts at its commit instead of landing rows in the retired
-    *     cluster. (One that commits inside the tiny 3→bump window leaves
-    *     orphan rows; the next [[healLayout]] re-homes them.)
+    *  3. retire the old centroid row, then bump the layout epoch again —
+    *     a refresh that read centroids between 2 and 3 aborts at its
+    *     commit instead of landing rows in the retired cluster. (One
+    *     that commits inside the tiny 3→bump window leaves orphan rows;
+    *     the next [[healLayout]] re-homes them.)
     * Returns the new cids (empty when the cluster had no live rows). */
   def reclusterCluster(spark: SparkSession, root: String, cid: Int,
                        nSplit: Int = 2, kmeansIters: Int = 3): Seq[Int] =
@@ -710,7 +661,7 @@ object IvfIndex {
   private def reclusterImpl(spark: SparkSession, root: String, cid: Int,
                             nSplit: Int, kmeansIters: Int,
                             heal: Boolean): Seq[Int] = {
-    checkEpoch(spark, root)
+    currentLayout(spark, root)
     require(nSplit >= 2, s"nSplit must be >= 2, got $nSplit")
     require(cid >= 0,
       s"cluster $cid is the reserved tombstone partition, not a cluster")
@@ -729,8 +680,12 @@ object IvfIndex {
       bumpLayout(spark, root)
       return Nil
     }
-    val maxCid = DeltaTable.forPath(spark, centroidsPath(root)).toDF
-      .agg(max("cid")).first().getInt(0)
+    // mint above every cid the drift domain still names as well: a retired
+    // cid's observations must never pass to a new cluster
+    val observed = driftHistory(DeltaLog.forPath(spark, postingsPath(root))
+      .update()).flatten.map(_._1)
+    val maxCid = (observed :+ DeltaTable.forPath(spark, centroidsPath(root)).toDF
+      .agg(max("cid")).first().getInt(0)).max
     val sub = Similarity.kmeansAssign(live, "id", "vec", nSplit, kmeansIters)
     val moved = live.select("id", "vec", "ver")
       .join(sub.select(col("id"),
@@ -752,7 +707,7 @@ object IvfIndex {
     val oldFiles = PartitionFilter.prune(dt.snapshot.files,
       Seq(PartitionFilter.Eq("cluster", cid.toString)))
     moveRows(spark, root, oldFiles, moved, Seq(cid))
-    // 3. retire the old centroid + its telemetry, fence once more
+    // 3. retire the old centroid, fence once more
     retireCentroids(spark, root, Seq(cid))
     bumpLayout(spark, root)
     newCids
@@ -775,9 +730,9 @@ object IvfIndex {
     val txn = log.startTransaction(snap) // pinned: removes planned from snap
       .withReadFilters(Seq(PartitionFilter.In("cluster",
         readClusters.map(_.toString).toSet)))
-    val cur = snap.appTransactionVersion.get(LayoutEpochApp)
-    cur.foreach(v => txn.requireAppVersion(LayoutEpochApp, v))
-    txn.addAction(TxnAction(LayoutEpochApp, cur.getOrElse(0L) + 1L))
+    val cur = layoutEpochOf(snap)
+    txn.requireAppVersion(LayoutEpochApp, cur)
+    txn.addAction(TxnAction(LayoutEpochApp, cur + 1L))
     removeFiles.foreach(f => txn.addAction(RemoveAction(
       path = f.path, deletionTimestamp = nowMs, dataChange = true,
       extendedFileMetadata = Some(true),
@@ -797,25 +752,21 @@ object IvfIndex {
   private def bumpLayout(spark: SparkSession, root: String): Unit = {
     val log = DeltaLog.forPath(spark, postingsPath(root))
     val pinSnap = log.update()
-    val cur = pinSnap.appTransactionVersion.get(LayoutEpochApp)
-    val txn = log.startTransaction(pinSnap)
-    cur.foreach(v => txn.requireAppVersion(LayoutEpochApp, v))
-    txn.addAction(TxnAction(LayoutEpochApp, cur.getOrElse(0L) + 1L))
-    txn.commit()
+    val cur = layoutEpochOf(pinSnap)
+    log.startTransaction(pinSnap)
+      .requireAppVersion(LayoutEpochApp, cur)
+      .addAction(TxnAction(LayoutEpochApp, cur + 1L))
+      .commit()
   }
 
-  /** Retire centroid rows together with their drift observations — a
-    * retired cid may be re-minted by a later split, which must not inherit
-    * a dead cluster's telemetry (r15 review). */
+  /** Delete retired clusters' centroid rows. Their drift observations
+    * stay in the [[DriftDomain]] until they age out, and no split re-mints
+    * a cid the domain names, so a later cluster never inherits a dead
+    * cluster's telemetry (r15 review). */
   private def retireCentroids(spark: SparkSession, root: String,
-                              cids: Seq[Int]): Unit = {
-    if (cids.isEmpty) return
+                              cids: Seq[Int]): Unit =
     Dml.delete(spark, centroidsPath(root),
       col("cid").isin(cids.map(Int.box): _*))
-    if (DeltaLog.forPath(spark, driftPath(root)).update().version >= 0)
-      Dml.delete(spark, driftPath(root),
-        col("cid").isin(cids.map(Int.box): _*))
-  }
 
   /** Repair the benign-but-wasteful states a crashed or raced re-cluster
     * can leave (r15 review): GHOST centroids — centroid rows whose cluster
@@ -823,15 +774,13 @@ object IvfIndex {
     * move; also legitimately-empty build clusters, whose removal is
     * harmless) — and ORPHAN postings — posting files in a cluster with no
     * centroid row (a refresh that raced a retirement into the tiny
-    * unfenced window). Ghost rows delete with their drift telemetry;
-    * orphan rows re-assign to the CURRENT centroids and move in one
-    * commit. Every change bumps the layout epoch, so racing refreshes and
+    * unfenced window). Ghost rows are deleted; orphan rows re-assign to
+    * the CURRENT centroids and move in one commit. Every change bumps the layout epoch, so racing refreshes and
     * re-clusters abort loudly and retry against the healed layout. Runs at
     * the start of every [[reclusterCluster]]; also callable on a
     * maintenance cadence. Returns (ghostCentroidsRemoved, orphanRowsMoved). */
   def healLayout(spark: SparkSession, root: String): (Long, Long) = {
-    checkEpoch(spark, root)
-    val snap = DeltaLog.forPath(spark, postingsPath(root)).update()
+    val snap = currentLayout(spark, root)
     val populated = snap.files
       .flatMap(_.partitionValues.get("cluster")).map(_.toInt).toSet
       .filter(_ >= 0) // the reserved tombstone partition is never a cluster
@@ -890,8 +839,7 @@ object IvfIndex {
                recentRefreshes: Int = 5,
                nSplit: Int = 2,
                kmeansIters: Int = 3): Maintenance = {
-    checkEpoch(spark, root)
-    val (ghosts, orphans) = healLayout(spark, root)
+    val (ghosts, orphans) = healLayout(spark, root) // checks the layout first
     // k rows at most — driver-bounded like every centroid read here
     val hot = driftReport(spark, root, recentRefreshes)
       .filter(col("ratio").isNotNull && col("ratio") >= lit(ratioThreshold) &&
@@ -916,50 +864,32 @@ object IvfIndex {
   }
 
   /** Physically apply the tombstones to the posting table (one MERGE — the
-    * amortized full-scan moment of the LSM shape). On the inline layout
-    * the SAME merge commit also retires exactly the applied marker rows
-    * (a marker is a target row of the reserved partition with
-    * ver ≤ its id's kill), so apply-and-retire is ATOMIC — a tombstone
-    * appended by a concurrent refresh mid-merge carries a newer kill
-    * version, matches nothing, and survives to the next compaction. A
-    * pre-r15 separate-table residue is applied by the same merge and then
-    * drained by MERGE-deleting its SUBSUMED rows (never an empty
-    * overwrite, whose removes would destroy a concurrent never-applied
-    * tombstone without a conflict — r14 review). Probe results are
-    * identical before and after; this exists to reclaim space and keep
+    * amortized full-scan moment of the LSM shape). The SAME merge commit
+    * also retires exactly the applied marker rows (a marker is a target
+    * row of the reserved partition with ver ≤ its id's kill), so
+    * apply-and-retire is ATOMIC — a tombstone appended by a concurrent
+    * refresh mid-merge carries a newer kill version, matches nothing, and
+    * survives to the next compaction. Probe results are identical before
+    * and after; this exists to reclaim space and keep
     * the probe's broadcast side small. Returns how many posting rows were
     * deleted (marker retirements excluded; under a racing refresh the
     * count is best-effort, the row outcomes exact). */
   def compactTombstones(spark: SparkSession, root: String): Long = {
-    liveTombstones(spark, root) match {
-      case None => 0L
-      case Some(t) =>
-        val tombs = t.localCheckpoint(true) // merge + the reset guard read it
-        if (tombs.isEmpty) return 0L
-        // markers retired by the merge below — counted up front so the
-        // return value stays "posting rows deleted" (inline-less layouts
-        // count 0 here)
-        val nMarkers = inlineTombstoneRows(spark, root)
-          .map(_.count()).getOrElse(0L)
-        val m = Merge.into(spark, postingsPath(root), tombs,
-            col("t.id") === col("s.id") &&
-              (col("t.ver") < col("s.kill_ver") ||
-                (col("t.cluster") === lit(TombstoneCluster) &&
-                  col("t.ver") === col("s.kill_ver"))))
-          .whenMatchedDelete()
-          .execute()
-        // pre-r15 residue: drain exactly the SUBSUMED rows (ver ≤ the kill
-        // just applied). Matched rows are pinned by `tombs`; concurrent
-        // rows survive to the next compaction. Duplicate target rows per
-        // id all match the one source row — target-side multi-match is
-        // legal.
-        if (DeltaLog.forPath(spark, tombstonesPath(root)).update().version >= 0)
-          Merge.into(spark, tombstonesPath(root), tombs,
-              col("t.id") === col("s.id") && col("t.ver") <= col("s.kill_ver"))
-            .whenMatchedDelete()
-            .execute()
-        m.rowsDeleted - nMarkers
-    }
+    currentLayout(spark, root)
+    val tombs = liveTombstones(spark, root)
+      .localCheckpoint(true) // the emptiness check + the merge read it
+    if (tombs.isEmpty) return 0L
+    // markers retired by the merge below — counted up front so the
+    // return value stays "posting rows deleted"
+    val nMarkers = inlineTombstoneRows(spark, root).count()
+    Merge.into(spark, postingsPath(root), tombs,
+        col("t.id") === col("s.id") &&
+          (col("t.ver") < col("s.kill_ver") ||
+            (col("t.cluster") === lit(TombstoneCluster) &&
+              col("t.ver") === col("s.kill_ver"))))
+      .whenMatchedDelete()
+      .execute()
+      .rowsDeleted - nMarkers
   }
 
   /** Probe the committed index: rank centroids against the query by the
@@ -1042,15 +972,12 @@ object IvfIndex {
     * `clusters` — shared by the single-query and batched probes. */
   private def prunedLive(spark: SparkSession, root: String,
                          clusters: Seq[Int]): DataFrame = {
-    checkEpoch(spark, root)
+    currentLayout(spark, root)
     val postings = DeltaTable.forPath(spark, postingsPath(root))
       .toDF(Seq(PartitionFilter.In("cluster", clusters.map(_.toString).toSet)))
-    liveTombstones(spark, root) match {
-      case Some(t) => postings.join(broadcast(t),
-        postings("id") === t("id") && postings("ver") < t("kill_ver"),
-        "left_anti")
-      case None => postings
-    }
+    val t = liveTombstones(spark, root)
+    postings.join(broadcast(t),
+      postings("id") === t("id") && postings("ver") < t("kill_ver"), "left_anti")
   }
 
   /** Serve MANY queries in one job (r13 verdict #8): the per-query probe

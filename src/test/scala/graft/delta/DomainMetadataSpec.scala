@@ -28,6 +28,40 @@ class DomainMetadataSpec extends AnyFunSuite with SparkTestBase {
     assert(parsed.contains(DomainMetadataAction("x", "c", removed = false)))
   }
 
+  test("a domain in GraftWriter extraActions declares the feature in the commit's one protocol action") {
+    def assertDeclared(dir: String, v: Long): Unit = {
+      val log = DeltaLog.forPath(spark, dir)
+      assert(log.readCommit(v).count(_.isInstanceOf[ProtocolAction]) == 1,
+        s"exactly one protocol action at v$v")
+      val snap = log.update()
+      val feats = snap.writerFeatures.getOrElse(Set.empty)
+      assert(snap.minWriterVersion == 7 && feats.contains("domainMetadata"), s"$feats")
+      assert(feats.contains("appendOnly") && feats.contains("invariants"),
+        s"writer-2 legacy capabilities must be named on features: $feats")
+      assert(snap.domainMetadata.get("app.extra").contains("1"))
+    }
+    val dm = Seq(DomainMetadataAction("app.extra", "1"))
+    // plain append onto a writer-2 table
+    val (appendDir, _) = freshTable("dm-extra-append")
+    assert(DeltaLog.forPath(spark, appendDir).update().minWriterVersion == 2)
+    assertDeclared(appendDir, GraftWriter.write(Seq((10L, "a")).toDF("id", "v"),
+      appendDir, SaveMode.Append, extraActions = dm))
+    // a declared table takes no second lift
+    val again = GraftWriter.write(Seq((11L, "b")).toDF("id", "v"), appendDir,
+      SaveMode.Append, extraActions = Seq(DomainMetadataAction("app.extra", "2")))
+    assert(!DeltaLog.forPath(spark, appendDir).readCommit(again)
+      .exists(_.isInstanceOf[ProtocolAction]))
+    // a fresh create
+    val createDir = tempTable("dm-extra-create").toString
+    assertDeclared(createDir, GraftWriter.write(Seq((1L, "a")).toDF("id", "v"),
+      createDir, extraActions = dm))
+    // a schema-replacing overwrite whose new metadata is folded in too
+    val (replaceDir, _) = freshTable("dm-extra-replace")
+    assertDeclared(replaceDir, GraftWriter.write(Seq((1L, 2)).toDF("id", "w"),
+      replaceDir, SaveMode.Overwrite, overwriteSchema = true,
+      configuration = Some(Map("app.key" -> "x")), extraActions = dm))
+  }
+
   test("set / latest-wins / remove replay into snapshot state") {
     val (dir, t) = freshTable("dm-replay")
     t.setDomainMetadata("app.lineage", "run-1")

@@ -177,7 +177,10 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
       vecs.filter(col("vec_id") === 0)
         .select((col("vec_id") + 5000000L).as("vec_id"), col("embedding")),
       src, org.apache.spark.sql.SaveMode.Append)
+    val commits0 = graft.delta.OptimisticTransaction.committedCount.get()
     assert(IvfIndex.refreshFromSource(spark, s"$r/idx") == ((1L, 1L)))
+    assert(graft.delta.OptimisticTransaction.committedCount.get() - commits0 == 1,
+      "the refresh must commit exactly once, on any table")
     val v1 = log.update().version
     assert(v1 == v0 + 1,
       s"the whole fold must be ONE postings commit, got ${v1 - v0}")
@@ -188,6 +191,10 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     val marks = acts.collect {
       case t: graft.delta.TxnAction if t.appId == "graft.ivf.sourceVersion" => t }
     assert(marks.nonEmpty, "the mark rides the fold commit")
+    assert(acts.exists {
+      case d: graft.delta.DomainMetadataAction => d.domain == IvfIndex.DriftDomain
+      case _ => false
+    }, "the drift observation rides the fold commit")
     val post = graft.delta.DeltaTable.forPath(spark, s"$r/idx/postings").toDF
     assert(post.filter(col("cluster") === -1 && col("id") === 3).count() == 1)
     assert(post.filter(col("cluster") >= 0 && col("id") === 5000000L).count() == 1)
@@ -196,6 +203,17 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
       .select("embedding").as[Array[Float]].head()
     assert(IvfIndex.topK(spark, s"$r/idx", qv, k = 10, nProbe = 4)
       .filter(col("id") === 3).count() == 0)
+    // the ad-hoc tier commits once per refresh too
+    IvfIndex.build(spark, vecs.filter(col("vec_id") < 100), "vec_id",
+      "embedding", s"$r/adhoc", nClusters = 4)
+    val commits1 = graft.delta.OptimisticTransaction.committedCount.get()
+    assert(IvfIndex.refresh(spark, vecs.filter(col("vec_id") < 120),
+      "vec_id", "embedding", s"$r/adhoc") == 20)
+    assert(graft.delta.OptimisticTransaction.committedCount.get() - commits1 == 1,
+      "the ad-hoc refresh must commit exactly once, on any table")
+    // the index is two tables: no drift or tombstones table is ever made
+    for (idx <- Seq(s"$r/idx", s"$r/adhoc"); t <- Seq("drift", "tombstones"))
+      assert(!new java.io.File(s"$idx/$t").exists(), s"$idx/$t exists")
   }
 
   test("refreshFromSource reads O(new commits): pending window never touches base files") {
@@ -263,6 +281,56 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
       IvfIndex.topK(spark, r2, qv, k = 1, nProbe = 4).collect()
     }
     assert(e2.getMessage.contains("torn"))
+    // 2b. a rebuild torn over a pre-epoch index leaves postings with NO
+    //     epoch beside stamped centroids: refused on the probe and on the
+    //     bound refresh, never served as healthy
+    val rb = root("tornbound")
+    graft.delta.GraftWriter.write(
+      (0 until 40).map(i => (i.toLong, Array(i.toFloat / 40, 1f - i.toFloat / 40)))
+        .toDF("vid", "emb"), s"$rb/source",
+      configuration = Some(Map("delta.enableChangeDataFeed" -> "true")))
+    IvfIndex.buildFromTable(spark, s"$rb/source", "vid", "emb", s"$rb/idx",
+      nClusters = 2)
+    val postings = s"$rb/idx/postings"
+    // rewrite the postings in place: same rows, marks and domain, with
+    // `cfg` as the table configuration
+    type Frame = org.apache.spark.sql.DataFrame
+    def rewritePostings(cfg: Map[String, String] => Map[String, String],
+                        rows: Frame => Frame = identity) = {
+      val snap = graft.delta.DeltaLog.forPath(spark, postings).update()
+      val cur = graft.delta.DeltaTable.forPath(spark, postings).toDF.localCheckpoint(true)
+      graft.delta.GraftWriter.write(rows(cur), postings,
+        org.apache.spark.sql.SaveMode.Overwrite, partitionBy = Seq("cluster"),
+        overwriteSchema = true,
+        configuration = Some(cfg(snap.metadata.get.configuration)))
+    }
+    def assertRefused(what: String): Unit = {
+      val probe = intercept[IllegalStateException] {
+        IvfIndex.topK(spark, s"$rb/idx", Array(1f, 1f), k = 1, nProbe = 2).collect()
+      }
+      assert(probe.getMessage.contains("rebuild"), s"$what: ${probe.getMessage}")
+      val fold = intercept[IllegalStateException](
+        IvfIndex.refreshFromSource(spark, s"$rb/idx"))
+      assert(fold.getMessage.contains("rebuild"), s"$what: ${fold.getMessage}")
+    }
+    val epochCfg = graft.delta.DeltaLog.forPath(spark, postings).update()
+      .metadata.get.configuration
+    rewritePostings(_ - IvfIndex.EpochKey)
+    graft.delta.GraftWriter.write(Seq((100L, Array(5f, 5f))).toDF("vid", "emb"),
+      s"$rb/source", org.apache.spark.sql.SaveMode.Append)
+    assertRefused("postings without an epoch")
+    // hand-made legacy layouts: pre-r15 postings (no inline tombstone
+    // layout key) and pre-r14 postings (no ver column) refuse with
+    // "rebuild" too — no legacy read path remains
+    rewritePostings(_ => epochCfg - IvfIndex.LayoutKey)
+    assertRefused("postings without the inline layout")
+    rewritePostings(_ => epochCfg, _.drop("ver"))
+    assertRefused("postings without ver")
+    // build over the legacy root is the migration: it succeeds and serves
+    IvfIndex.build(spark, graft.delta.DeltaTable.forPath(spark, s"$rb/source").toDF,
+      "vid", "emb", s"$rb/idx", nClusters = 2)
+    assert(IvfIndex.topK(spark, s"$rb/idx", Array(1f, 1f), k = 1, nProbe = 2)
+      .select("id").as[Long].head() == 100L, "the rebuilt index must serve")
     // 3. an int-keyed source survives its first delete window (the
     //    tombstone table used to be hard-typed (long, long))
     val r3 = root("intids")
@@ -623,6 +691,159 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
       m2.orphanRowsMoved == 0L, s"got $m2")
   }
 
+  // ---- drift telemetry: the graft.ivf.drift domain on the postings table
+
+  /** Squared L2 in the assignment metric's own order (Similarity.SqDistExpr:
+    * per-element double differences, summed left to right from 0). */
+  private def sqDist(v: Array[Float], c: Seq[Double]): Double =
+    v.zip(c).foldLeft(0.0) { case (a, (x, y)) => a + (x.toDouble - y) * (x.toDouble - y) }
+
+  /** (cid, centroid, base_dist) rows of an index. */
+  private def centroidRows(idx: String): Seq[(Int, Seq[Double], Double)] = {
+    import spark.implicits._
+    graft.delta.DeltaTable.forPath(spark, s"$idx/centroids").toDF
+      .select(col("cid"), col("centroid").cast("array<double>"), col("base_dist"))
+      .as[(Int, Seq[Double], Double)].collect().toSeq
+  }
+
+  /** One refresh's hand-computed observation: each vector's (cid, dist) to
+    * its nearest centroid, ties to the lowest cid. */
+  private def observe(idx: String, vs: Seq[Array[Float]]): Seq[(Int, Double)] = {
+    val cents = centroidRows(idx)
+    vs.map { v =>
+      cents.map { case (cid, c, _) => (sqDist(v, c), cid) }.min.swap
+    }
+  }
+
+  /** driftReport(r) against the hand-computed answer over `history` (newest
+    * first): recent_n = vectors observed in the r newest refreshes,
+    * recent_dist = their mean distance, ratio = recent_dist / base_dist. */
+  private def assertReport(idx: String, history: Seq[Seq[(Int, Double)]],
+                           r: Int): Unit = {
+    def close(a: Double, b: Double) = math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(b))
+    val got = IvfIndex.driftReport(spark, idx, r).collect()
+      .map(x => x.getInt(0) -> x).toMap
+    val cents = centroidRows(idx)
+    assert(got.keySet == cents.map(_._1).toSet)
+    cents.foreach { case (cid, _, base) =>
+      val ds = history.take(r).flatten.filter(_._1 == cid).map(_._2)
+      val row = got(cid)
+      assert(row.getLong(3) == ds.size, s"r=$r cid=$cid recent_n ${row.getLong(3)} != ${ds.size}")
+      if (ds.isEmpty) assert(row.isNullAt(4) && row.isNullAt(5), s"r=$r cid=$cid: $row")
+      else {
+        val mean = ds.sum / ds.size
+        assert(close(row.getDouble(4), mean),
+          s"r=$r cid=$cid recent_dist ${row.getDouble(4)} != $mean")
+        assert(base > 0 && close(row.getDouble(5), mean / base), s"r=$r cid=$cid ratio: $row")
+      }
+    }
+  }
+
+  test("drift domain: driftReport pinned to hand-computed values across bound and ad-hoc refreshes") {
+    import spark.implicits._
+    val centers = Seq((10f, 0f), (0f, 10f), (-10f, 0f))
+    def near(m: Int, dx: Double, dy: Double): Array[Float] =
+      Array((centers(m)._1 + dx).toFloat, (centers(m)._2 + dy).toFloat)
+    val buildRows = for (m <- 0 until 3; i <- 0 until 10)
+      yield (100L * m + i, near(m, 0.01 * i, -0.01 * i))
+
+    // ---- ad-hoc tier: 10 refreshes, more than the 8 the domain keeps
+    val r = root("driftspec")
+    val adhoc = s"$r/adhoc"
+    IvfIndex.build(spark, buildRows.toDF("vec_id", "embedding"), "vec_id",
+      "embedding", adhoc, nClusters = 3)
+    assertReport(adhoc, Nil, 5) // no refreshes yet
+    var history = Seq.empty[Seq[(Int, Double)]] // newest first
+    (0 until 10).foreach { i =>
+      val rows = Seq(
+        (1000L + 2 * i, near(i % 3, 0.5 + 0.1 * i, 0.3)),
+        (1001L + 2 * i, near((i + 1) % 3, -0.2, 0.4 + 0.05 * i)))
+      assert(IvfIndex.refresh(spark, rows.toDF("vec_id", "embedding"),
+        "vec_id", "embedding", adhoc) == 2)
+      history = observe(adhoc, rows.map(_._2)) +: history
+      if (i == 2) assertReport(adhoc, history, 5) // history shorter than r
+      if (i == 4) // a refresh appending nothing observes nothing
+        assert(IvfIndex.refresh(spark, rows.toDF("vec_id", "embedding"),
+          "vec_id", "embedding", adhoc) == 0)
+    }
+    Seq(1, 5, 8).foreach(assertReport(adhoc, history, _))
+    val beyond = intercept[IllegalArgumentException](
+      IvfIndex.driftReport(spark, adhoc, recentRefreshes = 9))
+    assert(beyond.getMessage.contains("8"))
+
+    // a refresh that loses its commit to StaleAppVersionException records
+    // nothing: a layout-epoch bump lands while its assignment job runs
+    val postings = s"$adhoc/postings"
+    val rowsBefore = graft.delta.DeltaTable.forPath(spark, postings).toDF.count()
+    IvfRaceHook.fire = () => {
+      val log = graft.delta.DeltaLog.forPath(spark, postings)
+      val snap = log.update()
+      val cur = snap.appTransactionVersion(IvfIndex.LayoutEpochApp)
+      log.startTransaction(snap)
+        .requireAppVersion(IvfIndex.LayoutEpochApp, cur)
+        .addAction(graft.delta.TxnAction(IvfIndex.LayoutEpochApp, cur + 1))
+        .commit()
+    }
+    IvfRaceHook.armed.set(true)
+    val racing = Seq((5000L, near(0, 1.0, 1.0))).toDF("vec_id", "embedding")
+      .withColumn("vec_id", IvfRaceHook.udfHook(col("vec_id")))
+    intercept[graft.delta.StaleAppVersionException](
+      IvfIndex.refresh(spark, racing, "vec_id", "embedding", adhoc))
+    assert(!IvfRaceHook.armed.get(), "the racing commit must have landed")
+    assert(graft.delta.DeltaTable.forPath(spark, postings).toDF.count() == rowsBefore)
+    Seq(1, 8).foreach(assertReport(adhoc, history, _))
+
+    // a rebuild resets the history
+    IvfIndex.build(spark, buildRows.toDF("vec_id", "embedding"), "vec_id",
+      "embedding", adhoc, nClusters = 3)
+    assertReport(adhoc, Nil, 8)
+
+    // ---- bound tier: append, delete-only, update + append
+    val src = s"$r/source"
+    graft.delta.GraftWriter.write(buildRows.toDF("vec_id", "embedding"), src,
+      configuration = Some(Map("delta.enableChangeDataFeed" -> "true")))
+    val bound = s"$r/bound"
+    IvfIndex.buildFromTable(spark, src, "vec_id", "embedding", bound,
+      nClusters = 3)
+    val appendA = (0 until 3).flatMap(m => Seq(
+      (2000L + 10 * m, near(m, 0.7, -0.2)), (2001L + 10 * m, near(m, -0.4, 0.6))))
+    graft.delta.GraftWriter.write(appendA.toDF("vec_id", "embedding"), src,
+      org.apache.spark.sql.SaveMode.Append)
+    assert(IvfIndex.refreshFromSource(spark, bound) == ((6L, 0L)))
+    val obsA = observe(bound, appendA.map(_._2))
+    graft.delta.Dml.delete(spark, src, col("vec_id").isin(1L, 2L))
+    assert(IvfIndex.refreshFromSource(spark, bound) == ((0L, 2L)))
+    val moved = near(1, 1.5, 0.5)
+    graft.delta.Dml.update(spark, src, col("vec_id") === 3L,
+      Map("embedding" -> typedLit(moved)))
+    graft.delta.GraftWriter.write(Seq((3000L, near(2, 0.9, 0.9)))
+      .toDF("vec_id", "embedding"), src, org.apache.spark.sql.SaveMode.Append)
+    assert(IvfIndex.refreshFromSource(spark, bound) == ((2L, 1L)))
+    val obsC = observe(bound, Seq(moved, near(2, 0.9, 0.9)))
+    // the delete-only window observed nothing: r = 2 reaches back to A
+    Seq(1, 2, 5).foreach(assertReport(bound, Seq(obsC, obsA), _))
+
+    // a retired cid never hands its observations to a later split: retire
+    // the highest observed cid (all its rows deleted), then split another
+    val hot = obsA.map(_._1).max
+    val hotIds = graft.delta.DeltaTable.forPath(spark, s"$bound/postings").toDF
+      .filter(col("cluster") === hot).select("id").as[Long].collect().toSeq
+    graft.delta.Dml.delete(spark, src, col("vec_id").isin(hotIds: _*))
+    IvfIndex.refreshFromSource(spark, bound)
+    assert(IvfIndex.reclusterCluster(spark, bound, hot).isEmpty)
+    val other = centroidRows(bound).map(_._1).min
+    val minted = IvfIndex.reclusterCluster(spark, bound, other)
+    assert(minted.nonEmpty && minted.forall(_ > hot),
+      s"split minted $minted at or below the retired, observed cid $hot")
+    val report = IvfIndex.driftReport(spark, bound, 8).collect()
+      .map(x => x.getInt(0) -> x).toMap
+    assert(!report.contains(hot) && !report.contains(other))
+    minted.foreach { c =>
+      assert(report(c).getLong(3) == 0 && report(c).isNullAt(5),
+        s"fresh cid $c must start with no observations: ${report(c)}")
+    }
+  }
+
   test("r17: int8-quantized layout — codes on every write path, probe skips vec, deletes never served, rerank ≡ float") {
     import spark.implicits._
     val (r, src) = boundSource("quant")
@@ -723,4 +944,20 @@ class IvfIndexSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(big.getMessage.contains("maxRows = None"))
   }
+}
+
+/** Fires `fire` once, from inside a Spark task, on the first row the armed
+  * UDF sees — a commit racing a refresh at a fixed point of its run. The
+  * commit runs on a fresh thread, outside the task's context. */
+object IvfRaceHook {
+  @volatile var fire: () => Unit = () => ()
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  val udfHook = org.apache.spark.sql.functions.udf { (id: Long) =>
+    if (armed.compareAndSet(true, false)) {
+      val t = new Thread(() => fire())
+      t.start()
+      t.join()
+    }
+    id
+  }.asNondeterministic()
 }
