@@ -42,18 +42,15 @@ object ColumnMappingDdl {
 
   /** The protocol floor column mapping demands: legacy reader 2 / writer 5,
     * or the `columnMapping` feature on BOTH lists of a table-features
-    * protocol. Graft's own legacy-DV bump (reader 3, NO feature list) keeps
-    * its absent list — in-engine shape, foreign readers refuse it already. */
+    * protocol. */
   private def protocolBump(snap: Snapshot): Option[ProtocolAction] = {
     val r = snap.minReaderVersion
     val w = snap.minWriterVersion
-    if (w >= 7 || snap.writerFeatures.isDefined) {
-      val rf =
-        if (r >= 3 && snap.readerFeatures.isEmpty) None
-        else Some(snap.readerFeatures.getOrElse(Set.empty) + "columnMapping")
-      val wf = Some(snap.writerFeatures.getOrElse(Set.empty) + "columnMapping")
-      Some(ProtocolAction(math.max(r, if (rf.isDefined) 3 else r), 7, rf, wf))
-    } else if (r >= 2 && w >= 5) None
+    if (w >= 7 || snap.writerFeatures.isDefined)
+      Some(ProtocolAction(3, 7,
+        Some(snap.readerFeatures.getOrElse(Set.empty) + "columnMapping"),
+        Some(snap.writerFeatures.getOrElse(Set.empty) + "columnMapping")))
+    else if (r >= 2 && w >= 5) None
     else Some(ProtocolAction(math.max(r, 2), math.max(w, 5),
       snap.readerFeatures, snap.writerFeatures))
   }

@@ -20,23 +20,14 @@ import org.apache.spark.sql.types._
   * scale path for selective deletes; compaction ([[Optimize]]) later folds
   * the vectors back into rewritten files.
   *
-  * The reference (delta-rs v0.4.1) predates deletion vectors entirely; the
-  * protocol shape here is a graft extension carried in the Add action's
-  * `tags` field (`rust/src/action.rs:183-185`, a free-form map that
-  * checkpoint round-trips preserve):
-  *
-  *  - `tags["graft.dv.path"]`  — table-relative path of a parquet DIRECTORY
-  *    holding (path: string, pos: long) rows: `path` is the data file's
-  *    table-relative path, `pos` the 0-based row index within that file;
-  *  - `tags["graft.dv.cardinality"]` — how many of the directory's rows
-  *    target THIS file (so logical row counts need no DV read).
-  *
-  * DV directories live under `_graft_dv/` — hidden from vacuum by the
-  * underscore rule. A file's DV always carries the COMPLETE deleted-position
-  * set for that file (re-deletes union the old positions in), so a scan
-  * needs only the newest Add's pointer. Foreign Delta readers do not know
-  * this extension and would see deleted rows; tables stay interop-readable
-  * the moment OPTIMIZE purges the vectors.
+  * The reference (delta-rs v0.4.1) predates deletion vectors entirely. The
+  * one format graft reads and writes is the Delta protocol's standard one
+  * ([[StandardDv]]): each Add carries an `add.deletionVector` descriptor
+  * whose RoaringBitmap holds the file's COMPLETE deleted-position set
+  * (re-deletes union the old positions in), so a scan needs only the newest
+  * Add's descriptor. Enabling the table property lifts the protocol to
+  * (3, 7) with the `deletionVectors` feature on both lists, so foreign
+  * readers either apply the vectors or refuse the table.
   *
   * Read integration is one plan rewrite ([[ApplyDeletionVectors]]): any
   * `LogicalRelation` over a [[GraftFileIndex]] whose files carry DVs gains a
@@ -49,37 +40,23 @@ import org.apache.spark.sql.types._
   */
 object DeletionVectors {
 
-  val PathTag = "graft.dv.path"
-  val CardTag = "graft.dv.cardinality"
-  val Dir = "_graft_dv"
-
   /** Columns appended by [[scanWithPos]]. */
-  val PathCol = "__graft_dv_file"
-  val PosCol = "__graft_dv_pos"
+  val PathCol = "__graft_row_file"
+  val PosCol = "__graft_row_pos"
 
   /** Marks a LogicalRelation whose DV filtering is already applied (or
     * deliberately bypassed), so [[ApplyDeletionVectors]] leaves it alone. */
-  private[delta] val AppliedTag = TreeNodeTag[Boolean]("graft.dv.applied")
+  private[delta] val AppliedTag = TreeNodeTag[Boolean]("graft.dvApplied")
 
   val dvSchema: StructType = StructType(Seq(
     StructField("path", StringType, nullable = false),
     StructField("pos", LongType, nullable = false)))
 
-  def dvPath(a: AddAction): Option[String] = a.tags.flatMap(_.get(PathTag))
-
-  /** Deleted-position count for logical row accounting. Graft-tag first:
-    * when graft DML supersedes a standard descriptor it unions the old
-    * positions into its own DV and clears the descriptor, so at most one
-    * source is authoritative per Add. */
+  /** Deleted-position count for logical row accounting. */
   def cardinality(a: AddAction): Long =
-    a.tags.flatMap(_.get(CardTag)).map(_.toLong)
-      .orElse(StandardDv.descriptor(a).map(_.cardinality))
-      .getOrElse(0L)
+    StandardDv.descriptor(a).map(_.cardinality).getOrElse(0L)
 
-  /** True when the Add carries deleted positions in EITHER format — the
-    * graft tag extension or the protocol's `add.deletionVector`. */
-  def hasDv(a: AddAction): Boolean =
-    dvPath(a).isDefined || a.deletionVector.isDefined
+  def hasDv(a: AddAction): Boolean = a.deletionVector.isDefined
   def anyDv(files: Seq[AddAction]): Boolean = files.exists(hasDv)
 
   /** Exact LOGICAL row count of `files` from footer stats (numRecords
@@ -100,7 +77,7 @@ object DeletionVectors {
     * non-ASCII char, and `substring_index` would then yield the FULL URI —
     * so the DV anti-join subtracts nothing and deleted rows silently
     * resurface. The encoded suffix then percent-DECODES ([[relPathCol]])
-    * so every downstream comparison — DV parquet keys, action paths,
+    * so every downstream comparison — DV row paths, action paths,
     * vacuum/rewrite bookkeeping — lives in decoded action-path space. */
   private[delta] def tableDirPrefix(log: DeltaLog): String =
     log.tablePath.toUri.getRawPath.stripSuffix("/") + "/"
@@ -125,117 +102,51 @@ object DeletionVectors {
         regexp_replace(filePath, "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/{0,2}[^/]*/", "")
       else substring_index(filePath, prefix, -1))
 
-  /** The protocol bump a configuration demands, or None when the current
-    * protocol already satisfies it: enabling deletion vectors must fence
-    * foreign readers (they don't know the graft tag extension and would
-    * silently resurrect deleted rows), so minReaderVersion rises to 3 —
-    * the table-features floor spec-compliant readers refuse without an
-    * advertised feature list. EVERY path that can set table properties
-    * (DeltaTable.setProperties, catalog CREATE, catalog ALTER) must apply
-    * this. */
-  def protocolFence(config: Map[String, String],
-                    minReader: Int, minWriter: Int,
-                    readerFeatures: Option[Set[String]] = None,
-                    writerFeatures: Option[Set[String]] = None): Option[ProtocolAction] =
-    if (!TableConfig.deletionVectorsEnabled(config)) None
-    else if (readerFeatures.isDefined || writerFeatures.isDefined || minWriter >= 7)
-      // Table-features protocol: declare the STANDARD `deletionVectors`
-      // feature on BOTH lists, which also flips DML to protocol
-      // descriptors (Dml.commitDvReAdds keys on the writer feature). The
-      // old no-op here left e.g. a (3,7,{timestampNtz}) table unfenced:
-      // a spec-compliant foreign reader supported every advertised
-      // feature, ignored graft's tag extension, and silently resurrected
-      // every deleted row (r11 review).
-      ProtocolSupport.readerWriterFeatureFence(Snapshot(
-        minReaderVersion = minReader, minWriterVersion = minWriter,
-        readerFeatures = readerFeatures, writerFeatures = writerFeatures),
-        "deletionVectors")
-    else if (minReader < 3)
-      // legacy protocol: graft's reader-3-no-list bump — the in-engine
-      // shape foreign readers refuse outright (reader 3 demands a list)
-      Some(ProtocolAction(3, math.max(minWriter, 2), readerFeatures, writerFeatures))
-    else None
-
-  /** Tombstones for every DV directory that the `replaced` files pointed at
-    * and no OTHER live file still references. Emitted by the commits that
+  /** Tombstones for every DV file that the `replaced` files pointed at and
+    * no OTHER live file still references. Emitted by the commits that
     * supersede or fold away DV pointers (DV re-deletes, OPTIMIZE, CoW
-    * rewrites), so [[DeltaTable.vacuum]] can reclaim the directories after
-    * retention — without these, recurring DV DML grows `_graft_dv/`
-    * unboundedly (the underscore rule hides it from normal vacuum listing).
-    * `dataChange=false`: the row-level change is carried by the file-level
-    * actions of the same commit; the dir tombstone is housekeeping and must
-    * commute like compaction does. */
-  def supersededDirTombstones(snap: Snapshot, replaced: Seq[AddAction],
-                              now: Long): Seq[RemoveAction] = {
-    def dvStorage(a: AddAction): Seq[String] =
-      dvPath(a).toSeq ++ stdDvRel(a).toSeq
-    val old = replaced.flatMap(dvStorage).toSet
+    * rewrites, MERGE, TRUNCATE, RESTORE), so [[DeltaTable.vacuum]] reclaims
+    * the files after retention. `dataChange=false`: the row-level change is
+    * carried by the file-level actions of the same commit; the DV tombstone
+    * is housekeeping and must commute like compaction does. */
+  def supersededDvTombstones(snap: Snapshot, replaced: Seq[AddAction],
+                             now: Long): Seq[RemoveAction] = {
+    val old = replaced.flatMap(dvFileRel).toSet
     if (old.isEmpty) return Nil
     val replacedPaths = replaced.map(_.path).toSet
     val stillReferenced = snap.files.iterator
       .filterNot(a => replacedPaths.contains(a.path))
-      .flatMap(dvStorage).toSet
+      .flatMap(dvFileRel).toSet
     (old -- stillReferenced).toSeq.sorted.map(p => RemoveAction(
       path = p, deletionTimestamp = now, dataChange = false,
       extendedFileMetadata = Some(false)))
   }
 
-  /** Table-relative path of the STANDARD packed DV file an Add references
-    * ('u' storage only — inline carries no file, 'p' is foreign-absolute
-    * and never graft-reclaimed). 'u' names are table-relative by
-    * construction, so resolving against the root yields the relative path
-    * without knowing the table location. */
-  private[delta] def stdDvRel(a: AddAction): Option[String] =
+  /** Table-relative path of the packed DV file an Add references ('u'
+    * storage only — inline carries no file, 'p' is foreign-absolute and
+    * never graft-reclaimed). 'u' names are table-relative by construction,
+    * so resolving against the root yields the relative path without knowing
+    * the table location. */
+  private[delta] def dvFileRel(a: AddAction): Option[String] =
     StandardDv.descriptor(a).filter(_.storageType == "u").map(
       _.absolutePath(new Path("/")).toUri.getPath.stripPrefix("/"))
 
-  /** All DV rows referenced by `files` — graft-tag parquet directories and
-    * standard `add.deletionVector` descriptors decoded on executors —
-    * restricted to those files' paths (a DV directory may be shared by many
-    * files and may carry superseded entries for files whose newer Add
-    * points elsewhere). */
+  /** (path, pos) rows of the deletion vectors on `files`, or None when no
+    * file carries one. The descriptor list is metadata-scale on the driver;
+    * bitmap decode — ranged file reads, inline Z85 — runs on EXECUTORS, one
+    * task per slice of files, so a 10⁵-file DV table never materializes
+    * position lists driver-side. */
   def dvDf(spark: SparkSession, log: DeltaLog,
            files: Seq[AddAction]): Option[DataFrame] = {
-    val withGraft = files.filter(a => dvPath(a).isDefined)
-    val graft =
-      if (withGraft.isEmpty) None
-      else {
-        val dirs = withGraft.flatMap(dvPath).distinct
-          .map(rel => new Path(log.tablePath, rel).toString)
-        // Restrict to these files' paths via a broadcast semi-join, NOT
-        // `isin(paths)`: a literal In over 10⁵-10⁶ DV-carrying paths is a
-        // planner/driver killer at scale, while a broadcast relation of the
-        // same paths is a few MB the executors hash once.
-        import spark.implicits._
-        val pathsDf = withGraft.map(_.path).toDF("path")
-        Some(spark.read.schema(dvSchema).parquet(dirs: _*)
-          .join(broadcast(pathsDf), Seq("path"), "left_semi"))
-      }
-    val std = standardDvDf(spark, log, files)
-    (graft, std) match {
-      case (Some(g), Some(s)) => Some(g.unionByName(s))
-      case _ => graft.orElse(std)
-    }
-  }
-
-  /** (path, pos) rows of the standard `add.deletionVector` descriptors on
-    * `files`. The descriptor list is metadata-scale on the driver; bitmap
-    * decode — ranged file reads, inline Z85 — runs on EXECUTORS, one task
-    * span per slice of files, so a 10⁵-file DV table never materializes
-    * position lists driver-side. A graft-DML superseded descriptor is
-    * cleared from its Add ([[graft.delta.Dml]]), so a file never carries
-    * live positions in both formats. */
-  private def standardDvDf(spark: SparkSession, log: DeltaLog,
-                           files: Seq[AddAction]): Option[DataFrame] = {
-    val withStd = files.filter(_.deletionVector.isDefined)
-    if (withStd.isEmpty) return None
+    val withDv = files.filter(hasDv)
+    if (withDv.isEmpty) return None
     val serConf = new org.apache.spark.util.SerializableConfiguration(
       spark.sessionState.newHadoopConf())
     val tableDir = log.tablePath.toString
     import spark.implicits._
-    val slices = math.max(1, math.min(withStd.size,
+    val slices = math.max(1, math.min(withDv.size,
       spark.sparkContext.defaultParallelism))
-    val ds = spark.createDataset(withStd.map(a => (a.path, a.deletionVector.get)))
+    val ds = spark.createDataset(withDv.map(a => (a.path, a.deletionVector.get)))
       .repartition(slices)
     Some(ds.flatMap { case (path, descJson) =>
       val desc = StandardDv.parse(descJson)
@@ -248,10 +159,10 @@ object DeletionVectors {
     * output = table columns ++ (PathCol: table-relative file path,
     * PosCol: row index). This is the substrate DV-writing DML reads — the
     * positions it selects are exactly the coordinates a future scan's
-    * anti-join will subtract. */
-  /** `extraDataCols`: additional PHYSICAL parquet columns to read beyond
-    * the table schema (row tracking's materialized id columns live in the
-    * files but not in the schema); files lacking one serve nulls. */
+    * anti-join will subtract. `extraDataCols`: additional PHYSICAL parquet
+    * columns to read beyond the table schema (row tracking's materialized
+    * id columns live in the files but not in the schema); files lacking one
+    * serve nulls. */
   def scanWithPos(spark: SparkSession, log: DeltaLog, snap: Snapshot,
                   files: Seq[AddAction],
                   extraDataCols: Seq[StructField] = Nil): DataFrame = {
@@ -274,8 +185,7 @@ object DeletionVectors {
     }
     // the index exposes the PHYSICAL schema on a name-mapped table — the
     // output keeps those at-rest names (callers stage protocol-correct
-    // change files from them; mapped tables cannot carry graft DVs, so the
-    // anti-join above is a no-op there)
+    // change files from them)
     val outNames =
       if (ColumnMapping.isMapped(snap))
         ColumnMapping.physicalSchema(snap.schema).fieldNames

@@ -188,16 +188,6 @@ final class DeltaTable private[delta] (val log: DeltaLog, val snapshot: Snapshot
       .filter(_.deletionTimestamp < cutoff).map(_.path).toSet
     val active = snap.files.map(_.path).toSet
 
-    // deletion-vector directories: hidden from the file walk by the
-    // underscore rule, reclaimed through their own tombstones (written by
-    // the superseding commit, DeletionVectors.supersededDirTombstones).
-    // Guarded against any live Add still pointing at the dir.
-    val liveDvDirs = snap.files.flatMap(DeletionVectors.dvPath).toSet
-    val dvDirPrefix = DeletionVectors.Dir + "/"
-    val expiredDvDirs = expired
-      .filter(p => p.startsWith(dvDirPrefix) && !liveDvDirs.contains(p))
-      .toSeq.sorted
-
     def isHidden(rel: String): Boolean =
       rel.split('/').exists { seg =>
         (seg.startsWith(".") || seg.startsWith("_")) &&
@@ -206,10 +196,10 @@ final class DeltaTable private[delta] (val log: DeltaLog, val snapshot: Snapshot
 
     val fs = log.tablePath.getFileSystem(spark.sessionState.newHadoopConf())
     val base = log.tablePath.toUri.getPath.stripSuffix("/")
-    // standard DV files (deletion_vector_<uuid>.bin) are NOT hidden by the
-    // underscore rule and may be shared by several Adds (one packed file
-    // per DML commit); any live descriptor reference shields the file even
-    // when another writer tombstoned its own reference to it
+    // DV files (deletion_vector_<uuid>.bin) are walked like data files and
+    // may be shared by several Adds (one packed file per DML task); any
+    // live descriptor reference shields the file even when another writer
+    // tombstoned its own reference to it
     // "u" resolves table-relative; an absolute "p" descriptor can ALSO
     // land inside this table's directory (foreign self-references) — both
     // shield their file (r9 review)
@@ -272,7 +262,8 @@ final class DeltaTable private[delta] (val log: DeltaLog, val snapshot: Snapshot
     val candidates = Seq.newBuilder[String]
     listed.foreach { case (rel, mtime) =>
       // foreign writers do not tombstone superseded DV files (graft does,
-      // supersededDirTombstones); reclaim ORPHANS — unreferenced and
+      // supersededDvTombstones), and a lost DML commit can leave a task
+      // retry's DV file behind; reclaim ORPHANS — unreferenced and
       // last-modified before the cutoff — by mtime, the delta-spark rule
       val dvOrphan = isStdDvFile(rel) && !liveStdDvFiles.contains(rel) &&
         mtime < cutoff
@@ -303,11 +294,8 @@ final class DeltaTable private[delta] (val log: DeltaLog, val snapshot: Snapshot
       } else {
         result.foreach(rel => fs.delete(new Path(log.tablePath, rel), false))
       }
-      // DV dirs are few (one per superseded DML commit) — recursive driver
-      // deletes; each dir holds a handful of parquet parts
-      expiredDvDirs.foreach(rel => fs.delete(new Path(log.tablePath, rel), true))
     }
-    (result ++ expiredDvDirs).sorted
+    result
   }
 
   /** Rewind the table's live state to `version` with one forward commit —

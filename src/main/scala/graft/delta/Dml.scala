@@ -1,7 +1,5 @@
 package graft.delta
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -88,13 +86,13 @@ object Dml {
     }
   }
 
-  /** Merge-on-read DELETE: write matched row positions as a deletion vector
-    * and re-commit the affected files unchanged with DV pointers — no data
-    * bytes rewritten. See [[DeletionVectors]] for the read contract.
+  /** Merge-on-read DELETE: write matched row positions as deletion vectors
+    * and re-commit the affected files unchanged with new descriptors — no
+    * data bytes rewritten. See [[DeletionVectors]] for the read contract.
     *
     * Scale shape: one distributed scan (pruned by the predicate like the
-    * copy-on-write path) that WRITES the positions as its job output; the
-    * per-file cardinality readback touches only the tiny DV parquet. */
+    * copy-on-write path) whose job writes the vectors and returns only the
+    * descriptors ([[writeDeletionVectors]]). */
   def deleteWithDv(spark: SparkSession, path: String, predicate: Column,
                    resolved: Option[(DeltaLog, Snapshot)] = None): DmlMetrics = {
     val (log, snap) = resolved.getOrElse {
@@ -105,9 +103,9 @@ object Dml {
     if (TableConfig.appendOnly(TableConfig.of(snap)))
       throw new AppendOnlyTableException(path)
     // direct calls must meet the same bar as the delete() router: writing
-    // graft DV pointers without the property's protocol fence would let a
-    // foreign reader (who never saw minReaderVersion rise) resurrect every
-    // deleted row
+    // DV descriptors without the property's protocol fence would let a
+    // foreign reader (who never saw the deletionVectors feature) resurrect
+    // every deleted row
     if (!TableConfig.deletionVectorsEnabled(TableConfig.of(snap)))
       throw new IllegalStateException(
         s"table $path does not enable deletion vectors " +
@@ -119,41 +117,25 @@ object Dml {
     def phys(c: String): String =
       if (mapped) ColumnMapping.physicalName(snap.schema, c) else c
 
-    val (affected, dvRel, counts) = stageDeletionVector(spark, log, snap, predicate)
+    val (affected, dvDir) = writeDeletionVectors(spark, log, snap, predicate)
     if (affected.isEmpty) return DmlMetrics(0, 0, snap.version)
-    val rowsDeleted = counts.values.sum
+    val rowsDeleted = affected.map(_._3).sum
 
-    // CDF: the DV'd-out rows ARE the delete images — derived from the
-    // STAGED positions, never by re-evaluating the predicate (a second
+    // CDF: the DV'd-out rows ARE the delete images — read back through the
+    // NEW descriptors, never by re-evaluating the predicate (a second
     // evaluation of a non-deterministic predicate would record images for
     // rows that stayed live and miss rows actually deleted — the same
-    // one-evaluation contract updateWithDv got in r9). The scan applies
-    // the OLD DVs, so a semi-join against the staged (old ∪ new) set
-    // selects exactly the newly-deleted rows, affected files only.
+    // one-evaluation contract updateWithDv keeps)
     val cdcActions =
       if (!ChangeDataFeed.enabled(snap)) Nil
-      else
-        try {
-          val stagedDv = spark.read.schema(DeletionVectors.dvSchema).parquet(
-            new org.apache.hadoop.fs.Path(log.tablePath, dvRel).toString)
-          val scanned = logicalScanWithMeta(spark, log, snap, affected.map(_._1))
-          ChangeDataFeed.stage(spark, log,
-            stagedPhysical(snap,
-              scanned.join(stagedDv,
-                  scanned(DeletionVectors.PathCol) === stagedDv("path") &&
-                  scanned(DeletionVectors.PosCol) === stagedDv("pos"), "leftsemi")
-                .select(snap.schema.fieldNames.map(n => col(DeltaSchema.quoted(n))).toSeq: _*)
-                .withColumn(ChangeDataFeed.ChangeType, lit("delete")),
-              passthrough = Set(ChangeDataFeed.ChangeType)))
-        } catch {
-          case e: Throwable =>
-            // the DV dir is already on disk and vacuum never lists it —
-            // reclaim on CDC staging failure (r9 review)
-            try log.tablePath.getFileSystem(spark.sessionState.newHadoopConf())
-              .delete(new org.apache.hadoop.fs.Path(log.tablePath, dvRel), true)
-            catch { case _: Exception => () }
-            throw e
-        }
+      else discardOnFailure(spark, log, Seq(dvDir)) {
+        ChangeDataFeed.stage(spark, log,
+          stagedPhysical(snap,
+            newlyDeleted(spark, log, snap, affected)
+              .select(snap.schema.fieldNames.map(n => col(DeltaSchema.quoted(n))).toSeq: _*)
+              .withColumn(ChangeDataFeed.ChangeType, lit("delete")),
+            passthrough = Set(ChangeDataFeed.ChangeType)))
+      }
 
     val now = System.currentTimeMillis()
     val txn = log.startTransaction(snap).withReadFilters(
@@ -161,17 +143,17 @@ object Dml {
         org.apache.spark.sql.graftbridge.ColumnBridge.catalystExpression(predicate),
         snap.partitionColumns).map(PartitionFilter.mapKey(_, phys)))
     if (mapped) txn.permitNameMappedCommit()
-    val dvStorage = commitDvReAdds(spark, log, txn, snap, affected, dvRel, now)
+    addDvReAdds(txn, snap, affected, now)
     txn.addActions(cdcActions)
     val info = ActionCodec.mapper.createObjectNode()
     info.put("timestamp", now)
     info.put("operation", "DELETE")
     val params = info.putObject("operationParameters")
     params.put("predicate", predicate.toString)
-    params.put("deletionVector", dvStorage)
+    params.put("deletionVector", dvDir)
     params.put("numDeletedRows", rowsDeleted)
     val version = commitOrClean(spark, log, txn, Some(CommitInfoAction(info)),
-      stagedDirs = Seq(dvStorage) ++ cdcActions.map(ChangeDataFeed.writeDir))
+      stagedDirs = Seq(dvDir) ++ cdcActions.map(ChangeDataFeed.writeDir))
     DmlMetrics(affected.size, rowsDeleted, version)
   }
 
@@ -210,33 +192,23 @@ object Dml {
     def phys(c: String): String =
       if (mapped) ColumnMapping.physicalName(snap.schema, c) else c
 
-    val (affected, dvRel, counts) = stageDeletionVector(spark, log, snap, predicate)
+    val (affected, dvDir) = writeDeletionVectors(spark, log, snap, predicate)
     if (affected.isEmpty) return DmlMetrics(0, 0, snap.version)
 
-    // matched rows derived FROM the staged deletion vector, so the
-    // predicate is evaluated exactly ONCE (inside stageDeletionVector):
+    // matched rows read back FROM the new deletion vectors, so the
+    // predicate is evaluated exactly ONCE (inside writeDeletionVectors):
     // re-evaluating it here could diverge on non-deterministic predicates
     // and DV a row out without re-appending its copy — silent loss inside
-    // one transaction (r9 review). The scan applies the OLD DVs, so a
-    // semi-join against the staged (old ∪ new) positions selects exactly
-    // the new matches; it also reads only the AFFECTED files, not the
-    // whole table.
-    // staging failures after this point (a CHECK violation inside the
-    // write job, a CDC error) must reclaim the already-written DV dir —
-    // underscore-hidden storage vacuum never lists (r9 review)
-    val (newAdds, cdcActions) = try {
-      val stagedDv = spark.read.schema(DeletionVectors.dvSchema).parquet(
-        new org.apache.hadoop.fs.Path(log.tablePath, dvRel).toString)
-      val scanned = logicalScanWithMeta(spark, log, snap, affected.map(_._1),
-        rtNames = rtState.map(_._2))
+    // one transaction. Only the AFFECTED files are read. Staging failures
+    // after this point (a CHECK violation inside the write job, a CDC
+    // error) reclaim the already-written DV files.
+    val (newAdds, cdcActions) = discardOnFailure(spark, log, Seq(dvDir)) {
       // moved rows carry their row id (materialized); the commit-version
       // column is deliberately absent from the copy files (see above)
       val outCols = snap.schema.fieldNames.map(n => col(DeltaSchema.quoted(n))).toSeq ++
         rtState.map { case (_, (matId, _)) => col(s"`$matId`") }.toSeq
-      val matched = scanned.join(stagedDv,
-          scanned(DeletionVectors.PathCol) === stagedDv("path") &&
-          scanned(DeletionVectors.PosCol) === stagedDv("pos"), "leftsemi")
-        .select(outCols: _*)
+      val matched = newlyDeleted(spark, log, snap, affected,
+        rtNames = rtState.map(_._2)).select(outCols: _*)
       val updated = Constraints.regenerate(
         applyAssignments(lit(true), assignments,
           snap.schema.fieldNames.toSeq)(matched), snap,
@@ -264,14 +236,8 @@ object Dml {
             path, partCols, statsIdx, Some(dataOnly))
         }
       (written.adds, written.cdc)
-    } catch {
-      case e: Throwable =>
-        try log.tablePath.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(new org.apache.hadoop.fs.Path(log.tablePath, dvRel), true)
-        catch { case _: Exception => () }
-        throw e
     }
-    val rowsUpdated = counts.values.sum
+    val rowsUpdated = affected.map(_._3).sum
 
     val now = System.currentTimeMillis()
     val txn = log.startTransaction(snap).withReadFilters(
@@ -279,7 +245,7 @@ object Dml {
         org.apache.spark.sql.graftbridge.ColumnBridge.catalystExpression(predicate),
         snap.partitionColumns).map(PartitionFilter.mapKey(_, phys)))
     if (mapped) txn.permitNameMappedCommit()
-    val dvStorage = commitDvReAdds(spark, log, txn, snap, affected, dvRel, now)
+    addDvReAdds(txn, snap, affected, now)
     txn.addActions(RowTracking.commitRewriteAdds(txn, rtState, snap, newAdds))
     txn.addActions(cdcActions)
     val info = ActionCodec.mapper.createObjectNode()
@@ -287,10 +253,10 @@ object Dml {
     info.put("operation", "UPDATE")
     val params = info.putObject("operationParameters")
     params.put("predicate", predicate.toString)
-    params.put("deletionVector", dvStorage)
+    params.put("deletionVector", dvDir)
     params.put("numUpdatedRows", rowsUpdated)
     val version = commitOrClean(spark, log, txn, Some(CommitInfoAction(info)),
-      stagedDirs = Seq(dvStorage) ++ cdcActions.map(ChangeDataFeed.writeDir),
+      stagedDirs = Seq(dvDir) ++ cdcActions.map(ChangeDataFeed.writeDir),
       stagedAdds = newAdds)
     DmlMetrics(affected.size, rowsUpdated, version)
   }
@@ -300,10 +266,10 @@ object Dml {
     * `withColumn` fold would let the first assignment rewrite a column the
     * predicate or a later assignment still reads (`SET ts = 20, bucket =
     * ts % 3 WHERE ts = 10` must see ts = 10 throughout). Found by the
-    * generated-column enforcement tests. */
-  /** `allowed`: the assignable column names — the TABLE schema plus any
-    * internally-added targets, never the frame's raw columns (a rewrite
-    * scan carries hidden row-tracking columns a user must not assign). */
+    * generated-column enforcement tests. `allowed`: the assignable column
+    * names — the TABLE schema plus any internally-added targets, never the
+    * frame's raw columns (a rewrite scan carries hidden row-tracking
+    * columns a user must not assign). */
   private def applyAssignments(predicate: Column,
                                assignments: Map[String, Column],
                                allowed: Seq[String])
@@ -333,9 +299,8 @@ object Dml {
 
   /** Commit, or — on ANY commit failure (conflict, abort) — delete the
     * staged DV/CDC directories and staged rewrite files before rethrowing:
-    * they are referenced only by the failed commit's actions, invisible to
-    * vacuum (underscore-hidden dirs / never-tombstoned files) and would
-    * otherwise leak forever. */
+    * they are referenced only by the failed commit's actions, never
+    * tombstoned, and would otherwise leak until an orphan sweep. */
   private def commitOrClean(spark: SparkSession, log: DeltaLog,
                             txn: OptimisticTransaction, info: Option[CommitInfoAction],
                             stagedDirs: Seq[String],
@@ -343,145 +308,108 @@ object Dml {
     try txn.commit(info)
     catch {
       case e: Throwable =>
-        val fs = log.tablePath.getFileSystem(spark.sessionState.newHadoopConf())
-        stagedDirs.distinct.foreach { rel =>
-          try fs.delete(new org.apache.hadoop.fs.Path(log.tablePath, rel), true)
-          catch { case _: Exception => () }
-        }
+        discardDirs(spark, log, stagedDirs)
         if (stagedAdds.nonEmpty)
           try GraftWriter.discardStaged(spark, log.tablePath.toString, stagedAdds)
           catch { case _: Exception => () }
         throw e
     }
 
-  /** Write the predicate's matched positions as a DV directory and return
-    * (affected Adds with their NEW per-file total cardinality, relative DV
-    * path, per-file NEWLY-deleted counts). Files already carrying a DV get
-    * their old positions unioned in, so each Add's pointer stays complete
-    * on its own. Empty match ⇒ the staged directory is removed and
-    * `(Nil, _, empty)` returned. */
-  private def stageDeletionVector(spark: SparkSession, log: DeltaLog,
-                                  snap: Snapshot, predicate: Column)
-      : (Seq[(AddAction, Long)], String, Map[String, Long]) = {
-    import DeletionVectors.{PathCol, PosCol}
+  /** Best-effort recursive delete of table-relative staged directories. */
+  private def discardDirs(spark: SparkSession, log: DeltaLog, dirs: Seq[String]): Unit = {
     val fs = log.tablePath.getFileSystem(spark.sessionState.newHadoopConf())
-    def freshDir(): (String, org.apache.hadoop.fs.Path) = {
-      val rel = s"${DeletionVectors.Dir}/dv-${java.util.UUID.randomUUID()}"
-      (rel, new org.apache.hadoop.fs.Path(log.tablePath, rel))
+    dirs.distinct.foreach { rel =>
+      try fs.delete(new org.apache.hadoop.fs.Path(log.tablePath, rel), true)
+      catch { case _: Exception => () }
     }
-
-    val (rel1, abs1) = freshDir()
-    // mapped tables: the predicate speaks logical names, the provenance
-    // columns survive the alias (logicalScanWithMeta)
-    logicalScanWithMeta(spark, log, snap, snap.files)
-      .filter(coalesce(predicate, lit(false)))
-      .select(col(PathCol).as("path"), col(PosCol).as("pos"))
-      .write.parquet(abs1.toString)
-
-    val newCounts: Map[String, Long] =
-      spark.read.schema(DeletionVectors.dvSchema).parquet(abs1.toString)
-        .groupBy("path").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (newCounts.isEmpty) {
-      fs.delete(abs1, true)
-      return (Nil, rel1, Map.empty)
-    }
-
-    val affected = snap.files.filter(a => newCounts.contains(a.path))
-    require(affected.size == newCounts.size,
-      s"deletion-vector scan surfaced unknown file paths: " +
-      s"${(newCounts.keySet -- affected.map(_.path)).take(3).mkString(", ")}")
-
-    // union in prior positions so each file's DV pointer is self-complete
-    val (dvRel, totals) =
-      if (!affected.exists(DeletionVectors.hasDv)) (rel1, newCounts)
-      else {
-        val (rel2, abs2) = freshDir()
-        val old = DeletionVectors.dvDf(spark, log, affected).get
-        spark.read.schema(DeletionVectors.dvSchema).parquet(abs1.toString)
-          .unionByName(old).distinct()
-          .write.parquet(abs2.toString)
-        fs.delete(abs1, true)
-        val t = spark.read.schema(DeletionVectors.dvSchema).parquet(abs2.toString)
-          .groupBy("path").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        (rel2, t)
-      }
-    (affected.map(a => a -> totals(a.path)), dvRel, newCounts)
   }
 
-  /** remove + re-add each affected file with its DV pointer; DV storage
-    * left unreferenced by the re-point is tombstoned for vacuum. Returns
-    * the table-relative DV storage the commit references.
+  /** `body`, deleting the staged `dirs` when it throws. */
+  private def discardOnFailure[A](spark: SparkSession, log: DeltaLog,
+                                  dirs: Seq[String])(body: => A): A =
+    try body
+    catch { case e: Throwable => discardDirs(spark, log, dirs); throw e }
+
+  /** Write the predicate's matched positions as deletion vectors and return
+    * (affected Add, its new descriptor, newly deleted count) per file, plus
+    * the operation's table-relative DV directory. Empty match ⇒ `Nil`.
     *
-    * The pointer FORMAT follows the table's protocol: a table advertising
-    * the standard `deletionVectors` writer feature (foreign-created) gets
-    * protocol descriptors foreign readers understand ([[StandardDv]]);
-    * graft-native tables keep the tag extension. Either way the pointer
-    * carries the COMPLETE position set and the other format's pointer is
-    * cleared — an Add never carries live positions in both. */
-  private def commitDvReAdds(spark: SparkSession, log: DeltaLog,
-                             txn: OptimisticTransaction, snap: Snapshot,
-                             affected: Seq[(AddAction, Long)],
-                             dvRel: String, now: Long): String = {
-    val standardNative = snap.writerFeatures.exists(_.contains("deletionVectors"))
-    val (storageRel, descByPath) =
-      if (standardNative) stageStandardDv(spark, log, dvRel)
-      else (dvRel, Map.empty[String, StandardDv.Descriptor])
-    affected.foreach { case (f, totalCard) =>
+    * One distributed job: the predicate scan (existing DVs applied) yields
+    * (path, pos) rows, shuffled by file so every row of a file meets in one
+    * task; each task unions a file's prior positions — decoded from its
+    * current descriptor, which rides a broadcast of the DV-carrying files'
+    * descriptors — and packs its files' vectors into ONE DV file
+    * ([[StandardDv.writeVectors]]). The driver collects only the
+    * descriptors. Every file lands under the per-operation directory, so
+    * one recursive delete reclaims a failed or lost operation. */
+  private def writeDeletionVectors(spark: SparkSession, log: DeltaLog,
+                                   snap: Snapshot, predicate: Column)
+      : (Seq[(AddAction, StandardDv.Descriptor, Long)], String) = {
+    import DeletionVectors.{PathCol, PosCol}
+    import spark.implicits._
+    val dvDir = s"dv-${java.util.UUID.randomUUID()}"
+    val prior = spark.sparkContext.broadcast(snap.files.iterator
+      .collect { case a if a.deletionVector.isDefined => a.path -> a.deletionVector.get }
+      .toMap)
+    val serConf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf())
+    val tableDir = log.tablePath.toString
+    discardOnFailure(spark, log, Seq(dvDir)) {
+      val written =
+        try
+          // mapped tables: the predicate speaks logical names, the
+          // provenance columns survive the alias (logicalScanWithMeta)
+          logicalScanWithMeta(spark, log, snap, snap.files)
+            .filter(coalesce(predicate, lit(false)))
+            .select(col(PathCol), col(PosCol))
+            .repartition(col(PathCol))
+            .as[(String, Long)]
+            .mapPartitions(rows => StandardDv.writeVectors(serConf.value,
+              new org.apache.hadoop.fs.Path(tableDir), dvDir, prior.value, rows))
+            .collect()
+        finally prior.destroy()
+      val byPath = written.map(w => w._1 -> w).toMap
+      val affected = snap.files.filter(a => byPath.contains(a.path))
+      if (affected.size != written.length)
+        throw new IllegalStateException(
+          s"deletion-vector write surfaced ${written.length} vectors for " +
+          s"${affected.size} table files: " +
+          s"${(byPath.keySet -- affected.map(_.path)).take(3).mkString(", ")}")
+      (affected.map { a =>
+        val (_, desc, newly) = byPath(a.path)
+        (a, StandardDv.parse(desc), newly)
+      }, dvDir)
+    }
+  }
+
+  /** The rows `affected` newly deletes, as scanned (the scan applies the
+    * OLD vectors; a semi-join against the NEW ones keeps exactly the rows
+    * this operation removed), from the affected files only. */
+  private def newlyDeleted(spark: SparkSession, log: DeltaLog, snap: Snapshot,
+                           affected: Seq[(AddAction, StandardDv.Descriptor, Long)],
+                           rtNames: Option[(String, String)] = None) = {
+    import DeletionVectors.{PathCol, PosCol}
+    val scanned = logicalScanWithMeta(spark, log, snap, affected.map(_._1), rtNames)
+    val dv = DeletionVectors.dvDf(spark, log, affected.map { case (a, d, _) =>
+      a.copy(deletionVector = Some(d.json)) }).get
+    scanned.join(dv,
+      scanned(PathCol) === dv("path") && scanned(PosCol) === dv("pos"), "leftsemi")
+  }
+
+  /** remove + re-add each affected file with its new descriptor; DV files
+    * left unreferenced by the re-point are tombstoned for vacuum. */
+  private def addDvReAdds(txn: OptimisticTransaction, snap: Snapshot,
+                          affected: Seq[(AddAction, StandardDv.Descriptor, Long)],
+                          now: Long): Unit = {
+    affected.foreach { case (f, desc, _) =>
       txn.addAction(RemoveAction(
         path = f.path, deletionTimestamp = now, dataChange = true,
         extendedFileMetadata = Some(true),
         partitionValues = Some(f.partitionValues), size = Some(f.size)))
-      if (standardNative) {
-        val desc = descByPath(f.path)
-        require(desc.cardinality == totalCard,
-          s"packed DV cardinality ${desc.cardinality} != staged $totalCard " +
-          s"for ${f.path}")
-        val tags = f.tags.map(_ - DeletionVectors.PathTag - DeletionVectors.CardTag)
-          .filter(_.nonEmpty)
-        txn.addAction(f.copy(dataChange = true, tags = tags,
-          deletionVector = Some(desc.json)))
-      } else {
-        val tags = f.tags.getOrElse(Map.empty) +
-          (DeletionVectors.PathTag -> dvRel) +
-          (DeletionVectors.CardTag -> totalCard.toString)
-        txn.addAction(f.copy(dataChange = true, tags = Some(tags),
-          deletionVector = None))
-      }
+      txn.addAction(f.copy(dataChange = true, deletionVector = Some(desc.json)))
     }
-    txn.addActions(DeletionVectors.supersededDirTombstones(
+    txn.addActions(DeletionVectors.supersededDvTombstones(
       snap, affected.map(_._1), now))
-    storageRel
-  }
-
-  /** Convert the staged (path, pos) parquet into ONE packed standard DV
-    * file: per-file roaring bitmaps built on EXECUTORS (one shuffle on
-    * path), streamed into the pack through a local iterator — the driver
-    * holds one file's bitmap at a time, never the full position set. The
-    * staged parquet is deleted once packed. */
-  private def stageStandardDv(spark: SparkSession, log: DeltaLog,
-                              dvRel: String)
-      : (String, Map[String, StandardDv.Descriptor]) = {
-    import spark.implicits._
-    val abs = new org.apache.hadoop.fs.Path(log.tablePath, dvRel).toString
-    val perFile = spark.read.schema(DeletionVectors.dvSchema).parquet(abs)
-      .as[(String, Long)].groupByKey(_._1)
-      .mapGroups { (p, it) =>
-        val ps = it.map(_._2).toArray
-        (p, StandardDv.PositionBitmap.serialize(ps), ps.distinct.length.toLong)
-      }.sort("_1")
-    val conf = spark.sessionState.newHadoopConf()
-    val paths = Seq.newBuilder[String]
-    val descs = StandardDv.writePacked(conf, log.tablePath,
-      perFile.toLocalIterator().asScala.map { case (p, bytes, card) =>
-        paths += p; (bytes, card)
-      })
-    val fs = log.tablePath.getFileSystem(conf)
-    fs.delete(new org.apache.hadoop.fs.Path(log.tablePath, dvRel), true)
-    val binRel = descs.head.absolutePath(new org.apache.hadoop.fs.Path("/"))
-      .toUri.getPath.stripPrefix("/")
-    (binRel, paths.result().zip(descs).toMap)
   }
 
   private def rewrite(spark: SparkSession, log: DeltaLog, snap: Snapshot,
@@ -584,7 +512,7 @@ object Dml {
       path = f.path, deletionTimestamp = now, dataChange = true,
       extendedFileMetadata = Some(true),
       partitionValues = Some(f.partitionValues), size = Some(f.size))))
-    txn.addActions(DeletionVectors.supersededDirTombstones(snap, affected, now))
+    txn.addActions(DeletionVectors.supersededDvTombstones(snap, affected, now))
     // row tracking: rewritten files still get fresh base ids (materialized
     // values override them row-by-row; the spec requires every file carry
     // a range), plus the first-materialization metaData when needed
@@ -601,11 +529,9 @@ object Dml {
     DmlMetrics(affected.size, rowsAffected, version)
   }
 
-  /** Scan only `files` of the snapshot, in table-schema column order, with
-    * any deletion vectors applied (a rewrite that re-materialized DV'd rows
-    * would silently resurrect them). Distributed parquet read through the
-    * same FileIndex as a full scan. */
-  /** Scan exactly `files` (DVs applied), serving the table's LOGICAL
+  /** Scan exactly `files` of the snapshot, in table-schema column order,
+    * with any deletion vectors applied (a rewrite that re-materialized DV'd
+    * rows would silently resurrect them), serving the table's LOGICAL
     * schema: on a column-mapped table the underlying scan speaks physical
     * names, aliased back here — the same single-conversion-point shape as
     * [[DeltaTable.toDF]]. */

@@ -51,7 +51,7 @@ object GraftChangesFunction {
     val fileVersion: Seq[(String, Long)] = GraftWriter.inDriverPool(
       log.listCommitVersions().filter(v => v > startV && v <= endV)) { v =>
         log.readCommit(v).collect {
-          // DV re-adds of either format (merge-on-read DELETE/UPDATE)
+          // DV re-adds (merge-on-read DELETE/UPDATE)
           // carry no new rows
           case a: AddAction if a.dataChange && !DeletionVectors.hasDv(a) =>
             a.path -> v

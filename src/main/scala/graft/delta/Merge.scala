@@ -598,7 +598,7 @@ final class MergeBuilder private[delta] (
       path = f.path, deletionTimestamp = now, dataChange = true,
       extendedFileMetadata = Some(true),
       partitionValues = Some(f.partitionValues), size = Some(f.size))))
-    txn.addActions(DeletionVectors.supersededDirTombstones(snap, removes, now))
+    txn.addActions(DeletionVectors.supersededDvTombstones(snap, removes, now))
     // at-most-one metaData per commit: when the merge both evolves the
     // schema and first-materializes row tracking, fold the two config
     // additions into a single action

@@ -147,7 +147,7 @@ object Optimize {
       path = f.path, deletionTimestamp = now, dataChange = false,
       extendedFileMetadata = Some(true),
       partitionValues = Some(f.partitionValues), size = Some(f.size))))
-    txn.addActions(DeletionVectors.supersededDirTombstones(snap, oldFiles, now))
+    txn.addActions(DeletionVectors.supersededDvTombstones(snap, oldFiles, now))
     txn.addActions(RowTracking.commitRewriteAdds(txn, rtState, snap, adds))
     val info = ActionCodec.mapper.createObjectNode()
     info.put("timestamp", now)
@@ -318,7 +318,7 @@ object Optimize {
       path = f.path, deletionTimestamp = now, dataChange = false,
       extendedFileMetadata = Some(true),
       partitionValues = Some(f.partitionValues), size = Some(f.size))))
-    txn.addActions(DeletionVectors.supersededDirTombstones(snap, oldFiles, now))
+    txn.addActions(DeletionVectors.supersededDvTombstones(snap, oldFiles, now))
     txn.addActions(RowTracking.commitRewriteAdds(txn, rtState, snap, adds))
     val info = ActionCodec.mapper.createObjectNode()
     info.put("timestamp", now)

@@ -20,10 +20,12 @@ final class UnsupportedProtocolException(msg: String)
   * What graft implements:
   *  - reader 1-2, except column mapping (`delta.columnMapping.mode` other
   *    than `none` — a reader-2 capability graft lacks);
-  *  - reader 3 with features ⊆ [[SupportedReaderFeatures]] — plus graft's
-  *    own DV tables, which declare reader 3 with NO feature list precisely
-  *    so foreign readers refuse them ([[DeletionVectors.protocolFence]])
-  *    while graft recognizes its `graft.dv.*` tags;
+  *  - reader 3 with an explicit feature list ⊆ [[SupportedReaderFeatures]].
+  *    A reader-3 protocol with NO list is refused: the spec forbids it, and
+  *    the only writer of that shape was graft's retired tag-format deletion
+  *    vectors, whose tags no longer read — serving such a table would
+  *    resurrect its deleted rows. A list naming that retired format's
+  *    private feature is refused like any unknown feature;
   *  - writer 1-4, refusing tables whose SCHEMA actually uses capabilities
   *    graft would not maintain (invariants, generated columns, identity
   *    columns — version gates alone are too coarse: delta-spark writes
@@ -36,15 +38,14 @@ object ProtocolSupport {
   /** Reader-3 table features graft can serve correctly (`columnMapping`:
     * mode=name through the physical-schema scan path, mode=id via parquet
     * field-id matching on the same path, [[ColumnMapping]];
-    * `deletionVectors`: standard descriptors feed the DV anti-join,
-    * [[StandardDv]] + [[DeletionVectors.dvDf]]). */
-  /** `typeWidening`: widened tables carry NARROW parquet under a WIDE
-    * schema; Spark 4's parquet readers upcast natively (probe pinned in
-    * TypeWideningSpec), so both the scan and appends (which write the
-    * wide type alongside) are correct as-is. */
+    * `deletionVectors`: descriptors feed the DV anti-join, [[StandardDv]]
+    * + [[DeletionVectors.dvDf]]; `typeWidening`: widened tables carry
+    * NARROW parquet under a WIDE schema; Spark 4's parquet readers upcast
+    * natively (probe pinned in TypeWideningSpec), so both the scan and
+    * appends (which write the wide type alongside) are correct as-is). */
   val SupportedReaderFeatures: Set[String] =
-    Set("timestampNtz", "columnMapping", "graft.deletionVectors",
-      "deletionVectors", "v2Checkpoint", "typeWidening",
+    Set("timestampNtz", "columnMapping", "deletionVectors",
+      "v2Checkpoint", "typeWidening",
       "vacuumProtocolCheck", "variantType", "variantType-preview")
 
   /** Writer-7 table features graft maintains on write. `invariants` and
@@ -60,7 +61,7 @@ object ProtocolSupport {
     * re-clusters). */
   val SupportedWriterFeatures: Set[String] =
     Set("appendOnly", "invariants", "checkConstraints", "changeDataFeed",
-      "timestampNtz", "graft.deletionVectors", "deletionVectors",
+      "timestampNtz", "deletionVectors",
       "generatedColumns", "domainMetadata", "clustering", "v2Checkpoint",
       "inCommitTimestamp", "identityColumns", "typeWidening",
       "vacuumProtocolCheck", "variantType", "variantType-preview",
@@ -76,6 +77,11 @@ object ProtocolSupport {
   private def schemaString(snap: Snapshot): String =
     snap.metadata.map(_.schemaString).getOrElse("")
 
+  /** The deletion-vector format graft wrote before it adopted the
+    * protocol's descriptors: positions in parquet directories named by Add
+    * tags, fenced by a bare reader-3 protocol. No longer read. */
+  private val RetiredDvFormat = "retired tag-format deletion vectors"
+
   /** Refuse to SCAN a snapshot whose correct interpretation needs reader
     * capabilities graft lacks. Metadata-level access (history, inspect)
     * stays open — no data rows are served there. */
@@ -84,12 +90,16 @@ object ProtocolSupport {
       refuse(s"requires reader version ${snap.minReaderVersion} " +
         "(graft supports up to 3)")
     if (snap.minReaderVersion == 3) {
-      // absent feature list = graft's own DV bump (legacy-graft shape)
-      val unsupported = snap.readerFeatures.getOrElse(Set.empty) --
-        SupportedReaderFeatures
+      val features = snap.readerFeatures.getOrElse(refuse(
+        "declares reader version 3 without a reader feature list, the " +
+        s"protocol of graft's $RetiredDvFormat (no longer read: serving " +
+        "the table would resurrect its deleted rows)"))
+      val unsupported = features -- SupportedReaderFeatures
       if (unsupported.nonEmpty)
         refuse(s"requires reader table features ${unsupported.toSeq.sorted
-          .mkString("[", ", ", "]")} that graft does not implement")
+          .mkString("[", ", ", "]")} that graft does not implement" +
+          (if (unsupported.exists(_.startsWith("graft."))) s" (graft's $RetiredDvFormat)"
+           else ""))
     }
     // mode=name scans through the physical-schema path (ColumnMapping);
     // mode=id rides the same path with parquet field-id matching
@@ -244,8 +254,7 @@ object ProtocolSupport {
   /** As [[writerFeatureFence]], for a reader+writer feature (e.g.
     * `v2Checkpoint`): lifts to (3, 7) with the feature declared on both
     * sides. The reader base set preserves what the previous protocol
-    * granted implicitly — reader 2 implied columnMapping; a bare reader 3
-    * with no list is graft's own legacy DV bump. */
+    * granted implicitly — reader 2 implied columnMapping. */
   def readerWriterFeatureFence(snap: Snapshot, feature: String): Option[ProtocolAction] = {
     val hasReader = snap.minReaderVersion == 3 &&
       snap.readerFeatures.exists(_.contains(feature))
@@ -254,8 +263,7 @@ object ProtocolSupport {
     if (hasReader && hasWriter) None
     else {
       val baseReader = snap.readerFeatures.getOrElse(
-        if (snap.minReaderVersion == 3) Set("graft.deletionVectors")
-        else if (snap.minReaderVersion == 2) Set("columnMapping")
+        if (snap.minReaderVersion == 2) Set("columnMapping")
         else Set.empty[String])
       Some(ProtocolAction(3, 7,
         Some(baseReader + feature),
@@ -280,9 +288,10 @@ object ProtocolSupport {
       minWriterVersion = pa.minWriterVersion,
       readerFeatures = pa.readerFeatures,
       writerFeatures = pa.writerFeatures)
-    DeletionVectors.protocolFence(config, p.minReaderVersion,
-      p.minWriterVersion, p.readerFeatures, p.writerFeatures)
-      .foreach(np => p = np)
+    // deletion vectors: readers that cannot apply the descriptors must
+    // refuse the table, not resurrect its deleted rows
+    if (TableConfig.deletionVectorsEnabled(config))
+      readerWriterFeatureFence(snapOf(p), "deletionVectors").foreach(np => p = np)
     if (TableConfig.checkpointPolicy(config) == "v2")
       readerWriterFeatureFence(snapOf(p), "v2Checkpoint").foreach(np => p = np)
     if (TableConfig.inCommitTimestampsEnabled(config))

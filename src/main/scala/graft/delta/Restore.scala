@@ -44,7 +44,7 @@ object Restore {
     val currentByPath = current.files.map(a => a.path -> a).toMap
     val targetPaths = target.files.map(_.path).toSet
     // re-add when the path is absent OR its Add ENTRY differs — a DV DML
-    // re-adds the same path with different tags, and a path-only diff would
+    // re-adds the same path with a new descriptor, and a path-only diff would
     // leave the CURRENT deletion vector in place, silently keeping rows
     // deleted that the target version still had (re-committing an add for
     // an existing path replaces it: last-add-wins)
@@ -52,11 +52,9 @@ object Restore {
     val toRemove = current.files.filterNot(f => targetPaths.contains(f.path))
 
     val fs = log.tablePath.getFileSystem(spark.sessionState.newHadoopConf())
-    // both the data files AND any deletion-vector storage the target's adds
-    // point at — graft DV dirs or standard DV files — must still exist
-    // (either may have been vacuumed)
+    // both the data files AND any deletion-vector file the target's adds
+    // point at must still exist (either may have been vacuumed)
     val probePaths = toAdd.map(_.path) ++
-      toAdd.flatMap(DeletionVectors.dvPath).distinct ++
       toAdd.flatMap(StandardDv.descriptor)
         .filter(d => d.storageType == "u" || d.storageType == "p")
         .map { d =>
@@ -117,24 +115,18 @@ object Restore {
       extendedFileMetadata = Some(true),
       partitionValues = Some(f.partitionValues), size = Some(f.size))))
     // the restore abandons the CURRENT entries it repoints or removes; any
-    // DV directory only they referenced becomes unreachable and must be
-    // tombstoned or vacuum can never reclaim it (r6 ADVICE — the same leak
-    // DML/OPTIMIZE/MERGE already close). Dirs the restored target adds
-    // still point at are excluded: they are live again after this commit.
+    // DV file only they referenced becomes unreachable and is tombstoned
+    // for vacuum (the same bookkeeping DML/OPTIMIZE/MERGE do). Files the
+    // restored target adds point at are excluded: they are live again after
+    // this commit, and a tombstone-honoring cleaner would otherwise reclaim
+    // them and resurrect their deleted rows after retention.
     val toAddPaths = toAdd.map(_.path).toSet
     val replacedCurrent =
       current.files.filter(f => toAddPaths.contains(f.path)) ++ toRemove
-    // DV storage the restore makes live AGAIN must not be tombstoned —
-    // BOTH representations: graft tag dirs and standard packed files
-    // (the latter was missed, r11 review: a tombstone-honoring cleaner
-    // would reclaim a std DV file the restored adds still point at,
-    // resurrecting their deleted rows after retention)
-    val targetDvStorage =
-      (toAdd.flatMap(DeletionVectors.dvPath) ++
-        toAdd.flatMap(DeletionVectors.stdDvRel)).toSet
+    val targetDvFiles = toAdd.flatMap(DeletionVectors.dvFileRel).toSet
     txn.addActions(DeletionVectors
-      .supersededDirTombstones(current, replacedCurrent, now)
-      .filterNot(t => targetDvStorage.contains(t.path)))
+      .supersededDvTombstones(current, replacedCurrent, now)
+      .filterNot(t => targetDvFiles.contains(t.path)))
     txn.addActions(cdcActions)
 
     val info = ActionCodec.mapper.createObjectNode()
@@ -234,10 +226,8 @@ object Restore {
       val curDv = DeletionVectors.dvDf(spark, log, currentAdds).getOrElse(empty)
       val tgtDv = DeletionVectors.dvDf(spark, log, repointed).getOrElse(empty)
       // full physical rows of the repointed files (no DV applied)
-      def stripDv(a: AddAction): AddAction = a.copy(tags = a.tags.map(_ -
-        DeletionVectors.PathTag - DeletionVectors.CardTag),
-        deletionVector = None)
-      val raw = DeletionVectors.scanWithPos(spark, log, target, repointed.map(stripDv))
+      val raw = DeletionVectors.scanWithPos(spark, log, target,
+        repointed.map(_.copy(deletionVector = None)))
       def rowsAt(pos: org.apache.spark.sql.DataFrame) =
         raw.join(pos, raw(PathCol) === pos("path") && raw(PosCol) === pos("pos"),
             "left_semi")

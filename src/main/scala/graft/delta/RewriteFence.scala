@@ -40,8 +40,8 @@ object RewriteFence {
     // allowNameMapping — see assertCommitServable)
     ProtocolSupport.assertCommitServable(tablePath, version, actions,
       allowNameMapping, declaredSchema)
-    // DV-pointer re-adds of EITHER format (graft tags, add.deletionVector)
-    // carry no new rows — never servable
+    // DV-pointer re-adds (add.deletionVector) carry no new rows — never
+    // servable
     val adds = actions.collect { case a: AddAction
       if a.dataChange && !DeletionVectors.hasDv(a) => a }
     if (!ignoreChanges) {

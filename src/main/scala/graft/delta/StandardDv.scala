@@ -10,18 +10,16 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.roaringbitmap.RoaringBitmap
 
-/** The Delta protocol's STANDARD deletion-vector format.
+/** The Delta protocol's deletion-vector format — the only one graft reads
+  * and writes.
   *
   * The reference (delta-rs v0.4.1) predates deletion vectors; this module
-  * implements the published protocol so graft interoperates with foreign
-  * DV tables in both directions. Wiring ([[DeletionVectors]], [[Dml]]):
-  * scans apply descriptors foreign writers produced (decoded on executors
-  * into the same (path, pos) anti-join the tag extension uses), and
-  * merge-on-read DML on a table advertising the `deletionVectors` writer
-  * feature unions existing positions and re-emits packed descriptors
-  * foreign readers understand. Graft-NATIVE tables keep the private
-  * `graft.dv.*` tag extension (their reader-3-no-features protocol fence
-  * predates this module and foreign readers refuse them wholesale).
+  * implements the published protocol so DV tables interoperate in both
+  * directions. Wiring ([[DeletionVectors]], [[Dml]]): scans decode the
+  * descriptors on executors into the (path, pos) rows of the DV anti-join,
+  * and merge-on-read DML packs each task's per-file bitmaps — prior
+  * positions unioned in — into one DV file ([[writeVectors]]) and re-emits
+  * the files with the new descriptors.
   *
   * On-disk shape (PROTOCOL.md "Deletion Vector Descriptor Schema" +
   * "Deletion Vector Format"):
@@ -252,18 +250,17 @@ object StandardDv {
     positions
   }
 
-  /** Write per-file bitmaps PACKED into one table-root DV file (the
-    * protocol's multi-vector layout — one file-open per commit, not per
-    * affected data file) and return each data file's descriptor in input
-    * order. Bitmap bytes arrive pre-serialized ([[PositionBitmap]]), built
-    * on executors and streamed through an iterator so a wide DELETE never
-    * materializes raw position lists — or even all bitmaps at once — on
-    * the driver. */
-  def writePacked(conf: Configuration, tablePath: Path,
-                  bitmaps: Iterator[(Array[Byte], Long)]): Seq[Descriptor] = {
+  /** Write per-file bitmaps PACKED into one DV file (the protocol's
+    * multi-vector layout — one file-open per task, not per affected data
+    * file) under the table-relative directory `prefix` ("" = the table
+    * root), and return each data file's descriptor in input order. Bitmap
+    * bytes arrive pre-serialized ([[PositionBitmap]]) through an iterator,
+    * so only one bitmap is held at a time. */
+  private[delta] def writePacked(conf: Configuration, tablePath: Path, prefix: String,
+                                 bitmaps: Iterator[(Array[Byte], Long)]): Seq[Descriptor] = {
     val uuid = UUID.randomUUID()
-    val rel = s"deletion_vector_$uuid.bin"
-    val file = new Path(tablePath, rel)
+    val dir = if (prefix.isEmpty) tablePath else new Path(tablePath, prefix)
+    val file = new Path(dir, s"deletion_vector_$uuid.bin")
     val out = new DataOutputStream(file.getFileSystem(conf).create(file, false))
     val descs = Seq.newBuilder[Descriptor]
     try {
@@ -274,11 +271,42 @@ object StandardDv {
         out.write(bytes)
         val crc = new CRC32(); crc.update(bytes)
         out.writeInt(crc.getValue.toInt)
-        descs += Descriptor("u", z85FromUuid(uuid), Some(offset),
+        descs += Descriptor("u", prefix + z85FromUuid(uuid), Some(offset),
           bytes.length, cardinality)
         offset += 4 + bytes.length + 4
       }
     } finally out.close()
     descs.result()
+  }
+
+  /** One DML task's share of a merge-on-read write: `rows` are newly
+    * matched (data file path, row position) pairs in any order, every row
+    * of a file in this task. Each file's vector is its `prior` positions
+    * (path → current descriptor JSON, for files that already carry one)
+    * unioned with the new ones; all vectors go into one packed file under
+    * `prefix`. Returns (path, new descriptor JSON, newly deleted count) per
+    * file, and writes nothing when `rows` is empty. */
+  private[delta] def writeVectors(conf: Configuration, tablePath: Path, prefix: String,
+                                  prior: Map[String, String],
+                                  rows: Iterator[(String, Long)])
+      : Iterator[(String, String, Long)] = {
+    if (!rows.hasNext) return Iterator.empty
+    val byFile = scala.collection.mutable.HashMap
+      .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+    rows.foreach { case (p, pos) =>
+      byFile.getOrElseUpdate(p, new scala.collection.mutable.ArrayBuilder.ofLong) += pos
+    }
+    val files = byFile.keys.toSeq.sorted
+    val fresh = files.map(p => byFile.remove(p).get.result())
+    val descs = writePacked(conf, tablePath, prefix,
+      files.iterator.zip(fresh.iterator).map { case (p, positions) =>
+        val old = prior.get(p).map(j => readPositions(conf, tablePath, parse(j)))
+          .getOrElse(Array.emptyLongArray)
+        val all = (old ++ positions).distinct
+        (PositionBitmap.serialize(all), all.length.toLong)
+      })
+    files.iterator.zip(descs.iterator).zip(fresh.iterator).map {
+      case ((p, d), positions) => (p, d.json, positions.length.toLong)
+    }
   }
 }

@@ -17,13 +17,11 @@ sealed trait Action
 
 /** A data file that is part of the table (`rust/src/action.rs:150-185`).
   *
-  * `deletionVector` carries the Delta protocol's standard DV descriptor
-  * VERBATIM (raw JSON) when a foreign writer produced one. Graft's own
-  * merge-on-read DVs use the `graft.dv.*` tag extension instead
-  * ([[DeletionVectors]]); the standard RoaringBitmap format is NOT
-  * implemented, so [[ProtocolSupport]] refuses to scan any snapshot whose
-  * files carry this field — dropping it silently would resurface deleted
-  * rows. */
+  * `deletionVector` carries the Delta protocol's deletion-vector
+  * descriptor VERBATIM (raw JSON): the file's deleted row positions as a
+  * RoaringBitmap, inline or in a DV file ([[StandardDv]]). Graft's
+  * merge-on-read DML writes it and every scan applies it
+  * ([[DeletionVectors]]). */
 final case class AddAction(
     path: String,
     size: Long,

@@ -52,11 +52,9 @@ class GraftTable(
       path = f.path, deletionTimestamp = now, dataChange = true,
       extendedFileMetadata = Some(true),
       partitionValues = Some(f.partitionValues), size = Some(f.size))))
-    // DV directories the truncated files pointed at must tombstone HERE
-    // (every other abandoning path does): vacuum reclaims them only from
-    // tombstones — the walk prunes the underscore-hidden dir, so an
-    // untracked DV dir leaks forever
-    txn.addActions(graft.delta.DeletionVectors.supersededDirTombstones(
+    // DV files the truncated files pointed at tombstone HERE, like every
+    // other abandoning path, so vacuum reclaims them after retention
+    txn.addActions(graft.delta.DeletionVectors.supersededDvTombstones(
       snap, snap.files, now))
     val info = graft.delta.ActionCodec.mapper.createObjectNode()
     info.put("timestamp", now)

@@ -620,7 +620,7 @@ object DeltaQueries {
     // Standard deletion-vector replay (round 11): the table declares the
     // protocol `deletionVectors` feature via the delta.feature DDL, so the
     // DV DELETE re-adds files with standard `add.deletionVector`
-    // descriptors (the foreign-readable shape, not graft's legacy tags).
+    // descriptors (the foreign-readable shape).
     // The oracle replays the log and cross-checks, per active file,
     // visible rows = raw parquet rows − descriptor cardinality. (The
     // roaring-bitmap positions themselves are not decodable in SQL; the

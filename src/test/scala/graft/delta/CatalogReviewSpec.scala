@@ -54,16 +54,17 @@ class CatalogReviewSpec extends AnyFunSuite with SparkTestBase {
     } finally spark.sql("DROP TABLE IF EXISTS cr_tt")
   }
 
-  test("TRUNCATE tombstones superseded DV directories for vacuum") {
+  test("TRUNCATE tombstones superseded DV files for vacuum") {
     val dir = tempTable("cr-truncate-dv").toString
     GraftWriter.write((0 until 20).map(i => (i.toLong, "x")).toDF("id", "v"), dir,
       configuration = Some(Map(
         TableConfig.EnableDeletionVectors -> "true",
         TableConfig.DeletedFileRetention -> "interval 0 hours")))
-    Dml.delete(spark, dir, col("id") < 5) // graft DV dir on disk
-    val dvDirs = java.nio.file.Files.list(
-      java.nio.file.Paths.get(dir, DeletionVectors.Dir)).count()
-    assert(dvDirs == 1)
+    Dml.delete(spark, dir, col("id") < 5) // DV file on disk
+    val dvFiles = DeltaTable.forPath(spark, dir).snapshot.files
+      .flatMap(DeletionVectors.dvFileRel).distinct
+    assert(dvFiles.nonEmpty)
+    assert(dvFiles.forall(f => java.nio.file.Files.exists(java.nio.file.Paths.get(dir, f))))
     spark.sql(s"CREATE TABLE cr_trunc USING `graft-delta` OPTIONS (path '$dir')")
     try {
       spark.sql("TRUNCATE TABLE cr_trunc")
@@ -71,12 +72,10 @@ class CatalogReviewSpec extends AnyFunSuite with SparkTestBase {
       Thread.sleep(5)
       val reclaimed = DeltaTable.forPath(spark, dir).vacuum(0.0,
         dryRun = false, parallelDeleteThreshold = 1000)
-      assert(reclaimed.exists(_.startsWith(DeletionVectors.Dir + "/")),
-        s"truncated DV dir never reclaimed: $reclaimed")
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, DeletionVectors.Dir)) ||
-        java.nio.file.Files.list(
-          java.nio.file.Paths.get(dir, DeletionVectors.Dir)).count() == 0)
+      assert(dvFiles.forall(reclaimed.contains),
+        s"truncated DV files never reclaimed: $reclaimed")
+      assert(dvFiles.forall(f =>
+        !java.nio.file.Files.exists(java.nio.file.Paths.get(dir, f))))
     } finally spark.sql("DROP TABLE IF EXISTS cr_trunc")
   }
 

@@ -450,14 +450,14 @@ class ChangeDataFeedSpec extends AnyFunSuite with SparkTestBase {
       .find(_.toString.endsWith(".parquet")).get
     Files.copy(src, dir.resolve("a.parquet"))
     val size = Files.size(dir.resolve("a.parquet"))
-    // a graft DV dir deleting positions 0..4
-    (0L until 5L).map(p => ("a.parquet", p)).toDF("path", "pos")
-      .write.parquet(dir.resolve("_graft_dv/dv-t").toString)
+    // an inline deletion vector deleting positions 0..4
+    val bitmap = StandardDv.PositionBitmap.serialize((0L until 5L).toArray)
+    val padded = bitmap ++ new Array[Byte]((4 - bitmap.length % 4) % 4)
+    val inlineDv = StandardDv.Descriptor("i", StandardDv.Z85.encode(padded),
+      None, padded.length, 5L)
     def addDv(withDv: Boolean): String = {
-      val tags = if (withDv)
-        ""","tags":{"graft.dv.path":"_graft_dv/dv-t","graft.dv.cardinality":"5"}"""
-      else ""
-      s"""{"add":{"path":"a.parquet","partitionValues":{},"size":$size,"modificationTime":1587968586000,"dataChange":true$tags}}"""
+      val dv = if (withDv) s""","deletionVector":${inlineDv.json}""" else ""
+      s"""{"add":{"path":"a.parquet","partitionValues":{},"size":$size,"modificationTime":1587968586000,"dataChange":true$dv}}"""
     }
     writeCommit(dir, 0, Seq(protocol, metaData, addDv(withDv = false)))
     writeCommit(dir, 1, Seq(remove("a.parquet")))          // pure remove

@@ -507,7 +507,7 @@ class ColumnMappingSpec extends AnyFunSuite with SparkTestBase {
     val desc = StandardDv.descriptor(west)
     assert(desc.isDefined, s"expected add.deletionVector, got tags=${west.tags}")
     assert(desc.get.cardinality == 1L)
-    assert(west.tags.forall(t => !t.contains(DeletionVectors.PathTag)))
+    assert(west.tags.forall(!_.keys.exists(_.startsWith("graft.dv."))))
     // a second DV delete unions positions into ONE self-complete descriptor
     assert(Dml.delete(spark, dir, col("id") === 1L).rowsAffected == 1)
     val dt2 = DeltaTable.forPath(spark, dir)

@@ -27,7 +27,7 @@ class DeletionVectorsSpec extends AnyFunSuite with SparkTestBase {
     assert(m.rowsAffected == 10)
 
     val dt = DeltaTable.forPath(spark, dir)
-    // same physical files, now carrying DV pointers
+    // same physical files, now carrying DV descriptors
     assert(dt.files.map(_.path).toSet == dataPaths)
     assert(dt.files.forall(a => DeletionVectors.hasDv(a) ||
       DeletionVectors.cardinality(a) == 0))
@@ -133,113 +133,111 @@ class DeletionVectorsSpec extends AnyFunSuite with SparkTestBase {
     assert(dt.toDF.count() == 51)
   }
 
-  test("vacuum never touches DV directories; clone refuses DV snapshots") {
+  /** Table-relative DV files the current snapshot references. */
+  private def liveDvFiles(dir: String): Set[String] =
+    DeltaLog.forPath(spark, dir).update().files.flatMap(DeletionVectors.dvFileRel).toSet
+
+  test("vacuum never touches live DV files; clone refuses DV snapshots") {
     val dir = dvTable("dv-vacuum")
     Dml.delete(spark, dir, col("id") < 10)
+    val live = liveDvFiles(dir)
+    assert(live.nonEmpty)
+    // aged past retention, but referenced: never a vacuum candidate
+    val old = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 400L * 3600 * 1000)
+    live.foreach(f => java.nio.file.Files.setLastModifiedTime(
+      java.nio.file.Paths.get(dir, f), old))
     val dropped = DeltaTable.forPath(spark, dir)
       .vacuum(retentionHours = 200, dryRun = true)
-    assert(!dropped.exists(_.startsWith(DeletionVectors.Dir)))
+    assert(dropped.toSet.intersect(live).isEmpty, s"vacuum would drop live DV files: $dropped")
     val ex = intercept[IllegalStateException] {
       Clone.shallow(spark, dir, tempTable("dv-clone-tgt").toString)
     }
     assert(ex.getMessage.contains("deletion vectors"))
   }
 
-  test("DistributedReplay carries DV tags") {
+  test("DistributedReplay carries DV descriptors") {
     val dir = dvTable("dv-replay")
     Dml.delete(spark, dir, col("id") < 7)
     val log = DeltaLog.forPath(spark, dir)
     val adds = DistributedReplay.prunedAddActions(log)
     assert(adds.map(DeletionVectors.cardinality).sum == 7)
     assert(adds.exists(DeletionVectors.hasDv))
+    assert(adds.filter(DeletionVectors.hasDv).map(a => a.path -> a.deletionVector).toMap ==
+      log.update().files.filter(DeletionVectors.hasDv).map(a => a.path -> a.deletionVector).toMap)
   }
 
-  test("enabling DVs bumps minReaderVersion to fence foreign readers") {
+  test("enabling DVs lifts the protocol to (3, 7) with the deletionVectors feature") {
     val dir = dvTable("dv-fence")
     val snap = DeltaLog.forPath(spark, dir).update()
-    // a reader that doesn't know the graft DV tag extension would silently
-    // resurrect deleted rows — version 3 (table-features floor) fences it
-    assert(snap.minReaderVersion == 3)
-    assert(snap.minWriterVersion >= 2)
-    // our own replay is version-tolerant: reads keep working
+    // foreign readers must apply the descriptors or refuse the table: the
+    // feature is named on BOTH lists, plus what legacy writer 2 implied
+    assert(snap.minReaderVersion == 3 && snap.minWriterVersion == 7)
+    assert(snap.readerFeatures.contains(Set("deletionVectors")))
+    assert(snap.writerFeatures.contains(Set("appendOnly", "invariants", "deletionVectors")))
     Dml.delete(spark, dir, col("id") < 5)
     assert(DeltaTable.forPath(spark, dir).toDF.count() == 95)
   }
 
-  test("re-delete tombstones the superseded DV dir; vacuum reclaims it") {
+  test("re-delete tombstones the superseded DV file; vacuum reclaims it") {
     val dir = dvTable("dv-reclaim")
-    Dml.delete(spark, dir, col("id") < 10)  // DV dir A
-    val dirA = DeltaLog.forPath(spark, dir).update()
-      .files.flatMap(DeletionVectors.dvPath).distinct
-    assert(dirA.size == 1)
-    Dml.delete(spark, dir, col("id") >= 10 && col("id") < 20) // supersedes → dir B
+    Dml.delete(spark, dir, col("id") < 10)  // DV files A
+    val filesA = liveDvFiles(dir)
+    assert(filesA.nonEmpty)
+    // every data file is hit again, so every A file is superseded → B
+    Dml.delete(spark, dir, col("id") >= 10 && col("id") < 20 || col("id") >= 90)
     val log = DeltaLog.forPath(spark, dir)
     val snap = log.update()
-    val liveDirs = snap.files.flatMap(DeletionVectors.dvPath).toSet
-    assert(!liveDirs.contains(dirA.head), "old dir must be fully superseded")
-    // the superseding commit tombstoned dir A
-    assert(snap.tombstones.exists(t => t.path == dirA.head && !t.dataChange))
-    // fresh tombstone: not vacuum-eligible yet
-    assert(!new DeltaTable(log, snap).vacuum(dryRun = true).contains(dirA.head))
-    // age it via a hand-written expired tombstone, then vacuum for real
-    writeCommit(java.nio.file.Paths.get(dir), snap.version + 1,
-      Seq(remove(dirA.head, ts = System.currentTimeMillis() - 169L * 3600 * 1000)))
+    assert(liveDvFiles(dir).intersect(filesA).isEmpty, "old files must be fully superseded")
+    // the superseding commit tombstoned every A file
+    filesA.foreach(a => assert(snap.tombstones.exists(t => t.path == a && !t.dataChange)))
+    // fresh tombstones: not vacuum-eligible yet
+    assert(new DeltaTable(log, snap).vacuum(dryRun = true).toSet.intersect(filesA).isEmpty)
+    // age them via hand-written expired tombstones, then vacuum for real
+    writeCommit(java.nio.file.Paths.get(dir), snap.version + 1, filesA.toSeq.map(a =>
+      remove(a, ts = System.currentTimeMillis() - 169L * 3600 * 1000)))
     val log2 = DeltaLog.forPath(spark, dir)
     val dt2 = new DeltaTable(log2, log2.update())
     val deleted = dt2.vacuum(retentionHours = 168, dryRun = false)
-    assert(deleted.contains(dirA.head))
+    assert(filesA.subsetOf(deleted.toSet))
     val fs = log2.tablePath.getFileSystem(spark.sessionState.newHadoopConf())
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(log2.tablePath, dirA.head)))
-    // dir B intact, logical view unharmed
-    assert(DeltaTable.forPath(spark, dir).toDF.count() == 80)
-    assert(DeltaTable.forPath(spark, dir).toDF.filter(col("id") < 20).count() == 0)
+    filesA.foreach(a => assert(!fs.exists(new org.apache.hadoop.fs.Path(log2.tablePath, a))))
+    // files B intact, logical view unharmed
+    assert(DeltaTable.forPath(spark, dir).toDF.count() == 70)
+    assert(DeltaTable.forPath(spark, dir).toDF.filter(col("id") < 20 || col("id") >= 90)
+      .count() == 0)
   }
 
-  test("DV read plan: path restriction is a broadcast join, not an In literal") {
-    val dir = dvTable("dv-planshape")
-    Dml.delete(spark, dir, col("id") < 10)
-    val df = DeltaTable.forPath(spark, dir).toDF
-    assert(df.count() == 90) // materialize with AQE final plan
-    val plan = df.queryExecution.executedPlan.toString
-    // the anti-join subtracts DV rows; the DV frame restricts its paths via
-    // a broadcast semi-join — an `In`-literal over 10⁵⁺ paths would be a
-    // planner/driver killer at scale
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
-      s"expected a broadcast join in the DV plan:\n$plan")
-    assert(!plan.contains("path#") || !plan.contains(" IN ("),
-      "DV path restriction regressed to an In-literal")
-  }
-
-  test("restore to a pre-delete version resurrects DV'd rows (tag-aware diff)") {
+  test("restore to a pre-delete version resurrects DV'd rows (descriptor-aware diff)") {
     val dir = dvTable("dv-restore")
     val preDelete = DeltaLog.forPath(spark, dir).update().version
     val m = Dml.delete(spark, dir, col("id") < 10)
     assert(DeltaTable.forPath(spark, dir).toDF.count() == 90)
 
-    val dvDir = DeltaLog.forPath(spark, dir).update()
-      .files.flatMap(DeletionVectors.dvPath).distinct
-    assert(dvDir.size == 1)
+    val dvFiles = liveDvFiles(dir)
+    assert(dvFiles.nonEmpty)
 
     // a path-only diff would see identical path sets and restore NOTHING,
-    // silently keeping the deletion; the tag-aware diff re-adds the
-    // tag-less entries
+    // silently keeping the deletion; the entry diff re-adds the
+    // descriptor-less entries
     val r = DeltaTable.forPath(spark, dir).restoreToVersion(preDelete)
     assert(r.filesRestored > 0)
     val dt = DeltaTable.forPath(spark, dir)
     assert(dt.toDF.count() == 100)
     assert(!dt.files.exists(DeletionVectors.hasDv))
-    // the restore abandoned the DV dir its repointed entries referenced —
-    // without a tombstone vacuum could never reclaim it (r6 ADVICE leak)
-    assert(dt.snapshot.tombstones.exists(t => t.path == dvDir.head && !t.dataChange),
-      s"restore must tombstone the abandoned DV dir ${dvDir.head}")
+    // the restore abandoned the DV files its repointed entries referenced —
+    // without tombstones vacuum could never reclaim them
+    dvFiles.foreach(f => assert(dt.snapshot.tombstones.exists(t => t.path == f && !t.dataChange),
+      s"restore must tombstone the abandoned DV file $f"))
 
     // and restoring forward to the post-delete version re-applies the DVs;
-    // the dir is live again and vacuum's liveDvDirs guard protects it from
-    // the (now-stale) tombstone
+    // the files are live again and vacuum's live-descriptor guard protects
+    // them from the (now-stale) tombstones
     DeltaTable.forPath(spark, dir).restoreToVersion(m.version)
     assert(DeltaTable.forPath(spark, dir).toDF.count() == 90)
-    assert(!DeltaTable.forPath(spark, dir)
-      .vacuum(retentionHours = 168, dryRun = true).contains(dvDir.head))
+    assert(liveDvFiles(dir) == dvFiles)
+    assert(DeltaTable.forPath(spark, dir)
+      .vacuum(retentionHours = 168, dryRun = true).toSet.intersect(dvFiles).isEmpty)
   }
 
   test("incremental feeds skip pointer-only re-adds") {

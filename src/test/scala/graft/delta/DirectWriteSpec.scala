@@ -7,7 +7,9 @@ import scala.jdk.CollectionConverters._
 import graft.SparkTestBase
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Millis, Seconds, Span}
 
 /** Direct table writes ([[DirectCommitProtocol]]): files land at their
   * final paths with nothing left over on failure, and a CDF DML writes its
@@ -46,12 +48,19 @@ class DirectWriteSpec extends AnyFunSuite with SparkTestBase with JobCounting {
     finally s.close()
   }
 
-  /** The table directory holds exactly the live data files: nothing the
-    * failed write produced survives. */
+  /** The table directory holds exactly the live data files and the DV
+    * files they reference: nothing the failed write produced survives.
+    * A failed job returns while Spark may still be killing its sibling
+    * tasks, and a killed task deletes the file it had opened only as it
+    * aborts (observed up to ~200 ms later), so the check waits for those
+    * in-flight aborts; a file that outlives them fails it. */
   private def assertNoLeftovers(dir: String): Unit = {
-    val live = DeltaLog.forPath(spark, dir).update().files.map(_.path).toSet
-    val stray = filesUnder(dir) -- live
-    assert(stray.isEmpty, s"files left behind: $stray")
+    val files = DeltaLog.forPath(spark, dir).update().files
+    val live = (files.map(_.path) ++ files.flatMap(DeletionVectors.dvFileRel)).toSet
+    eventually(timeout(Span(10, Seconds)), interval(Span(50, Millis))) {
+      val stray = filesUnder(dir) -- live
+      assert(stray.isEmpty, s"files left behind: $stray")
+    }
   }
 
   /** Every directory entry name under the table, `_delta_log` included. */
@@ -118,6 +127,31 @@ class DirectWriteSpec extends AnyFunSuite with SparkTestBase with JobCounting {
 
   test("a CDF DELETE that loses a commit conflict leaves no files") {
     val dir = cdfTable("dw-race-delete", rows(40))
+    val racer = racing(dir)
+    intercept[MetadataChangedException](Dml.delete(spark, dir, racer < 5L))
+    assert(Racer.fired)
+    assertNoLeftovers(dir)
+  }
+
+  test("a DV UPDATE whose copy write fails a CHECK leaves no DV or data files") {
+    val dir = tempTable("dw-check-dv-update").toString
+    GraftWriter.write(rows(40).toDF("id", "v").repartition(2), dir)
+    DeltaTable.forPath(spark, dir).setProperties(
+      Map(TableConfig.EnableDeletionVectors -> "true"))
+    DeltaTable.forPath(spark, dir).addCheckConstraint("notbad", "v <> 'bad'")
+    Dml.delete(spark, dir, col("id") < 4L) // live DVs the failed op must union
+    // the vectors are written before the copies, so the CHECK fails after
+    // this operation's DV files exist
+    intercept[Exception](Dml.update(spark, dir, col("id") % 5 === 0, Map("v" -> lit("bad"))))
+    assertNoLeftovers(dir)
+    assert(DeltaTable.forPath(spark, dir).toDF.count() == 36)
+  }
+
+  test("a DV DELETE that loses a commit conflict leaves no DV files") {
+    val dir = tempTable("dw-race-dv-delete").toString
+    GraftWriter.write(rows(40).toDF("id", "v").repartition(2), dir)
+    DeltaTable.forPath(spark, dir).setProperties(
+      Map(TableConfig.EnableDeletionVectors -> "true"))
     val racer = racing(dir)
     intercept[MetadataChangedException](Dml.delete(spark, dir, racer < 5L))
     assert(Racer.fired)

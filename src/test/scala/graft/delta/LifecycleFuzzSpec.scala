@@ -24,9 +24,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class LifecycleFuzzSpec extends AnyFunSuite with SparkTestBase {
   import LogFixtures.tempTable
 
-  /** Independent raw-log fold: path → latest state (isAdd, dvCardinality).
-    * Reads graft tag DVs (`graft.dv.cardinality`) and standard descriptor
-    * DVs (`deletionVector.cardinality`) alike. */
+  /** Independent raw-log fold: path → latest state (isAdd, dvCardinality),
+    * the cardinality read from each Add's `deletionVector` descriptor. */
   private def rawActiveFiles(tableDir: String): Map[String, Long] = {
     val mapper = new ObjectMapper()
     val logDir = new java.io.File(tableDir, "_delta_log")
@@ -38,14 +37,10 @@ class LifecycleFuzzSpec extends AnyFunSuite with SparkTestBase {
       case a => a.max
     }
 
-    def cardOf(add: com.fasterxml.jackson.databind.JsonNode): Long = {
-      val tag = Option(add.get("tags")).filterNot(_.isNull)
-        .flatMap(t => Option(t.get(DeletionVectors.CardTag)))
-        .map(_.asText.toLong)
-      val std = Option(add.get("deletionVector")).filterNot(_.isNull)
+    def cardOf(add: com.fasterxml.jackson.databind.JsonNode): Long =
+      Option(add.get("deletionVector")).filterNot(_.isNull)
         .flatMap(dv => Option(dv.get("cardinality"))).map(_.asLong)
-      tag.orElse(std).getOrElse(0L)
-    }
+        .getOrElse(0L)
 
     // (version, isAdd, path, card); checkpoint = complete base at ckptV
     val acts = scala.collection.mutable.ArrayBuffer[(Long, Int, String, Long)]()

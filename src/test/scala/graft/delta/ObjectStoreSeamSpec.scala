@@ -222,6 +222,14 @@ class ObjectStoreSeamSpec extends AnyFunSuite with SparkTestBase {
         val p = new Path(dir, rel)
         if (!fs.exists(p)) 0 else fs.listStatus(p).length
       }
+      // DV files on disk that the table's log does not reference
+      def strayDvFiles(): Set[String] = {
+        val it = fs.listFiles(new Path(dir), true)
+        val onDisk = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(_.getPath.toUri.getPath.stripPrefix(new Path(dir).toUri.getPath).stripPrefix("/"))
+          .filter(_.matches("(.*/)?deletion_vector_[-0-9a-f]{36}\\.bin")).toSet
+        onDisk -- DeltaLog.forPath(spark, dir).update().files.flatMap(DeletionVectors.dvFileRel)
+      }
 
       FailingRenameFactory.failFromVersion = 2 // every DML commit now dies
       try {
@@ -229,14 +237,14 @@ class ObjectStoreSeamSpec extends AnyFunSuite with SparkTestBase {
           Dml.delete(spark, dir, col("id") < 10)
         }
         assert(e1.getMessage.contains("injected"))
-        assert(dirCount(DeletionVectors.Dir) == 0, "staged DV dir leaked")
+        assert(strayDvFiles().isEmpty, s"staged DV files leaked: ${strayDvFiles()}")
         assert(dirCount(ChangeDataFeed.Dir) == 0, "staged CDC dir leaked")
 
         val e2 = intercept[RuntimeException] {
           Dml.update(spark, dir, col("id") === 5L, Map("v" -> org.apache.spark.sql.functions.lit("X")))
         }
         assert(e2.getMessage.contains("injected"))
-        assert(dirCount(DeletionVectors.Dir) == 0)
+        assert(strayDvFiles().isEmpty, s"staged DV files leaked: ${strayDvFiles()}")
         assert(dirCount(ChangeDataFeed.Dir) == 0)
       } finally FailingRenameFactory.failFromVersion = Long.MaxValue
 

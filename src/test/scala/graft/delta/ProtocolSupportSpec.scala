@@ -45,12 +45,17 @@ class ProtocolSupportSpec extends AnyFunSuite with SparkTestBase {
     assert(DeltaTable.forPath(spark, dir).toDF.count() == 3)
   }
 
-  test("reader v3 with timestampNtz is supported; absent features = graft's own DV shape") {
+  test("reader v3 with timestampNtz is supported; absent features (retired DV shape) refuse") {
     val ntz = tableWithProtocol("ps-ntz",
       protocolLine(3, 7, rf = Some(Seq("timestampNtz")), wf = Some(Seq("timestampNtz"))))
     assert(DeltaTable.forPath(spark, ntz).toDF.count() == 2)
+    // reader 3 demands a feature list; the bare shape was graft's retired
+    // tag-format DV fence, whose tags no longer read
     val legacy = tableWithProtocol("ps-legacy", protocolLine(3, 2))
-    assert(DeltaTable.forPath(spark, legacy).toDF.count() == 2)
+    val e = intercept[UnsupportedProtocolException] {
+      DeltaTable.forPath(spark, legacy).toDF.count()
+    }
+    assert(e.getMessage.contains("retired tag-format deletion vectors"))
   }
 
   test("reader v4 refuses; writer v5/v6 without mapped columns in use write") {
@@ -217,10 +222,13 @@ class ProtocolSupportSpec extends AnyFunSuite with SparkTestBase {
       RewriteFence.servableAdds("t", 5, Seq(md),
         ignoreChanges = true, ignoreDeletes = true)
     }
-    // graft's OWN DV protocol bump (reader 3, no feature list) keeps serving
-    assert(RewriteFence.servableAdds("t", 5,
-      Seq(line(protocolLine(3, 2))), ignoreChanges = false,
-      ignoreDeletes = false).isEmpty)
+    // the retired tag-format DV protocol (reader 3, no feature list) stops
+    // the stream
+    intercept[UnsupportedProtocolException] {
+      RewriteFence.servableAdds("t", 5,
+        Seq(line(protocolLine(3, 2))), ignoreChanges = false,
+        ignoreDeletes = false)
+    }
   }
 
   test("protocol features round-trip through JSON and checkpoint") {

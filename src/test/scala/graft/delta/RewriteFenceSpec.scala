@@ -10,8 +10,9 @@ class RewriteFenceSpec extends AnyFunSuite {
   private def add(path: String, dv: Option[String] = None,
                   dataChange: Boolean = true): AddAction =
     AddAction(path, 100L, Map.empty, 0L, dataChange,
-      tags = dv.map(d => Map(DeletionVectors.PathTag -> d,
-                             DeletionVectors.CardTag -> "1")))
+      deletionVector = dv.map(d => StandardDv.Descriptor("u", d, Some(1), 40, 1L).json))
+  /** A Z85-encoded DV file id (20 chars), as a "u" descriptor carries. */
+  private val DvId = StandardDv.Z85.encode(new Array[Byte](16))
   private def remove(path: String, dataChange: Boolean = true): RemoveAction =
     RemoveAction(path, 0L, dataChange)
 
@@ -47,7 +48,7 @@ class RewriteFenceSpec extends AnyFunSuite {
   }
 
   test("DV DELETE (same-path re-add with DV pointer) gates like a delete") {
-    val commit = Seq(remove("a"), add("a", dv = Some("_graft_dv/d1")))
+    val commit = Seq(remove("a"), add("a", dv = Some(DvId)))
     val e = intercept[IllegalStateException](serve(commit))
     assert(e.getMessage.contains("ignoreDeletes") &&
       e.getMessage.contains("deletion-vector"))
@@ -56,7 +57,7 @@ class RewriteFenceSpec extends AnyFunSuite {
   }
 
   test("DV UPDATE (pointer re-add + fresh copies) gates like a rewrite") {
-    val commit = Seq(remove("a"), add("a", dv = Some("_graft_dv/d1")), add("b"))
+    val commit = Seq(remove("a"), add("a", dv = Some(DvId)), add("b"))
     val e = intercept[IllegalStateException](serve(commit, ignoreDeletes = true))
     assert(e.getMessage.contains("ignoreChanges"))
     assert(serve(commit, ignoreChanges = true) == Seq("b"))
@@ -66,6 +67,6 @@ class RewriteFenceSpec extends AnyFunSuite {
     // e.g. RESTORE re-adds a DV-tagged entry whose path was not removed in
     // the same commit alongside other changes: the DV add serves nothing,
     // but it alone must not trip the delete fence
-    assert(serve(Seq(add("a", dv = Some("_graft_dv/d1")))).isEmpty)
+    assert(serve(Seq(add("a", dv = Some(DvId)))).isEmpty)
   }
 }

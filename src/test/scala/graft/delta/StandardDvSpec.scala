@@ -126,7 +126,7 @@ class StandardDvSpec extends AnyFunSuite with SparkTestBase {
       Array(2L, 4294967296L + 1),
       (100L until 200L).toArray)
     val bitmaps = sets.map(ps => (PositionBitmap.serialize(ps), ps.length.toLong))
-    val descs = writePacked(conf, dir, bitmaps.iterator)
+    val descs = writePacked(conf, dir, "", bitmaps.iterator)
     assert(descs.size == 3)
     assert(descs.map(_.pathOrInlineDv).distinct.size == 1, "one shared DV file")
     // protocol shape: version byte 1 ⇒ first offset is 1; each next offset
@@ -149,7 +149,7 @@ class StandardDvSpec extends AnyFunSuite with SparkTestBase {
   test("readPositions verifies CRC-32 and declared cardinality") {
     val dir = new Path(Files.createTempDirectory("graft-dv-crc-").toString)
     val ps = Array(1L, 2L, 3L)
-    val Seq(desc) = writePacked(conf, dir,
+    val Seq(desc) = writePacked(conf, dir, "",
       Iterator((PositionBitmap.serialize(ps), ps.length.toLong)))
 
     // corrupt one bitmap byte on disk → CRC mismatch. Drop Hadoop's own
@@ -171,6 +171,26 @@ class StandardDvSpec extends AnyFunSuite with SparkTestBase {
     val lying = desc.copy(cardinality = 99)
     val e2 = intercept[IllegalArgumentException](readPositions(conf, dir, lying))
     assert(e2.getMessage.contains("cardinality"))
+  }
+
+  test("writeVectors packs one task's files under the prefix, prior positions unioned in") {
+    val dir = new Path(Files.createTempDirectory("graft-dv-task-").toString)
+    val Seq(prior) = writePacked(conf, dir, "", Iterator(
+      (PositionBitmap.serialize(Array(3L, 8L)), 2L)))
+    val rows = Iterator(("b.parquet", 4L), ("a.parquet", 1L), ("b.parquet", 0L),
+      ("a.parquet", 5L), ("b.parquet", 9L))
+    val out = writeVectors(conf, dir, "dv-op1", Map("a.parquet" -> prior.json), rows).toSeq
+    assert(out.map(o => (o._1, o._3)) == Seq(("a.parquet", 2L), ("b.parquet", 3L)))
+    val descs = out.map(o => o._1 -> parse(o._2)).toMap
+    assert(descs.values.map(_.pathOrInlineDv).toSet.size == 1, "one DV file per task")
+    assert(descs.values.forall(_.pathOrInlineDv.startsWith("dv-op1")))
+    assert(descs("a.parquet").cardinality == 4)
+    assert(readPositions(conf, dir, descs("a.parquet")).toSeq == Seq(1L, 3L, 5L, 8L))
+    assert(readPositions(conf, dir, descs("b.parquet")).toSeq == Seq(0L, 4L, 9L))
+    assert(descs("a.parquet").absolutePath(dir).getParent == new Path(dir, "dv-op1"))
+    // an empty task writes no file
+    assert(writeVectors(conf, dir, "dv-op2", Map.empty, Iterator.empty).isEmpty)
+    assert(!new Path(dir, "dv-op2").getFileSystem(conf).exists(new Path(dir, "dv-op2")))
   }
 
   test("inline descriptors decode without touching the filesystem") {

@@ -55,7 +55,7 @@ class StandardDvTableSpec extends AnyFunSuite with SparkTestBase {
     val sizeA = writeDataFile(dir, "a.parquet", 0L until 10L)
     val sizeB = writeDataFile(dir, "b.parquet", 10L until 20L)
 
-    val Seq(descA) = StandardDv.writePacked(conf, new Path(dir.toString),
+    val Seq(descA) = StandardDv.writePacked(conf, new Path(dir.toString), "",
       Iterator((StandardDv.PositionBitmap.serialize(Array(1L, 3L)), 2L)))
     val inlineBytes = StandardDv.PositionBitmap.serialize(Array(0L))
     val padded = inlineBytes ++ new Array[Byte]((4 - inlineBytes.length % 4) % 4)
@@ -144,7 +144,7 @@ class StandardDvTableSpec extends AnyFunSuite with SparkTestBase {
     val (dir, descA) = buildForeignDvTable()
     // a foreign writer superseded its own DV and left the old file behind:
     // unreferenced by any add, never tombstoned
-    val Seq(orphan) = StandardDv.writePacked(conf, new Path(dir.toString),
+    val Seq(orphan) = StandardDv.writePacked(conf, new Path(dir.toString), "",
       Iterator((StandardDv.PositionBitmap.serialize(Array(7L)), 1L)))
     val orphanRel = orphan.absolutePath(new Path("/")).toUri.getPath.stripPrefix("/")
     val liveRel = descA.absolutePath(new Path("/")).toUri.getPath.stripPrefix("/")
@@ -209,19 +209,20 @@ class StandardDvTableSpec extends AnyFunSuite with SparkTestBase {
     val a = dt.snapshot.files.find(_.path == "a.parquet").get
     val desc = StandardDv.descriptor(a).get
     // the new descriptor carries the COMPLETE union {1,3,5} in the
-    // protocol's format; the graft tag extension is absent
+    // protocol's format, in a DV file under the operation's directory; no
+    // retired-format tag is written
     assert(desc.cardinality == 3)
     assert(desc.storageType == "u")
-    assert(a.tags.forall(t => !t.contains(DeletionVectors.PathTag)))
+    assert(desc.pathOrInlineDv.length > 20, "expected a per-operation prefix")
+    assert(a.tags.forall(!_.keys.exists(_.startsWith("graft.dv."))))
     assert(StandardDv.readPositions(conf, new Path(dir.toString), desc)
       .toSeq == Seq(1L, 3L, 5L))
 
-    // the superseded packed file is tombstoned for vacuum; no staged
-    // graft-DV parquet dir survives
+    // the superseded packed file is tombstoned for vacuum; nothing is
+    // staged in the retired format's parquet directory
     val oldRel = oldDescA.absolutePath(new Path("/")).toUri.getPath.stripPrefix("/")
     assert(dt.snapshot.tombstones.exists(_.path == oldRel))
-    assert(!Files.exists(dir.resolve(DeletionVectors.Dir)) ||
-      Files.list(dir.resolve(DeletionVectors.Dir)).iterator().asScala.isEmpty)
+    assert(!Files.exists(dir.resolve("_graft_dv")))
   }
 
   test("OPTIMIZE folds foreign standard DVs into clean rewritten files") {

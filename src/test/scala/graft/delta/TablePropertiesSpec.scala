@@ -202,8 +202,8 @@ class TablePropertiesSpec extends AnyFunSuite with SparkTestBase {
     val afterDv = log.update()
     val dvAdds = afterDv.files.filter(_.deletionVector.isDefined)
     assert(dvAdds.nonEmpty, "DV delete must emit standard descriptors")
-    assert(afterDv.files.forall(_.tags.forall(t =>
-      !t.contains(DeletionVectors.PathTag))), "no legacy tags expected")
+    assert(afterDv.files.forall(_.tags.forall(!_.keys.exists(_.startsWith("graft.dv.")))),
+      "no retired-format tags expected")
     assert(DeltaTable.forPath(spark, dir).toDF.count() == 80)
 
     // writer-only feature folds onto the existing lists; idempotent re-set
