@@ -331,8 +331,8 @@ object Dml {
     catch { case e: Throwable => discardDirs(spark, log, dirs); throw e }
 
   /** Write the predicate's matched positions as deletion vectors and return
-    * (affected Add, its new descriptor, newly deleted count) per file, plus
-    * the operation's table-relative DV directory. Empty match ⇒ `Nil`.
+    * (affected Add, its new descriptor JSON, newly deleted count) per file,
+    * plus the operation's table-relative DV directory. Empty match ⇒ `Nil`.
     *
     * One distributed job: the predicate scan (existing DVs applied) yields
     * (path, pos) rows, shuffled by file so every row of a file meets in one
@@ -344,7 +344,7 @@ object Dml {
     * one recursive delete reclaims a failed or lost operation. */
   private def writeDeletionVectors(spark: SparkSession, log: DeltaLog,
                                    snap: Snapshot, predicate: Column)
-      : (Seq[(AddAction, StandardDv.Descriptor, Long)], String) = {
+      : (Seq[(AddAction, String, Long)], String) = {
     import DeletionVectors.{PathCol, PosCol}
     import spark.implicits._
     val dvDir = s"dv-${java.util.UUID.randomUUID()}"
@@ -355,8 +355,10 @@ object Dml {
       spark.sessionState.newHadoopConf())
     val tableDir = log.tablePath.toString
     discardOnFailure(spark, log, Seq(dvDir)) {
+      // a failed job returns once its tasks have ended, so none creates a
+      // DV file after the directory's delete
       val written =
-        try
+        try TaskSettling(spark.sparkContext) {
           // mapped tables: the predicate speaks logical names, the
           // provenance columns survive the alias (logicalScanWithMeta)
           logicalScanWithMeta(spark, log, snap, snap.files)
@@ -367,7 +369,7 @@ object Dml {
             .mapPartitions(rows => StandardDv.writeVectors(serConf.value,
               new org.apache.hadoop.fs.Path(tableDir), dvDir, prior.value, rows))
             .collect()
-        finally prior.destroy()
+        } finally prior.destroy()
       val byPath = written.map(w => w._1 -> w).toMap
       val affected = snap.files.filter(a => byPath.contains(a.path))
       if (affected.size != written.length)
@@ -377,7 +379,7 @@ object Dml {
           s"${(byPath.keySet -- affected.map(_.path)).take(3).mkString(", ")}")
       (affected.map { a =>
         val (_, desc, newly) = byPath(a.path)
-        (a, StandardDv.parse(desc), newly)
+        (a, desc, newly)
       }, dvDir)
     }
   }
@@ -386,12 +388,12 @@ object Dml {
     * OLD vectors; a semi-join against the NEW ones keeps exactly the rows
     * this operation removed), from the affected files only. */
   private def newlyDeleted(spark: SparkSession, log: DeltaLog, snap: Snapshot,
-                           affected: Seq[(AddAction, StandardDv.Descriptor, Long)],
+                           affected: Seq[(AddAction, String, Long)],
                            rtNames: Option[(String, String)] = None) = {
     import DeletionVectors.{PathCol, PosCol}
     val scanned = logicalScanWithMeta(spark, log, snap, affected.map(_._1), rtNames)
     val dv = DeletionVectors.dvDf(spark, log, affected.map { case (a, d, _) =>
-      a.copy(deletionVector = Some(d.json)) }).get
+      a.copy(deletionVector = Some(d)) }).get
     scanned.join(dv,
       scanned(PathCol) === dv("path") && scanned(PosCol) === dv("pos"), "leftsemi")
   }
@@ -399,14 +401,14 @@ object Dml {
   /** remove + re-add each affected file with its new descriptor; DV files
     * left unreferenced by the re-point are tombstoned for vacuum. */
   private def addDvReAdds(txn: OptimisticTransaction, snap: Snapshot,
-                          affected: Seq[(AddAction, StandardDv.Descriptor, Long)],
+                          affected: Seq[(AddAction, String, Long)],
                           now: Long): Unit = {
     affected.foreach { case (f, desc, _) =>
       txn.addAction(RemoveAction(
         path = f.path, deletionTimestamp = now, dataChange = true,
         extendedFileMetadata = Some(true),
         partitionValues = Some(f.partitionValues), size = Some(f.size)))
-      txn.addAction(f.copy(dataChange = true, deletionVector = Some(desc.json)))
+      txn.addAction(f.copy(dataChange = true, deletionVector = Some(desc)))
     }
     txn.addActions(DeletionVectors.supersededDvTombstones(
       snap, affected.map(_._1), now))

@@ -628,12 +628,15 @@ object GraftWriter {
     val oldDesc = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(s"$WriteJobDescription $path")
     // named "save" like the df.write it replaces: QueryExecutionListeners
-    // hear named executions only
-    try SQLExecution.withNewExecutionId(qe, Some("save")) {
-      FileFormatWriter.write(
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan, format, protocol,
-        FileFormatWriter.OutputSpec(tablePath.toString, Map.empty, plan.output),
-        spark.sessionState.newHadoopConf(), partAttrs, None, Nil, Map.empty)
+    // hear named executions only. A failed job returns only once its killed
+    // tasks have aborted, deleting the files they had opened.
+    try TaskSettling(sc) {
+      SQLExecution.withNewExecutionId(qe, Some("save")) {
+        FileFormatWriter.write(
+          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan, format, protocol,
+          FileFormatWriter.OutputSpec(tablePath.toString, Map.empty, plan.output),
+          spark.sessionState.newHadoopConf(), partAttrs, None, Nil, Map.empty)
+      }
     } finally sc.setJobDescription(oldDesc)
     val adds = protocol.actions.collect { case a: AddAction => a }
     val cdcs = protocol.actions.collect { case c: CdcAction => c }

@@ -261,21 +261,30 @@ object StandardDv {
     val uuid = UUID.randomUUID()
     val dir = if (prefix.isEmpty) tablePath else new Path(tablePath, prefix)
     val file = new Path(dir, s"deletion_vector_$uuid.bin")
-    val out = new DataOutputStream(file.getFileSystem(conf).create(file, false))
+    val fs = file.getFileSystem(conf)
     val descs = Seq.newBuilder[Descriptor]
+    // a failure part-way (a prior vector failing its CRC, a killed task)
+    // deletes the partial file, which no descriptor will name
     try {
-      out.writeByte(FormatVersion.toInt)
-      var offset = 1
-      bitmaps.foreach { case (bytes, cardinality) =>
-        out.writeInt(bytes.length)
-        out.write(bytes)
-        val crc = new CRC32(); crc.update(bytes)
-        out.writeInt(crc.getValue.toInt)
-        descs += Descriptor("u", prefix + z85FromUuid(uuid), Some(offset),
-          bytes.length, cardinality)
-        offset += 4 + bytes.length + 4
-      }
-    } finally out.close()
+      val out = new DataOutputStream(fs.create(file, false))
+      try {
+        out.writeByte(FormatVersion.toInt)
+        var offset = 1
+        bitmaps.foreach { case (bytes, cardinality) =>
+          out.writeInt(bytes.length)
+          out.write(bytes)
+          val crc = new CRC32(); crc.update(bytes)
+          out.writeInt(crc.getValue.toInt)
+          descs += Descriptor("u", prefix + z85FromUuid(uuid), Some(offset),
+            bytes.length, cardinality)
+          offset += 4 + bytes.length + 4
+        }
+      } finally out.close()
+    } catch {
+      case e: Throwable =>
+        try fs.delete(file, false) catch { case _: Exception => () }
+        throw e
+    }
     descs.result()
   }
 

@@ -7,9 +7,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Column ⇄ catalyst-Expression bridge. `ExpressionUtils` is `private[sql]`
   * in Spark 4's Scala signatures, so — as extension libraries conventionally
   * do — this shim lives inside the `org.apache.spark.sql` package hierarchy
-  * to lift the conversions our custom expressions need. The only other file
-  * in this namespace is [[GraftDeltaStreamSource]] (the V1 `Source`
-  * interface is `private[sql]` too); all engine logic stays in `graft.*`. */
+  * to lift the conversions our custom expressions need. The other files in
+  * this namespace lift other private APIs the same way (the V1 `Source`
+  * interface, `V1Table`, the listener bus); all engine logic stays in
+  * `graft.*`. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

@@ -7,9 +7,7 @@ import scala.jdk.CollectionConverters._
 import graft.SparkTestBase
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.time.{Millis, Seconds, Span}
 
 /** Direct table writes ([[DirectCommitProtocol]]): files land at their
   * final paths with nothing left over on failure, and a CDF DML writes its
@@ -49,18 +47,12 @@ class DirectWriteSpec extends AnyFunSuite with SparkTestBase with JobCounting {
   }
 
   /** The table directory holds exactly the live data files and the DV
-    * files they reference: nothing the failed write produced survives.
-    * A failed job returns while Spark may still be killing its sibling
-    * tasks, and a killed task deletes the file it had opened only as it
-    * aborts (observed up to ~200 ms later), so the check waits for those
-    * in-flight aborts; a file that outlives them fails it. */
+    * files they reference: nothing the failed write produced survives. */
   private def assertNoLeftovers(dir: String): Unit = {
     val files = DeltaLog.forPath(spark, dir).update().files
     val live = (files.map(_.path) ++ files.flatMap(DeletionVectors.dvFileRel)).toSet
-    eventually(timeout(Span(10, Seconds)), interval(Span(50, Millis))) {
-      val stray = filesUnder(dir) -- live
-      assert(stray.isEmpty, s"files left behind: $stray")
-    }
+    val stray = filesUnder(dir) -- live
+    assert(stray.isEmpty, s"files left behind: $stray")
   }
 
   /** Every directory entry name under the table, `_delta_log` included. */
@@ -155,6 +147,35 @@ class DirectWriteSpec extends AnyFunSuite with SparkTestBase with JobCounting {
     val racer = racing(dir)
     intercept[MetadataChangedException](Dml.delete(spark, dir, racer < 5L))
     assert(Racer.fired)
+    assertNoLeftovers(dir)
+  }
+
+  test("a DV DELETE whose vector write fails in one task leaves no DV files") {
+    val dir = tempTable("dw-fail-dv-write").toString
+    GraftWriter.write(rows(80).toDF("id", "v").repartition(4), dir)
+    DeltaTable.forPath(spark, dir).setProperties(
+      Map(TableConfig.EnableDeletionVectors -> "true"))
+    Dml.delete(spark, dir, col("id") % 10 === 0L)
+    // corrupt one file's prior vector: the task that unions it into its new
+    // vector fails part-way through its DV file, while its siblings write
+    // theirs. Hadoop's .crc sidecar goes, so the protocol's CRC-32 fires.
+    val log = DeltaLog.forPath(spark, dir)
+    val before = log.update()
+    val desc = StandardDv.parse(before.files.flatMap(_.deletionVector).head)
+    val local = Paths.get(desc.absolutePath(log.tablePath).toUri.getPath)
+    Files.deleteIfExists(local.getParent.resolve("." + local.getFileName + ".crc"))
+    val bytes = Files.readAllBytes(local)
+    val at = desc.offset.get + 4 + 2
+    bytes(at) = (bytes(at) ^ 0x40).toByte
+    Files.write(local, bytes)
+    // several vector-write tasks, not one coalesced task
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
+    val e =
+      try intercept[Exception](Dml.delete(spark, dir, col("id") % 10 === 1L))
+      finally spark.conf.unset(key)
+    assert(e.getMessage.contains("CRC-32"), e.getMessage)
+    assert(log.update().version == before.version)
     assertNoLeftovers(dir)
   }
 

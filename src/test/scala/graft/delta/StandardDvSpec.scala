@@ -173,6 +173,19 @@ class StandardDvSpec extends AnyFunSuite with SparkTestBase {
     assert(e2.getMessage.contains("cardinality"))
   }
 
+  test("writePacked deletes its partial file when a vector fails part-way") {
+    val dir = new Path(Files.createTempDirectory("graft-dv-partial-").toString)
+    val ps = Array(1L, 2L)
+    val vectors = Iterator((PositionBitmap.serialize(ps), ps.length.toLong)) ++
+      Iterator.continually[(Array[Byte], Long)](
+        throw new IllegalArgumentException("prior vector fails CRC-32")).take(1)
+    val e = intercept[IllegalArgumentException](writePacked(conf, dir, "dv-op", vectors))
+    assert(e.getMessage.contains("CRC-32"))
+    val it = dir.getFileSystem(conf).listFiles(dir, true)
+    val left = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath).toList
+    assert(left.isEmpty, s"partial DV file left: $left")
+  }
+
   test("writeVectors packs one task's files under the prefix, prior positions unioned in") {
     val dir = new Path(Files.createTempDirectory("graft-dv-task-").toString)
     val Seq(prior) = writePacked(conf, dir, "", Iterator(
