@@ -779,6 +779,13 @@ object DeltaTable {
     new DeltaTable(log, snap)
   }
 
+  /** A handle over `snap`, a snapshot the caller already read from the
+    * shared log handle of `path` — saves the latest-version listing
+    * [[forPath]] would repeat. */
+  private[graft] def forSnapshot(spark: SparkSession, path: String,
+                                 snap: Snapshot): DeltaTable =
+    new DeltaTable(DeltaLog.forPath(spark, path), snap)
+
   /** [[forPath]] on a fresh, never-shared log handle — for callers that
     * deliberately exercise the cold-load/checkpoint-restore path (see
     * [[DeltaLog.forPathUncached]]). */

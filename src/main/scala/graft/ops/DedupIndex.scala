@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.delta.{AddAction, ChangeDataFeed, DeltaLog, DeltaTable,
-  GraftWriter, Merge, Optimize, PartitionFilter, StatsPredicate, TxnAction}
+  GraftWriter, Merge, MergeBuilder, MergeMetrics, Optimize, PartitionFilter,
+  Snapshot, StatsPredicate, TxnAction}
 
 /** STANDING near-dup index (r13 verdict #2): the MinHash-LSH dedup state
   * persisted as graft tables, so an arriving batch is deduplicated against
@@ -72,6 +73,14 @@ import graft.delta.{AddAction, ChangeDataFeed, DeltaLog, DeltaTable,
   * bucket crosses the cap at different corpus sizes), which would break the
   * ≡ contract. Audit with [[Dedup.oversizedBuckets]] before building over
   * an untrusted corpus.
+  *
+  * ONE SUPPORTED LAYOUT (r16 on): all three tables carry the same
+  * [[EpochKey]], members and survivors carry the `asof`/`dead` guard
+  * columns and each its own [[SourceVersionApp]] CAS mark, and buckets
+  * carries the source binding and the index mark. Every public entry
+  * checks this first ([[currentLayout]]) and refuses anything else —
+  * a torn rebuild, or an index built before r16 — with "rebuild it";
+  * [[buildFromSource]] over the same root is the migration.
   */
 object DedupIndex {
 
@@ -94,6 +103,12 @@ object DedupIndex {
     * params bound to a buckets table carrying the old params and mark,
     * served silently. Mirrors [[IvfIndex.EpochKey]] (r15 advice). */
   private[ops] val EpochKey = "graft.dedup.epoch"
+
+  /** The rules this index shares with [[IvfIndex]]: all three tables carry
+    * one [[EpochKey]]; buckets carries the binding and the index mark. */
+  private val Core = IndexCore("dedup index", EpochKey,
+    Seq("buckets", "members", "survivors"), SourcePathKey, SourceVersionApp,
+    "build it with buildFromSource")
 
   /** Per-refresh cap on probe-key collection: below it the standing-table
     * probes push their key sets as eager IN-set stats predicates, pruning
@@ -164,14 +179,19 @@ object DedupIndex {
   /** ONE buckets scan covering the union of the per-band pruned file sets.
     * `None` keys ⇒ unpruned full scan (the over-cap fallback). */
   private[graft] def prunedBuckets(spark: SparkSession, root: String,
-                                   keys: Option[Array[(Int, Long)]]): DataFrame = {
+                                   keys: Option[Map[Int, Array[Long]]]): DataFrame = {
     val dt = DeltaTable.forPath(spark, bucketsPath(root))
-    keys match {
-      case None => dt.toDF
-      case Some(ks) =>
-        val byBand = ks.groupBy(_._1).map { case (b, ps) => b -> ps.map(_._2) }
-        dt.toDFWithFiles(perBandPrune(dt.snapshot.files, byBand))
-    }
+    keys.fold(dt.toDF)(byBand => dt.toDFWithFiles(perBandPrune(dt.snapshot.files, byBand)))
+  }
+
+  /** The distinct (band_idx, band_hash) keys of `bandRows`, per band, when
+    * they fit under `cap`, else None (the unpruned fallback) — the key
+    * shape [[prunedBuckets]] and [[perBandPrune]] take. One job. */
+  private def bandKeysOf(bandRows: DataFrame, cap: Int): Option[Map[Int, Array[Long]]] = {
+    val rows = bandRows.select("band_idx", "band_hash").distinct()
+      .limit(cap + 1).collect()
+    if (rows.length > cap) None
+    else Some(rows.groupBy(_.getInt(0)).map { case (b, rs) => b -> rs.map(_.getLong(1)) })
   }
 
   /** Distinct values of `c` as a driver array when they fit under the probe
@@ -222,17 +242,17 @@ object DedupIndex {
     * refresh wall, and at 100 TB it is the same anti-pattern of re-sorting
     * a KB-sized generation of a TB-sized table. DV-carrying files always
     * count as pending (the cluster rewrite is what purges them).
-    * [[refreshFromSource]] runs the incremental pass itself; pre-r16
-    * indexes (no clustering domain) skip silently. */
+    * [[refreshFromSource]] runs the incremental pass itself. */
   def maintain(spark: SparkSession, root: String, full: Boolean = false,
                reclaimEvery: Long = 16L,
                retainVersions: Long = 16L): Long = {
-    Seq(bucketsPath(root), membersPath(root), survivorsPath(root)).foreach { p =>
-      val dt = DeltaTable.forPath(spark, p)
-      val cols = dt.clusteringColumns
+    val layout = currentLayout(spark, root)
+    Seq(bucketsPath(root) -> layout.buckets, membersPath(root) -> layout.members,
+        survivorsPath(root) -> layout.survivors).foreach { case (p, snap) =>
+      val cols = DeltaTable.clusteringColumnsOf(snap)
       if (cols.nonEmpty) {
         val spec = cols.mkString(",")
-        val pending = dt.snapshot.files.filter(a =>
+        val pending = snap.files.filter(a =>
           !a.tags.exists(_.get(Optimize.ClusterSpecTag).contains(spec)))
         val floor = maintainTargetBytes(spark) / 16
         // DV-carrying files BYPASS the floor, not just count toward it: the
@@ -240,7 +260,7 @@ object DedupIndex {
         // vectors, and a quiescent table whose DV files sit under the floor
         // would otherwise defer the purge forever — re-opening the r11
         // "DVs accumulate and block shallow clones" condition (r16 review)
-        if (full || dt.snapshot.files.exists(graft.delta.DeletionVectors.hasDv)
+        if (full || snap.files.exists(graft.delta.DeletionVectors.hasDv)
             || pending.size >= 64 || pending.map(_.size).sum >= floor)
           Optimize.cluster(spark, p,
             targetFileBytes = maintainTargetBytes(spark), full = full)
@@ -255,55 +275,50 @@ object DedupIndex {
     // call runs the retention-fenced [[compactDead]] and re-stamps — the
     // per-table DELETE scan amortizes to 1/reclaimEvery per refresh, and
     // dead rows stay bounded by O(takedowns over reclaimEvery +
-    // retainVersions source versions). `reclaimEvery <= 0` disables.
-    // Pre-r16 tables (no per-table CAS mark yet) skip silently — they
-    // converge to the guarded layout on their first refresh and join the
-    // cadence then. The first stamp starts the cadence WITHOUT compacting
-    // (a fresh build has no dead rows; an upgraded index waits one period,
-    // its dead rows already bounded by its history). Returns rows
-    // reclaimed this call.
+    // retainVersions source versions). `reclaimEvery <= 0` disables. The
+    // first stamp starts the cadence WITHOUT compacting (a fresh build has
+    // no dead rows). Returns rows reclaimed this call.
     if (reclaimEvery <= 0) return 0L
-    val bLog = DeltaLog.forPath(spark, bucketsPath(root))
-    val bSnap = bLog.update()
-    bSnap.appTransactionVersion.get(SourceVersionApp).fold(0L) { mark =>
-      val guarded = Seq(membersPath(root), survivorsPath(root)).forall(p =>
-        DeltaLog.forPath(spark, p).update()
-          .appTransactionVersion.contains(SourceVersionApp))
-      def stamp(): Unit = {
-        val txn = bLog.startTransaction(bLog.update())
-        txn.addAction(TxnAction(CompactedAtApp, mark))
-        txn.commit()
-      }
-      if (!guarded) 0L
-      else bSnap.appTransactionVersion.get(CompactedAtApp) match {
-        case None => stamp(); 0L
-        case Some(at) if mark - at >= reclaimEvery =>
-          val n = compactDead(spark, root, retainVersions)
-          stamp(); n
-        case _ => 0L
-      }
+    val mark = layout.binding.last
+    def stamp(): Unit = {
+      val bLog = DeltaLog.forPath(spark, bucketsPath(root))
+      bLog.startTransaction(bLog.update())
+        .addAction(TxnAction(CompactedAtApp, mark))
+        .commit()
+    }
+    layout.buckets.appTransactionVersion.get(CompactedAtApp) match {
+      case None => stamp(); 0L
+      case Some(at) if mark - at >= reclaimEvery =>
+        val n = compactDead(spark, root, retainVersions)
+        stamp(); n
+      case _ => 0L
     }
   }
 
-  /** Refuse an index whose three tables carry DIFFERENT build epochs — the
-    * torn-rebuild state (see [[EpochKey]]). Absent epochs (pre-epoch
-    * layouts) stay accepted. */
-  private def checkEpoch(spark: SparkSession, root: String): Unit = {
-    def cfg(p: String) = DeltaLog.forPath(spark, p).update()
-      .metadata.map(_.configuration).getOrElse(Map.empty[String, String])
-    val epochs = Seq("buckets" -> bucketsPath(root),
-        "members" -> membersPath(root), "survivors" -> survivorsPath(root))
-      .flatMap { case (n, p) => cfg(p).get(EpochKey).map(n -> _) }
-    // mixed PRESENT/ABSENT is torn too: a rebuild of a pre-epoch index
-    // that crashed mid-way stamps some tables and not others (r15 review
-    // — the present-only comparison accepted exactly that state). Only
-    // all-absent (pre-epoch layout) or all-equal passes.
-    if (epochs.nonEmpty &&
-        (epochs.size < 3 || epochs.map(_._2).distinct.size > 1))
-      throw new IllegalStateException(
-        s"dedup index at $root is torn: build epochs disagree " +
-        s"(${epochs.map { case (n, e) => s"$n=$e" }.mkString(", ")}) — a " +
-        "rebuild crashed between its table overwrites; rebuild it")
+  /** The three tables' snapshots of an index in the one supported layout
+    * (see the object doc), read once per entry, and the binding the
+    * buckets snapshot carries. */
+  private final case class Layout(buckets: Snapshot, members: Snapshot,
+                                  survivors: Snapshot,
+                                  binding: IndexCore.Binding)
+
+  /** The [[Layout]] of the index at `root`, or a loud "rebuild it": the
+    * three build epochs must agree ([[IndexCore]] — a torn rebuild,
+    * especially one with CHANGED params, would otherwise serve
+    * members/survivors computed under the new params beside buckets
+    * carrying the old ones), and members and survivors must carry the
+    * asof/dead fold guards and their own CAS marks. */
+  private def currentLayout(spark: SparkSession, root: String): Layout = {
+    val Seq(b, m, s) = Core.agreedSnapshots(spark, root)
+    Seq("members" -> m, "survivors" -> s).foreach { case (t, snap) =>
+      if (!Seq("asof", "dead").forall(snap.schema.fieldNames.contains) ||
+          !snap.appTransactionVersion.contains(SourceVersionApp))
+        throw new IllegalStateException(
+          s"dedup index at $root predates the current layout: $t lacks the " +
+          s"asof/dead guard columns or its own $SourceVersionApp mark — " +
+          "rebuild it with buildFromSource")
+    }
+    Layout(b, m, s, Core.binding(b, root))
   }
 
   /** Doc ids must be non-null and unique: a null id breaks the survivor
@@ -415,7 +430,7 @@ object DedupIndex {
     // high-water mark LAST — a crash leaves the mark un-advanced and the
     // next build/refresh redoes deterministic work. ONE epoch stamps all
     // three tables; a crash between the overwrites leaves them differing,
-    // which checkEpoch turns into a loud refusal instead of silently
+    // which currentLayout turns into a loud refusal instead of silently
     // serving mixed-params state (r15 advice)
     val epoch = java.util.UUID.randomUUID().toString
     def exists(p: String) = DeltaLog.forPath(spark, p).update().version >= 0
@@ -495,9 +510,10 @@ object DedupIndex {
       extraActions = Seq(TxnAction(SourceVersionApp, snap.version)),
       fileTags = Map(Optimize.ClusterSpecTag -> "band_hash"),
       clusterBy = if (bucketsExists) Nil else Seq("band_hash"))
-    // legacy-rebuild fallback: a PRE-clustering table being rebuilt still
-    // needs the declaration commit the fresh-create path folds in; on the
-    // common paths this is a snapshot-metadata check, no commit
+    // migration: a PRE-clustering table being rebuilt still needs the
+    // declaration commit the fresh-create path folds in (clusterBy is
+    // CREATE-only); on the common paths this is a snapshot-metadata
+    // check, no commit
     Seq(bucketsPath(root) -> Seq("band_hash"), membersPath(root) -> Seq("id"),
         survivorsPath(root) -> Seq("comp")).foreach { case (p, cols) =>
       val dt = DeltaTable.forPath(spark, p)
@@ -506,57 +522,34 @@ object DedupIndex {
     snap.version
   }
 
-  private def bindingOf(spark: SparkSession, root: String)
-      : (String, String, String, Long, Long, Int, Int, Long) = {
-    val snap = DeltaLog.forPath(spark, bucketsPath(root)).update()
-    val cfg = snap.metadata.map(_.configuration).getOrElse(Map.empty)
-    val src = cfg.getOrElse(SourcePathKey, throw new IllegalStateException(
-      s"no dedup index at $root (buildFromSource first)"))
-    val Array(tn, td, nh, nb) = cfg(ParamsKey).split(",").map(_.trim)
-    val last = snap.appTransactionVersion.getOrElse(SourceVersionApp,
-      throw new IllegalStateException(
-        s"dedup index at $root carries no $SourceVersionApp mark"))
-    (src, cfg(TextColKey), cfg(IdColKey), tn.toLong, td.toLong,
-      nh.toInt, nb.toInt, last)
-  }
-
   /** Fold the source's appends since the last refresh into the index (see
     * the object doc for the algorithm and the crash story). Returns
     * (newDocsIndexed, newVerifiedEdges). */
   def refreshFromSource(spark: SparkSession, root: String): (Long, Long) = {
-    checkEpoch(spark, root)
-    val (srcPath, textCol, idCol, tNum, tDen, numHashes, bands, last) =
-      bindingOf(spark, root)
-    val srcLog = DeltaLog.forPath(spark, srcPath)
-    val now = srcLog.update().version
-    if (now <= last) return (0L, 0L)
-    // pre-asof layouts (no monotone fold guard) cannot be folded safely —
-    // refuse loudly; a rebuild adopts the guarded layout (r15 second
-    // review)
-    require(DeltaLog.forPath(spark, membersPath(root)).update()
-        .schema.fieldNames.contains("asof"),
-      s"dedup index at $root predates the asof-guarded layout — rebuild " +
-      "it with buildFromSource")
-    // per-table CAS marks (r16): captured ONCE at the refresh's logical
-    // read point. Every members/survivors fold merge below requires its
-    // table's mark still at this value and advances it to `now` in the
-    // same commit — a stale laggard (raced past by newer folds) aborts at
-    // its FIRST merge on either table instead of committing W1-era rows,
-    // independently of the dead guard rows (making [[compactDead]] safe).
-    // A crash replay re-reads the already-advanced mark and passes; after
-    // each merge the local value advances from the merge RESULT (see
-    // `advanced` — r16 advice closed the re-read adoption hole). Pre-r16
-    // indexes bootstrap their marks below and converge to the guarded
-    // layout on their first refresh of any window shape (r16 advice).
-    def tableMark(p: String): Option[Long] =
-      DeltaLog.forPath(spark, p).update()
-        .appTransactionVersion.get(SourceVersionApp)
-    var memberMark = tableMark(membersPath(root))
-    var survMark = tableMark(survivorsPath(root))
-    def cas(b: graft.delta.MergeBuilder, mark: Option[Long]): graft.delta.MergeBuilder = {
-      mark.foreach(m => b.requireAppVersion(SourceVersionApp, m, now))
-      b
+    val layout = currentLayout(spark, root)
+    val binding = layout.binding
+    val (srcPath, textCol, idCol, last) = (binding.source,
+      binding.conf(TextColKey), binding.conf(IdColKey), binding.last)
+    val Array(tn, td, nh, nb) = binding.conf(ParamsKey).split(",").map(_.trim)
+    val (tNum, tDen, numHashes, bands) = (tn.toLong, td.toLong, nh.toInt, nb.toInt)
+    val (changes, now) = IndexCore.window(spark, binding) match {
+      case Some(w) => w
+      case None => return (0L, 0L)
     }
+    // per-table CAS marks (r16): fixed ONCE at the refresh's logical read
+    // point, the layout's snapshots. Every members/survivors fold merge
+    // below requires its table's mark still at this value and advances it
+    // to `now` in the same commit — a stale laggard (raced past by newer
+    // folds) aborts at its FIRST merge on either table instead of
+    // committing W1-era rows, independently of the dead guard rows (making
+    // [[compactDead]] safe). A crash replay re-reads the already-advanced
+    // mark and passes; after each merge the local value advances from the
+    // merge RESULT (see `advanced` — r16 advice closed the re-read
+    // adoption hole).
+    var memberMark = layout.members.appTransactionVersion(SourceVersionApp)
+    var survMark = layout.survivors.appTransactionVersion(SourceVersionApp)
+    def cas(b: MergeBuilder, mark: Long): MergeBuilder =
+      b.requireAppVersion(SourceVersionApp, mark, now)
     // post-merge mark advance is derived LOCALLY from the merge result
     // (r16 advice): rows changed ⇒ the CAS committed `now`; a no-op merge
     // leaves the mark untouched (Merge re-verifies the precondition
@@ -564,30 +557,8 @@ object DedupIndex {
     // proven, not assumed). Re-reading the log here would silently ADOPT a
     // concurrent refresh's mark landing in the gap, and the next merge
     // would chain off the foreign value and pass CAS instead of aborting.
-    def advanced(mark: Option[Long], m: graft.delta.MergeMetrics): Option[Long] =
-      if (m.rowsUpdated + m.rowsDeleted + m.rowsInserted > 0) mark.map(_ => now)
-      else mark
-    // pre-r16 bootstrap (r16 advice): marks used to appear only via the
-    // delete branch's ensureTableMark, so a pre-r16 index on an
-    // insert-only workload never converged to the guarded layout — its
-    // folds stayed unguarded and compactDead refused forever. Stamp
-    // missing marks at `last` (the refresh's logical read point) so the
-    // very FIRST guarded fold CASes last→now exactly like a native r16
-    // index; a mark that appeared since the capture above is adopted
-    // as-is (a concurrent refresh owns it — our CAS folds then abort on
-    // it, which is the correct signal).
-    def bootstrapMark(p: String): Option[Long] = {
-      val log = DeltaLog.forPath(spark, p)
-      val cur = log.update().appTransactionVersion.get(SourceVersionApp)
-      cur.orElse {
-        val txn = log.startTransaction(log.snapshot)
-        txn.addAction(TxnAction(SourceVersionApp, last))
-        txn.commit()
-        Some(last)
-      }
-    }
-    if (memberMark.isEmpty) memberMark = bootstrapMark(membersPath(root))
-    if (survMark.isEmpty) survMark = bootstrapMark(survivorsPath(root))
+    def advanced(mark: Long, m: MergeMetrics): Long =
+      if (m.rowsUpdated + m.rowsDeleted + m.rowsInserted > 0) now else mark
     // advance a table's CAS mark with a bare commit when this window's
     // fold did not touch the table: a delete window whose deleted ids
     // were never indexed (created and deleted entirely inside newer
@@ -598,25 +569,36 @@ object DedupIndex {
     // lands live in members/survivors with no band rows, permanently
     // (r16 review — the 'aborts at its first merge' invariant had a hole
     // exactly when the winner's fold was commit-free on these tables).
-    // Also bootstraps marks on pre-r16 indexes (no precondition to
-    // require); concurrent stampers are serialized by the same-appId
-    // conflict rule.
-    def ensureTableMark(p: String, cur: Option[Long]): Option[Long] =
-      if (cur.contains(now)) cur
-      else {
-        val log = DeltaLog.forPath(spark, p)
-        val txn = log.startTransaction(log.update())
-        cur.foreach(m => txn.requireAppVersion(SourceVersionApp, m))
-        txn.addAction(TxnAction(SourceVersionApp, now))
-        txn.commit()
-        Some(now)
-      }
+    def ensureTableMark(p: String, cur: Long): Long = {
+      if (cur != now) Core.bareMark(spark, p, cur, now)
+      now
+    }
+    // the survivors fold merge both folds run: `src` rows (comp, id, len,
+    // op) re-elect a family's survivor (op "up", inserting a new family's)
+    // or kill a label that vanished (op "del"); `keys` prune the target's
+    // detection scan by comp. Every clause guards on t.asof <= now (see
+    // the delete fold).
+    def survivorsMerge(src: DataFrame, keys: Option[Array[Any]],
+                       mark: Long): MergeMetrics =
+      cas(Merge.into(spark, survivorsPath(root), src,
+          col("t.comp") === col("s.comp")), mark)
+        .withTargetScanPredicates(keys
+          .flatMap(ks => StatsPredicate.inSetOf("comp", ks)).toSeq)
+        .whenMatchedUpdate(col("s.op") === "del" && col("t.asof") <= lit(now),
+          Map("dead" -> lit(true), "asof" -> lit(now)))
+        .whenMatchedUpdate(col("s.op") === "up" && col("t.asof") <= lit(now),
+          Map("id" -> col("s.id"), "len" -> col("s.len"),
+            "asof" -> lit(now), "dead" -> lit(false)))
+        .whenNotMatchedInsert(col("s.op") === "up",
+          Map("comp" -> col("s.comp"), "id" -> col("s.id"),
+            "len" -> col("s.len"), "asof" -> lit(now), "dead" -> lit(false)))
+        .execute()
     // ONE window read serves the change-kind fence AND both folds; the
     // commit version rides along so multi-commit windows net-fold per id.
     // widen: a window is typically a handful of small files — the batch's
     // shingle/sign/verify CPU would otherwise run near-serial (r17; no-op
     // when the window already has >= slots splits)
-    val raw = widen(ChangeDataFeed.readChanges(spark, srcLog, last, now)
+    val raw = widen(changes
       .select(col(idCol).as("id"), col(textCol).as("text"),
         col(ChangeDataFeed.ChangeType).as("ct"),
         col(ChangeDataFeed.CommitVersion).as("cver")), "id")
@@ -740,21 +722,10 @@ object DedupIndex {
     // follows in this same window
     lazy val delIdsDf = nets.filter(col("has_delete")).select("id")
       .localCheckpoint(true) // buckets delete + family fold read it
-    val markAction = Seq(TxnAction(SourceVersionApp, now))
-    // bare mark advance, under the same still-at-`last` precondition as
-    // the data path — two racing refreshes must serialize, not regress
-    // the mark (r14 review)
-    def bareMark(): Unit = {
-      val log = DeltaLog.forPath(spark, bucketsPath(root))
-      val txn = log.startTransaction(log.update())
-        .requireAppVersion(SourceVersionApp, last)
-      markAction.foreach(txn.addAction)
-      txn.commit()
-    }
     if (nNew == 0 && nDel == 0) {
       // data-free window (property commits etc.): advance the mark so the
       // window is never re-read
-      bareMark()
+      Core.bareMark(spark, bucketsPath(root), last, now)
       return (0L, 0L)
     }
 
@@ -830,13 +801,7 @@ object DedupIndex {
         .select(col("band_idx"), col("band_hash"), col("doc_id").as("id"))
         .distinct() // two texts may share a band row — one source row each
         .localCheckpoint(true) // MERGE source + prune keys both read it
-      val delBandKeys: Option[Map[Int, Array[Long]]] = {
-        val rows = delBands.select("band_idx", "band_hash").distinct()
-          .limit(inMax + 1).collect()
-        if (rows.length > inMax) None
-        else Some(rows.groupBy(_.getInt(0))
-          .map { case (b, rs) => b -> rs.map(_.getLong(1)) })
-      }
+      val delBandKeys = bandKeysOf(delBands, inMax)
       // every clause below guards on t.asof <= now (the window end): a
       // STALE laggard (its `now` older than rows a newer fold wrote)
       // no-ops per row instead of deleting or relabeling newer state —
@@ -914,22 +879,8 @@ object DedupIndex {
           .withColumn("len", lit(null).cast("long"))
           .withColumn("op", lit("del"))
         val survKeys = for { a <- affCompIds; r <- remIds } yield a ++ r
-        val survDelM = cas(Merge.into(spark, survivorsPath(root),
-            ups2.unionByName(dels2),
-            col("t.comp") === col("s.comp")), survMark)
-          .withTargetScanPredicates(survKeys
-            .flatMap(ks => StatsPredicate.inSetOf("comp", ks)).toSeq)
-          .whenMatchedUpdate(col("s.op") === "del" && col("t.asof") <= lit(now),
-            Map("dead" -> lit(true), "asof" -> lit(now)))
-          .whenMatchedUpdate(col("s.op") === "up" && col("t.asof") <= lit(now),
-            Map("id" -> col("s.id"), "len" -> col("s.len"),
-              "asof" -> lit(now), "dead" -> lit(false)))
-          .whenNotMatchedInsert(col("s.op") === "up",
-            Map("comp" -> col("s.comp"), "id" -> col("s.id"),
-              "len" -> col("s.len"), "asof" -> lit(now),
-              "dead" -> lit(false)))
-          .execute()
-        survMark = advanced(survMark, survDelM)
+        survMark = advanced(survMark,
+          survivorsMerge(ups2.unionByName(dels2), survKeys, survMark))
         // members LAST: drop the deleted ids, relabel the remaining
         val mdel = standingDel.select("id")
           .withColumn("comp", lit(null).cast(idType))
@@ -958,7 +909,7 @@ object DedupIndex {
     }
     if (nNew == 0) {
       // delete-only window: the fold above is complete; advance the mark
-      bareMark()
+      Core.bareMark(spark, bucketsPath(root), last, now)
       maintainBestEffort(spark, root)
       return (0L, 0L)
     }
@@ -968,12 +919,7 @@ object DedupIndex {
     // candidate pairs: batch × standing buckets (probe keys broadcast — the
     // standing table is scanned columnar but never shuffled or re-hashed),
     // plus batch × batch
-    val bandKeys: Option[Array[(Int, Long)]] = {
-      val rows = newBands.select("band_idx", "band_hash").distinct()
-        .limit(inMax + 1).collect()
-      if (rows.length > inMax) None
-      else Some(rows.map(r => (r.getInt(0), r.getLong(1))))
-    }
+    val bandKeys = bandKeysOf(newBands, inMax)
     val buckets = prunedBuckets(spark, root, bandKeys)
     val probe = newBands.select("band_idx", "band_hash").distinct()
     val newOld = newBands
@@ -1090,19 +1036,7 @@ object DedupIndex {
       .withColumn("id", lit(null).cast(idType))
       .withColumn("len", lit(null).cast("long"))
       .withColumn("op", lit("del"))
-    cas(Merge.into(spark, survivorsPath(root), upRows.unionByName(delRows),
-        col("t.comp") === col("s.comp")), survMark)
-      .withTargetScanPredicates(mergeKeys
-        .flatMap(ks => StatsPredicate.inSetOf("comp", ks)).toSeq)
-      .whenMatchedUpdate(col("s.op") === "del" && col("t.asof") <= lit(now),
-        Map("dead" -> lit(true), "asof" -> lit(now)))
-      .whenMatchedUpdate(col("s.op") === "up" && col("t.asof") <= lit(now),
-        Map("id" -> col("s.id"), "len" -> col("s.len"),
-          "asof" -> lit(now), "dead" -> lit(false)))
-      .whenNotMatchedInsert(col("s.op") === "up",
-        Map("comp" -> col("s.comp"), "id" -> col("s.id"),
-          "len" -> col("s.len"), "asof" -> lit(now), "dead" -> lit(false)))
-      .execute()
+    survivorsMerge(upRows.unionByName(delRows), mergeKeys, survMark)
 
     // buckets append + high-water mark LAST: before this commit the window
     // is still "pending" and the whole refresh replays identically. A
@@ -1116,7 +1050,7 @@ object DedupIndex {
     // deterministic), so its band_idx=0 row carries a band_hash from THIS
     // batch's band-0 hash set — the hash-clustered layout prunes the probe
     val landed = prunedScan(spark, bucketsPath(root), "band_hash",
-        bandKeys.map(_.collect { case (0, h) => h: Any }),
+        bandKeys.map(_.getOrElse(0, Array.empty[Long]).map(h => h: Any)),
         Seq(PartitionFilter.Eq("band_idx", "0")))
       .select("id")
       .join(maybeBroadcast(batch.select("id"), batchIds.isDefined), Seq("id"))
@@ -1128,9 +1062,10 @@ object DedupIndex {
     // write; the anti-join now rides inside the write's own staging job,
     // and a fully-landed replay (possible only under an operator mark
     // rewind) stages zero files — the commit then carries just the mark,
-    // which is exactly what bareMark() committed.
+    // which is exactly what a bare mark commit holds.
     GraftWriter.write(unlanded, bucketsPath(root), SaveMode.Append,
-      partitionBy = Seq("band_idx"), extraActions = markAction,
+      partitionBy = Seq("band_idx"),
+      extraActions = Seq(TxnAction(SourceVersionApp, now)),
       requireAppVersion = Some((SourceVersionApp, last)))
     // layout maintenance LAST (after the mark): pure layout, so a crash
     // before it only leaves some files unsorted for the next pass
@@ -1155,48 +1090,34 @@ object DedupIndex {
     * rows — the LSM-compaction moment, like `maintain(full = true)`; run
     * it on takedown-heavy indexes on the same cadence. Safe against a
     * concurrent refresh: both sides commit optimistically and the DELETE's
-    * predicate is idempotent under replay. Refuses pre-r16 indexes (no
-    * per-table mark — their laggard protection IS the dead rows). Returns
-    * rows reclaimed. */
+    * predicate is idempotent under replay. Returns rows reclaimed. */
   def compactDead(spark: SparkSession, root: String,
                   retainVersions: Long = 0L): Long = {
-    checkEpoch(spark, root)
-    val mark = DeltaLog.forPath(spark, bucketsPath(root)).update()
-      .appTransactionVersion.getOrElse(SourceVersionApp,
-        throw new IllegalStateException(
-          s"no dedup index at $root (buildFromSource first)"))
-    val cutoff = mark - retainVersions
+    val cutoff = currentLayout(spark, root).binding.last - retainVersions
     Seq(membersPath(root), survivorsPath(root)).map { p =>
-      val snap = DeltaLog.forPath(spark, p).update()
-      require(snap.appTransactionVersion.contains(SourceVersionApp),
-        s"$p carries no per-table $SourceVersionApp mark — dead-row " +
-        "compaction needs the r16 layout (fold merges abort stale " +
-        "laggards on the mark); rebuild with buildFromSource")
       graft.delta.Dml.delete(spark, p,
         col("dead") && col("asof") <= lit(cutoff)).rowsAffected
     }.sum
   }
 
-  /** LIVE rows of a standing table — the r15 asof layout keeps dead
-    * (taken-down) rows as guard state for stale-laggard protection, so
-    * every serve filters them; pre-asof layouts have no dead column and
-    * pass through. */
-  private def liveRows(spark: SparkSession, path: String): DataFrame = {
-    val df = DeltaTable.forPath(spark, path).toDF
-    if (df.columns.contains("dead")) df.filter(!col("dead")) else df
-  }
+  /** LIVE rows of a standing table at the layout's snapshot `snap` — the
+    * asof layout keeps dead (taken-down) rows as guard state for
+    * stale-laggard protection, so every serve filters them. */
+  private def liveRows(spark: SparkSession, path: String,
+                       snap: Snapshot): DataFrame =
+    DeltaTable.forSnapshot(spark, path, snap).toDF.filter(!col("dead"))
 
   /** The current survivor set: (comp, id, len), one row per duplicate
     * family (comp = the family's min doc id). The asof/dead guard columns
     * are internal fold state and stay behind this API. */
   def survivors(spark: SparkSession, root: String): DataFrame = {
-    checkEpoch(spark, root)
-    liveRows(spark, survivorsPath(root)).select("comp", "id", "len")
+    liveRows(spark, survivorsPath(root), currentLayout(spark, root).survivors)
+      .select("comp", "id", "len")
   }
 
   /** Full family membership: (id, comp, len) for every indexed doc. */
   def members(spark: SparkSession, root: String): DataFrame = {
-    checkEpoch(spark, root)
-    liveRows(spark, membersPath(root)).select("id", "comp", "len")
+    liveRows(spark, membersPath(root), currentLayout(spark, root).members)
+      .select("id", "comp", "len")
   }
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
 import graft.delta.{ActionCodec, ChangeDataFeed, ColumnMapping, DeltaLog,
-  DeltaTable, Dml, DomainMetadataAction, GraftWriter, Merge, NotATableException,
-  PartitionFilter, RemoveAction, Snapshot, TxnAction}
+  DeltaTable, Dml, DomainMetadataAction, GraftWriter, Merge, PartitionFilter,
+  RemoveAction, Snapshot, TxnAction}
 
 /** IVF ANN index MAINTAINED AS GRAFT TABLES (r12 verdict #8): the
   * centroids and posting lists live in committed, partitioned delta
@@ -120,6 +120,12 @@ object IvfIndex {
   /** How many refreshes [[DriftDomain]] keeps — the largest
     * `recentRefreshes` [[driftReport]] answers. */
   private[ops] val DriftHistory = 8
+
+  /** The rules this index shares with [[DedupIndex]]: both tables carry
+    * one [[EpochKey]]; the postings carry the binding and the mark. */
+  private val Core = IndexCore("index", EpochKey, Seq("centroids", "postings"),
+    SourcePathKey, SourceVersionApp,
+    "build it with buildFromTable, or maintain it with refresh(vectors)")
 
   private def dotQ(a: String, b: String) =
     graft.functions.functions.dot_q(col(a), col(b))
@@ -260,25 +266,12 @@ object IvfIndex {
   }
 
   /** The postings snapshot of an index in the CURRENT layout — both
-    * tables stamped with the same [[EpochKey]], inline tombstones and a
-    * `ver` column on the postings, drift baselines on the centroids — or a
-    * loud refusal. Different epochs are the torn-rebuild state; a missing
-    * epoch is a pre-epoch index or a rebuild torn over one. */
+    * tables stamped with the same [[EpochKey]] ([[IndexCore]]),
+    * inline tombstones and a `ver` column on the postings, drift baselines
+    * on the centroids — or a loud refusal. */
   private def currentLayout(spark: SparkSession, root: String): Snapshot = {
-    val cents = DeltaLog.forPath(spark, centroidsPath(root)).update()
-    val posts = DeltaLog.forPath(spark, postingsPath(root)).update()
-    if (cents.version < 0 || posts.version < 0) throw new NotATableException(root)
-    def cfg(s: Snapshot) = s.metadata.map(_.configuration).getOrElse(Map.empty[String, String])
-    (cfg(cents).get(EpochKey), cfg(posts).get(EpochKey)) match {
-      case (Some(a), Some(b)) if a != b => throw new IllegalStateException(
-        s"index at $root is torn: centroids epoch $a != postings epoch $b " +
-        "(a rebuild crashed between its table overwrites) — rebuild it")
-      case (Some(_), Some(_)) => ()
-      case _ => throw new IllegalStateException(
-        s"index at $root is torn or predates build epochs: a table carries " +
-        s"no $EpochKey — rebuild it")
-    }
-    if (!cfg(posts).get(LayoutKey).contains("inline") ||
+    val Seq(cents, posts) = Core.agreedSnapshots(spark, root)
+    if (!IndexCore.configOf(posts).get(LayoutKey).contains("inline") ||
         !posts.schema.fieldNames.contains("ver") ||
         !cents.schema.fieldNames.contains("base_dist"))
       throw new IllegalStateException(
@@ -299,7 +292,7 @@ object IvfIndex {
   def refresh(spark: SparkSession, vectors: DataFrame, idCol: String,
               vecCol: String, root: String): Long = {
     val snap = currentLayout(spark, root)
-    val cfg = snap.metadata.map(_.configuration).getOrElse(Map.empty)
+    val cfg = IndexCore.configOf(snap)
     // a source-bound index must advance through refreshFromSource: an
     // ad-hoc append neither advances the high-water mark (the next CDF
     // fold re-adds the same ids — duplicate live rows) nor stamps a
@@ -375,36 +368,12 @@ object IvfIndex {
       .localCheckpoint(true)
   }
 
-  /** The source binding of an index built by [[buildFromTable]]:
-    * (sourcePath, idCol, vecCol, lastIndexedVersion). */
-  private def bindingOf(spark: SparkSession,
-                        root: String): (String, String, String, Long) = {
-    val snap = DeltaLog.forPath(spark, postingsPath(root)).update()
-    val cfg = snap.metadata.map(_.configuration).getOrElse(Map.empty)
-    val src = cfg.getOrElse(SourcePathKey, throw new IllegalStateException(
-      s"index at $root is not bound to a source table — build it with " +
-      "buildFromTable, or maintain it with refresh(vectors)"))
-    val last = snap.appTransactionVersion.getOrElse(SourceVersionApp,
-      throw new IllegalStateException(
-        s"index at $root carries no $SourceVersionApp mark"))
-    (src, cfg(SourceIdKey), cfg(SourceVecKey), last)
-  }
-
   /** The source changes the next [[refreshFromSource]] will fold — the CDF
     * window `(lastIndexed, currentSourceVersion]`. Exposed so callers (and
     * the spec's O(new-commits) inputFiles assertion) can inspect exactly
     * what refresh reads; refresh consumes THIS frame. Empty window → None. */
   def pendingChanges(spark: SparkSession, root: String): Option[DataFrame] =
-    pendingWindow(spark, bindingOf(spark, root)).map(_._1)
-
-  private def pendingWindow(spark: SparkSession,
-      binding: (String, String, String, Long)): Option[(DataFrame, Long)] = {
-    val (src, _, _, last) = binding
-    val srcLog = DeltaLog.forPath(spark, src)
-    val now = srcLog.update().version
-    if (now <= last) None
-    else Some((ChangeDataFeed.readChanges(spark, srcLog, last, now), now))
-  }
+    IndexCore.window(spark, Core.binding(currentLayout(spark, root), root)).map(_._1)
 
   /** Fold the source's change feed since the last refresh into the index:
     *  - per changed id, the LATEST post-image (insert/update_postimage)
@@ -437,14 +406,15 @@ object IvfIndex {
     * its window and regressing the mark. */
   def refreshFromSource(spark: SparkSession, root: String): (Long, Long) = {
     val postingsSnap = currentLayout(spark, root)
-    val binding = bindingOf(spark, root)
-    val (_, idCol, vecCol, last) = binding
+    val binding = Core.binding(postingsSnap, root)
+    val (idCol, vecCol, last) =
+      (binding.conf(SourceIdKey), binding.conf(SourceVecKey), binding.last)
     // the layout epoch is read BEFORE any centroid read: the posting
     // append below re-asserts it, so a centroid-set change landing
     // anywhere between here and the commit aborts this refresh instead of
     // letting it append into a retired cluster (see LayoutEpochApp)
     val layoutV = layoutEpochOf(postingsSnap)
-    pendingWindow(spark, binding) match {
+    IndexCore.window(spark, binding) match {
       case None => (0L, 0L)
       case Some((changes, now)) =>
         val ct = col(ChangeDataFeed.ChangeType)
@@ -506,22 +476,10 @@ object IvfIndex {
           // no-op window (property commits etc.): advance the mark with a
           // bare metadata commit so later refreshes never re-read this
           // window — under the same still-at-`last` precondition
-          bareMark(spark, root, last, markAction)
+          Core.bareMark(spark, postingsPath(root), last, now)
         }
         (nAdds, nTombs)
     }
-  }
-
-  /** Bare high-water-mark advance on the postings table, under the
-    * still-at-`last` precondition — two racing refreshes must serialize,
-    * not regress the mark (r14 review). */
-  private def bareMark(spark: SparkSession, root: String, last: Long,
-                       markAction: TxnAction): Unit = {
-    val log = DeltaLog.forPath(spark, postingsPath(root))
-    log.startTransaction(log.update())
-      .requireAppVersion(SourceVersionApp, last)
-      .addAction(markAction)
-      .commit()
   }
 
   /** The inline tombstone rows — the reserved partition's (id, ver) pairs,

@@ -140,7 +140,7 @@ object DedupIncrMain {
     val bandKeys = graft.delta.DeltaTable.forPath(spark, s"$root/idx/buckets")
       .toDF.filter(col("id") === someId)
       .select("band_idx", "band_hash").collect()
-      .map(r => (r.getInt(0), r.getLong(1)))
+      .groupBy(_.getInt(0)).map { case (b, rs) => b -> rs.map(_.getLong(1)) }
     val bTotal = graft.delta.DeltaLog.forPath(spark, s"$root/idx/buckets")
       .update().files.size
     val bRead = DedupIndex.prunedBuckets(spark, s"$root/idx", Some(bandKeys))

@@ -206,9 +206,91 @@ class DedupIndexSpec extends AnyFunSuite with DedupIndexFixtures {
     assert(e1.getMessage.contains("torn"))
     intercept[IllegalStateException](DedupIndex.survivors(spark, s"$r/idx"))
     intercept[IllegalStateException](DedupIndex.members(spark, s"$r/idx"))
+    // maintain refuses BEFORE it stamps the reclamation cadence or
+    // re-clusters anything: no table's version moves
+    def versions = Seq("buckets", "members", "survivors").map(t =>
+      graft.delta.DeltaLog.forPath(spark, s"$r/idx/$t").update().version)
+    val before = versions
+    val e2 = intercept[IllegalStateException] {
+      DedupIndex.maintain(spark, s"$r/idx", full = true)
+    }
+    assert(e2.getMessage.contains("torn"))
+    assert(versions == before, s"maintain moved a torn index: $before -> $versions")
     // a full rebuild re-stamps one shared epoch and heals the index
     DedupIndex.buildFromSource(spark, src, "text", "doc_id", s"$r/idx")
     assert(DedupIndex.survivors(spark, s"$r/idx").count() > 0)
+  }
+
+  test("pre-r16 layouts refuse on every entry with rebuild; buildFromSource migrates them") {
+    import graft.delta.{DeltaLog, DeltaTable, GraftWriter, TxnAction}
+    val r = root("legacy")
+    val src = s"$r/source"
+    GraftWriter.write(corpus, src,
+      configuration = Some(Map("delta.enableChangeDataFeed" -> "true")))
+    val v0 = DedupIndex.buildFromSource(spark, src, "text", "doc_id",
+      s"$r/current", numHashes = 64, bands = 64)
+    // hand-made legacy roots: the current index's rows written as fresh
+    // tables (no clustering declaration, like an index older than the
+    // clustered layout), each missing one part of the current layout
+    def legacyRoot(name: String, epoch: Boolean, guards: Boolean,
+                   tableMarks: Boolean): String = {
+      val idx = s"$r/$name"
+      def cfg(t: String) = DeltaLog.forPath(spark, s"$r/current/$t").update()
+        .metadata.get.configuration
+        .filter { case (k, _) => epoch || k != DedupIndex.EpochKey }
+      def rows(t: String) = {
+        val df = DeltaTable.forPath(spark, s"$r/current/$t").toDF
+        if (guards || t == "buckets") df else df.drop("asof", "dead")
+      }
+      val mark = Seq(TxnAction(DedupIndex.SourceVersionApp, v0))
+      Seq("members", "survivors").foreach { t =>
+        GraftWriter.write(rows(t), s"$idx/$t", configuration = Some(cfg(t)),
+          extraActions = if (tableMarks) mark else Nil)
+      }
+      GraftWriter.write(rows("buckets"), s"$idx/buckets",
+        partitionBy = Seq("band_idx"), configuration = Some(cfg("buckets")),
+        extraActions = mark)
+      idx
+    }
+    val roots = Seq(
+      "no epoch on any table" ->
+        legacyRoot("noepoch", epoch = false, guards = true, tableMarks = true),
+      "members and survivors without asof/dead" ->
+        legacyRoot("noguards", epoch = true, guards = false, tableMarks = true),
+      "members and survivors without their own mark" ->
+        legacyRoot("nomarks", epoch = true, guards = true, tableMarks = false))
+    // a pending window, so a refresh that got past the check would fold
+    GraftWriter.write(Seq((900L, words(90, 0, 15))).toDF("doc_id", "text"),
+      src, SaveMode.Append)
+    val entries: Seq[(String, String => Any)] = Seq(
+      "refreshFromSource" -> (idx => DedupIndex.refreshFromSource(spark, idx)),
+      "survivors" -> (idx => DedupIndex.survivors(spark, idx)),
+      "members" -> (idx => DedupIndex.members(spark, idx)),
+      "compactDead" -> (idx => DedupIndex.compactDead(spark, idx)),
+      "maintain" -> (idx => DedupIndex.maintain(spark, idx, full = true)))
+    roots.foreach { case (what, idx) =>
+      entries.foreach { case (entry, call) =>
+        val e = intercept[IllegalStateException](call(idx))
+        assert(e.getMessage.contains("rebuild"), s"$what, $entry: ${e.getMessage}")
+      }
+    }
+    // buildFromSource over each legacy root is the migration: it succeeds,
+    // declares the clustering the legacy tables lacked, and serves the
+    // same survivors as a fresh build over the same source version
+    val fresh = root("legacyfresh")
+    DedupIndex.buildFromSource(spark, src, "text", "doc_id", fresh,
+      numHashes = 64, bands = 64)
+    roots.foreach { case (what, idx) =>
+      DedupIndex.buildFromSource(spark, src, "text", "doc_id", idx,
+        numHashes = 64, bands = 64)
+      assert(dump(DedupIndex.survivors(spark, idx)) ==
+        dump(DedupIndex.survivors(spark, fresh)), s"$what: migrated survivors")
+      assert(Seq("buckets", "members", "survivors").forall(t =>
+        DeltaTable.forPath(spark, s"$idx/$t").clusteringColumns.nonEmpty),
+        s"$what: migration must declare clustering")
+      assert(DedupIndex.refreshFromSource(spark, idx) == ((0L, 0L)),
+        s"$what: the migrated index is current")
+    }
   }
 
   test("r15: cross-window id reuse with different text refuses; identical redelivery is idempotent") {
@@ -268,7 +350,8 @@ class DedupIndexSpec extends AnyFunSuite with DedupIndexFixtures {
         .select("band_idx", "band_hash").collect()
         .map(r => (r.getInt(0), r.getLong(1)))
       assert(keyRows.length == 4)
-      val probe = DedupIndex.prunedBuckets(spark, s"$r/idx", Some(keyRows))
+      val probe = DedupIndex.prunedBuckets(spark, s"$r/idx",
+        Some(keyRows.groupBy(_._1).map { case (b, ps) => b -> ps.map(_._2) }))
       val read = probe.inputFiles.length
       assert(read < total / 2,
         s"bounded probe must skip most files: read $read of $total")
